@@ -132,7 +132,9 @@ def main() -> None:
     # ...and the grouped-map pool: applyInPandas runs one Python worker per
     # core, so a single-worker warmup leaves 31 cold spawns inside the
     # first measured applyInPandas query (the udf_grouped_zscore spread)
-    spark.range(10_000).repartition(int(os.environ.get("SPARK_GRAFT_CPUS", 32))).groupBy(
+    spark.range(10_000).repartition(
+        int(os.environ.get("SPARK_GRAFT_CPUS", spark.sparkContext.defaultParallelism))
+    ).groupBy(
         (F.col("id") % 64).alias("g")
     ).applyInPandas(lambda pdf: pdf, "id long").write.mode("overwrite").format(
         "noop"

@@ -36,11 +36,13 @@ from __future__ import annotations
 import os
 import tempfile
 import zipfile
+from functools import partial
 from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
 
 
 def _ship_package(spark) -> None:
@@ -66,6 +68,51 @@ def _ship_package(spark) -> None:
                     z.write(full, os.path.relpath(full, root))
     sc.addPyFile(zpath)
     sc._pipes_spark_shipped = True
+
+
+def _map_rows(df: DataFrame, cols, row_fn, schema: str) -> DataFrame:
+    """The one Arrow-map plumbing behind every per-row codec wrapper: the
+    wrapper names the input columns and the output schema, ``row_fn`` is
+    the per-row body. ``df.select(*cols)`` rows reach ``row_fn(*values)`` as
+    Python scalars (``Series.tolist()``: int, bool, str, bytes); a
+    ``None`` entry in ``cols`` is dropped, so an unset TRAILING optional
+    column falls back to the kernel's own default. ``row_fn`` returns
+    0..n tuples in ``schema`` order, so filters (1→0) and explodes (1→N)
+    share the path. ``schema`` is parsed once by Spark's DDL parser and
+    its field names label the output batch."""
+    _ship_package(df.sparkSession)
+    out_schema = DataType.fromDDL(schema)
+    names = out_schema.names
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            ins = [pdf.iloc[:, j].tolist() for j in range(pdf.shape[1])]
+            rows = [out for vals in zip(*ins) for out in row_fn(*vals)]
+            outs = list(zip(*rows)) if rows else [()] * len(names)
+            # object columns: Arrow converts Python ints exactly (a
+            # None-bearing int list inferred by pandas would go float64)
+            yield pd.DataFrame(
+                {n: pd.Series(v, dtype=object) for n, v in zip(names, outs)}
+            )
+
+    return df.select(*[c for c in cols if c is not None]).mapInPandas(
+        gen, out_schema
+    )
+
+
+def _encode_row(kernel, aid, *args):
+    return [(aid, kernel(aid, *args))]
+
+
+def _encode_assets(df: DataFrame, cols, kernel) -> DataFrame:
+    """(id, *args) rows → (asset_id, content binary) with
+    ``content = kernel(id, *args)`` — the shape every ``encode_*_assets``
+    wrapper shares (embarrassingly parallel; pixels never cross a
+    shuffle)."""
+    return _map_rows(
+        df, cols, partial(_encode_row, kernel), "asset_id bigint, content binary"
+    )
+
 
 #: Typed metadata struct carried next to every blob.
 ASSET_SCHEMA = (
@@ -626,22 +673,10 @@ def png_encode_gray(asset_id: int, width: int, height: int) -> bytes:
     """Minimal REAL grayscale 8-bit PNG (spec: IHDR + one IDAT + IEND,
     filter 0 scanlines): pixel i (row-major) = (asset_id + i) % 256 —
     the deterministic content contract the decode oracle recomputes."""
-    import struct
-    import zlib as _z
-
     import numpy as np
 
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, 0, 0, 0, 0)
     px = ((asset_id + np.arange(height * width)) % 256).astype(np.uint8)
-    scan = np.zeros((height, width + 1), dtype=np.uint8)
-    scan[:, 1:] = px.reshape(height, width)  # leading 0 = filter None
-    idat = _z.compress(scan.tobytes(), 6)
-    return (
-        _PNG_SIG
-        + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", idat)
-        + _png_chunk(b"IEND", b"")
-    )
+    return png_encode_array(px.reshape(height, width))
 
 
 def sniff_image_header(content: bytes):
@@ -745,28 +780,40 @@ def encode_png_assets(
     side in batch — at 100 TB the encode is embarrassingly parallel and
     pixels never cross a shuffle (the module's features-not-pixels
     rule; downstream ops reduce to metadata before any exchange)."""
-    spark = df.sparkSession
-    _ship_package(spark)
+    return _encode_assets(df, [id_col, width_col, height_col], png_encode_gray)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pipes_spark.operators.multimodal import png_encode_gray
 
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col].astype("int64"),
-                    "content": [
-                        png_encode_gray(int(i), int(w), int(h))
-                        for i, w, h in zip(
-                            pdf[id_col], pdf[width_col], pdf[height_col]
-                        )
-                    ],
-                }
-            )
+def _png_inflate(content: bytes):
+    """Walk a PNG's chunks to IEND and inflate the concatenated IDAT
+    payload into the raw (filter-byte-prefixed) scanline stream."""
+    import struct
+    import zlib as _z
 
-    return df.select(id_col, width_col, height_col).mapInPandas(
-        gen, "asset_id bigint, content binary"
-    )
+    import numpy as np
+
+    idat, i = b"", 8
+    while i + 8 <= len(content):
+        (ln,) = struct.unpack(">I", content[i : i + 4])
+        typ = content[i + 4 : i + 8]
+        if typ == b"IDAT":
+            idat += content[i + 8 : i + 8 + ln]
+        i += 12 + ln
+        if typ == b"IEND":
+            break
+    return np.frombuffer(_z.decompress(idat), dtype=np.uint8)
+
+
+def _png_stats_row(aid, content):
+    import numpy as np
+
+    fmt, w, h, depth, ctype = sniff_image_header(content)
+    if fmt != "png":
+        raise ValueError(f"asset {aid}: not a PNG")
+    scan = _png_inflate(content).reshape(h, w + 1)
+    if scan[:, 0].any():
+        raise ValueError(f"asset {aid}: non-zero PNG filter type")
+    px = scan[:, 1:]
+    return [(aid, fmt, w, h, depth, ctype, px.size, px.sum(dtype=np.int64))]
 
 
 def png_decode_stats(assets: DataFrame) -> DataFrame:
@@ -779,59 +826,10 @@ def png_decode_stats(assets: DataFrame) -> DataFrame:
     ``multimodal_png_roundtrip``). Only filter-0 scanlines (what
     :func:`png_encode_gray` emits) are supported; anything else raises
     loudly rather than guessing."""
-    spark = assets.sparkSession
-    _ship_package(spark)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-        import zlib as _z
-
-        import numpy as np
-
-        from pipes_spark.operators.multimodal import sniff_image_header
-
-        for pdf in batches:
-            out = {
-                "asset_id": [],
-                "format": [],
-                "width": [],
-                "height": [],
-                "bit_depth": [],
-                "color_type": [],
-                "n_pixels": [],
-                "pixel_sum": [],
-            }
-            for aid, content in zip(pdf["asset_id"], pdf["content"]):
-                content = bytes(content)
-                fmt, w, h, depth, ctype = sniff_image_header(content)
-                if fmt != "png":
-                    raise ValueError(f"asset {aid}: not a PNG")
-                idat, i = b"", 8
-                while i + 8 <= len(content):
-                    (ln,) = struct.unpack(">I", content[i : i + 4])
-                    typ = content[i + 4 : i + 8]
-                    if typ == b"IDAT":
-                        idat += content[i + 8 : i + 8 + ln]
-                    i += 12 + ln
-                    if typ == b"IEND":
-                        break
-                raw = np.frombuffer(_z.decompress(idat), dtype=np.uint8)
-                scan = raw.reshape(h, w + 1)
-                if scan[:, 0].any():
-                    raise ValueError(f"asset {aid}: non-zero PNG filter type")
-                px = scan[:, 1:]
-                out["asset_id"].append(int(aid))
-                out["format"].append(fmt)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["bit_depth"].append(depth)
-                out["color_type"].append(ctype)
-                out["n_pixels"].append(int(px.size))
-                out["pixel_sum"].append(int(px.sum(dtype=np.int64)))
-            yield pd.DataFrame(out)
-
-    return assets.mapInPandas(
-        gen,
+    return _map_rows(
+        assets,
+        ["asset_id", "content"],
+        _png_stats_row,
         "asset_id bigint, format string, width int, height int, "
         "bit_depth int, color_type int, n_pixels bigint, pixel_sum bigint",
     )
@@ -1031,15 +1029,27 @@ def gif_encode_gray(
     so the decode oracle recomputes the checksum in closed form.
     ``interlaced=True`` stores rows in the spec's 4-pass order and sets
     the interlace flag (decoder coverage for real-world GIFs)."""
-    import struct
-
     import numpy as np
 
     px = ((asset_id + np.arange(height * width)) % 256).astype(np.uint8)
-    grid = px.reshape(height, width)
-    order = _gif_row_order(height, interlaced)
-    stored = grid[order, :].tobytes()
+    return _gif_image(px.reshape(height, width), interlaced)
 
+
+def _gif_sub_blocks(data: bytes) -> bytes:
+    """Frame LZW data as the spec's ≤255-byte length-prefixed
+    sub-blocks plus the zero-length block terminator."""
+    chunks = (data[i : i + 255] for i in range(0, len(data), 255))
+    return b"".join(bytes([len(c)]) + c for c in chunks) + b"\x00"
+
+
+def _gif_image(grid, interlaced: bool = False) -> bytes:
+    """Single-image GIF89a of an (h, w) uint8 grid under the 256-entry
+    grayscale-identity global color table; ``interlaced`` stores rows in
+    the spec's 4-pass order and sets the descriptor's interlace flag."""
+    import struct
+
+    height, width = grid.shape
+    stored = grid[_gif_row_order(height, interlaced), :].tobytes()
     out = bytearray(b"GIF89a")
     # LSD packed 0xF7: global color table present, color resolution 8,
     # unsorted, table size 2^(7+1) = 256
@@ -1049,12 +1059,8 @@ def gif_encode_gray(
         "<HHHHB", 0, 0, width, height, 0x40 if interlaced else 0
     )
     out.append(8)  # LZW minimum code size
-    lzw = _gif_lzw_encode(stored, 8)
-    for i in range(0, len(lzw), 255):
-        chunk = lzw[i : i + 255]
-        out.append(len(chunk))
-        out += chunk
-    out += b"\x00\x3b"  # block terminator + trailer
+    out += _gif_sub_blocks(_gif_lzw_encode(stored, 8))
+    out += b"\x3b"  # trailer
     return bytes(out)
 
 
@@ -1071,36 +1077,87 @@ def encode_gif_assets(
     parallel mapInPandas, pixels never cross a shuffle). An optional
     boolean ``interlace_col`` stores those images in the spec's 4-pass
     interlaced row order (exercising the decoder's de-interlace path)."""
-    spark = df.sparkSession
-    _ship_package(spark)
-    cols = [id_col, width_col, height_col]
-    if interlace_col is not None:
-        cols.append(interlace_col)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pipes_spark.operators.multimodal import gif_encode_gray
-
-        for pdf in batches:
-            il = (
-                pdf[interlace_col]
-                if interlace_col is not None
-                else [False] * len(pdf)
-            )
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col].astype("int64"),
-                    "content": [
-                        gif_encode_gray(int(i), int(w), int(h), bool(f))
-                        for i, w, h, f in zip(
-                            pdf[id_col], pdf[width_col], pdf[height_col], il
-                        )
-                    ],
-                }
-            )
-
-    return df.select(*cols).mapInPandas(
-        gen, "asset_id bigint, content binary"
+    return _encode_assets(
+        df, [id_col, width_col, height_col, interlace_col], gif_encode_gray
     )
+
+
+def _gif_first_image(b: bytes, label: str):
+    """Parse a GIF up to its FIRST image block — header + logical-screen
+    parse, global/local color table, extension-block walk, variable-width
+    LZW inflate, de-interlace. Returns ``(bit_depth, palette, red)`` with
+    ``red`` the (h, w) palette-RED grid; corrupt files raise loudly."""
+    import struct
+
+    import numpy as np
+
+    if b[:6] not in (b"GIF87a", b"GIF89a") or len(b) < 13:
+        raise ValueError(f"{label}: not a GIF")
+    _sw, _sh, packed, _bg, _ar = struct.unpack("<HHBBB", b[6:13])
+    depth = ((packed >> 4) & 0x7) + 1
+    i = 13
+    palette = None
+    if packed & 0x80:
+        gct_n = 2 << (packed & 0x7)
+        palette = np.frombuffer(b[i : i + 3 * gct_n], dtype=np.uint8).reshape(
+            gct_n, 3
+        )
+        i += 3 * gct_n
+    while i < len(b):
+        blk = b[i]
+        i += 1
+        if blk == 0x21:  # extension: label + sub-blocks
+            i += 1
+            while b[i]:
+                i += 1 + b[i]
+            i += 1
+            continue
+        if blk == 0x3B:
+            raise ValueError(f"{label}: trailer before image")
+        if blk != 0x2C:
+            raise ValueError(f"{label}: unknown block 0x{blk:02x}")
+        _l, _t, w, h, ipk = struct.unpack("<HHHHB", b[i : i + 9])
+        i += 9
+        if ipk & 0x80:  # local color table overrides
+            lct_n = 2 << (ipk & 0x7)
+            palette = np.frombuffer(
+                b[i : i + 3 * lct_n], dtype=np.uint8
+            ).reshape(lct_n, 3)
+            i += 3 * lct_n
+        if palette is None:
+            raise ValueError(f"{label}: no color table")
+        mcs = b[i]
+        i += 1
+        lzw = bytearray()
+        while b[i]:
+            ln = b[i]
+            lzw += b[i + 1 : i + 1 + ln]
+            i += 1 + ln
+        i += 1
+        idx = np.frombuffer(
+            bytes(_gif_lzw_decode(bytes(lzw), mcs)), dtype=np.uint8
+        )
+        if idx.size != w * h:
+            raise ValueError(
+                f"{label}: decoded {idx.size} pixels, expected {w * h}"
+            )
+        if int(idx.max(initial=0)) >= len(palette):
+            raise ValueError(f"{label}: index beyond palette")
+        stored = idx.reshape(h, w)
+        grid = np.empty_like(stored)
+        grid[_gif_row_order(h, bool(ipk & 0x40)), :] = stored
+        return depth, palette, palette[:, 0][grid]
+    raise ValueError(f"{label}: truncated GIF")
+
+
+def _gif_stats_row(aid, content):
+    import numpy as np
+
+    depth, palette, red = _gif_first_image(content, f"asset {aid}")
+    h, w = red.shape
+    return [
+        (aid, "gif", w, h, depth, len(palette), red.size, red.sum(dtype=np.int64))
+    ]
 
 
 def gif_decode_stats(assets: DataFrame) -> DataFrame:
@@ -1115,106 +1172,10 @@ def gif_decode_stats(assets: DataFrame) -> DataFrame:
     ``multimodal_gif_roundtrip``; the png_decode_stats precedent).
     Stats cover the FIRST image block (for animations, frame 0);
     truncated/corrupt files raise loudly rather than guessing."""
-    spark = assets.sparkSession
-    _ship_package(spark)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
-        import numpy as np
-
-        from pipes_spark.operators.multimodal import (
-            _gif_lzw_decode,
-            _gif_row_order,
-        )
-
-        for pdf in batches:
-            out = {
-                "asset_id": [],
-                "format": [],
-                "width": [],
-                "height": [],
-                "bit_depth": [],
-                "n_colors": [],
-                "n_pixels": [],
-                "pixel_sum": [],
-            }
-            for aid, content in zip(pdf["asset_id"], pdf["content"]):
-                b = bytes(content)
-                if b[:6] not in (b"GIF87a", b"GIF89a") or len(b) < 13:
-                    raise ValueError(f"asset {aid}: not a GIF")
-                _sw, _sh, packed, _bg, _ar = struct.unpack("<HHBBB", b[6:13])
-                depth = ((packed >> 4) & 0x7) + 1
-                i = 13
-                palette = None
-                if packed & 0x80:
-                    gct_n = 2 << (packed & 0x7)
-                    palette = np.frombuffer(
-                        b[i : i + 3 * gct_n], dtype=np.uint8
-                    ).reshape(gct_n, 3)
-                    i += 3 * gct_n
-                while i < len(b):
-                    blk = b[i]
-                    i += 1
-                    if blk == 0x21:  # extension: label + sub-blocks
-                        i += 1
-                        while b[i]:
-                            i += 1 + b[i]
-                        i += 1
-                        continue
-                    if blk == 0x3B:
-                        raise ValueError(f"asset {aid}: trailer before image")
-                    if blk != 0x2C:
-                        raise ValueError(
-                            f"asset {aid}: unknown block 0x{blk:02x}"
-                        )
-                    _l, _t, w, h, ipk = struct.unpack("<HHHHB", b[i : i + 9])
-                    i += 9
-                    if ipk & 0x80:  # local color table overrides
-                        lct_n = 2 << (ipk & 0x7)
-                        palette = np.frombuffer(
-                            b[i : i + 3 * lct_n], dtype=np.uint8
-                        ).reshape(lct_n, 3)
-                        i += 3 * lct_n
-                    if palette is None:
-                        raise ValueError(f"asset {aid}: no color table")
-                    mcs = b[i]
-                    i += 1
-                    lzw = bytearray()
-                    while b[i]:
-                        ln = b[i]
-                        lzw += b[i + 1 : i + 1 + ln]
-                        i += 1 + ln
-                    i += 1
-                    idx = np.frombuffer(
-                        bytes(_gif_lzw_decode(bytes(lzw), mcs)), dtype=np.uint8
-                    )
-                    if idx.size != w * h:
-                        raise ValueError(
-                            f"asset {aid}: decoded {idx.size} pixels, "
-                            f"expected {w * h}"
-                        )
-                    if int(idx.max(initial=0)) >= len(palette):
-                        raise ValueError(f"asset {aid}: index beyond palette")
-                    stored = idx.reshape(h, w)
-                    grid = np.empty_like(stored)
-                    grid[_gif_row_order(h, bool(ipk & 0x40)), :] = stored
-                    red = palette[:, 0][grid]
-                    out["asset_id"].append(int(aid))
-                    out["format"].append("gif")
-                    out["width"].append(int(w))
-                    out["height"].append(int(h))
-                    out["bit_depth"].append(int(depth))
-                    out["n_colors"].append(int(len(palette)))
-                    out["n_pixels"].append(int(red.size))
-                    out["pixel_sum"].append(int(red.sum(dtype=np.int64)))
-                    break
-                else:
-                    raise ValueError(f"asset {aid}: truncated GIF")
-            yield pd.DataFrame(out)
-
-    return assets.mapInPandas(
-        gen,
+    return _map_rows(
+        assets,
+        ["asset_id", "content"],
+        _gif_stats_row,
         "asset_id bigint, format string, width int, height int, "
         "bit_depth int, n_colors int, n_pixels bigint, pixel_sum bigint",
     )
@@ -2520,6 +2481,14 @@ def jpeg_block_gray(asset_id: int, width: int, height: int):
     return block_gray_lattice(asset_id, width, height)
 
 
+def _jpeg_gray_asset(aid, w, h, restart_interval=0, optimize_huffman=False):
+    return jpeg_encode_gray(
+        jpeg_block_gray(aid, w, h),
+        restart_interval=restart_interval,
+        optimize_huffman=optimize_huffman,
+    )
+
+
 def encode_jpeg_assets(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -2537,54 +2506,20 @@ def encode_jpeg_assets(
     those images to Annex-K.2 per-image Huffman tables — so the
     decoder's resync AND variable-length-table paths both run under the
     gate."""
-    spark = df.sparkSession
-    _ship_package(spark)
-    cols = [id_col, width_col, height_col]
-    if restart_col is not None:
-        cols.append(restart_col)
-    if optimize_col is not None:
-        cols.append(optimize_col)
+    # lit(0) keeps optimize_col in its position when restart_col is unset
+    cols = [id_col, width_col, height_col, restart_col or F.lit(0), optimize_col]
+    return _encode_assets(df, cols, _jpeg_gray_asset)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pipes_spark.operators.multimodal import (
-            jpeg_block_gray,
-            jpeg_encode_gray,
-        )
 
-        for pdf in batches:
-            ri = (
-                pdf[restart_col]
-                if restart_col is not None
-                else [0] * len(pdf)
-            )
-            opt = (
-                pdf[optimize_col]
-                if optimize_col is not None
-                else [False] * len(pdf)
-            )
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col].astype("int64"),
-                    "content": [
-                        jpeg_encode_gray(
-                            jpeg_block_gray(int(i), int(w), int(h)),
-                            restart_interval=int(r),
-                            optimize_huffman=bool(o),
-                        )
-                        for i, w, h, r, o in zip(
-                            pdf[id_col],
-                            pdf[width_col],
-                            pdf[height_col],
-                            ri,
-                            opt,
-                        )
-                    ],
-                }
-            )
+def _jpeg_stats_row(aid, content):
+    import numpy as np
 
-    return df.select(*cols).mapInPandas(
-        gen, "asset_id bigint, content binary"
-    )
+    fmt, _w, _h, depth, ncomp = sniff_image_header(content)
+    if fmt != "jpeg":
+        raise ValueError(f"asset {aid}: not a JPEG")
+    px = jpeg_decode_gray(content)
+    h, w = px.shape
+    return [(aid, fmt, w, h, depth, ncomp, px.size, px.sum(dtype=np.int64))]
 
 
 def jpeg_decode_stats(assets: DataFrame) -> DataFrame:
@@ -2597,46 +2532,10 @@ def jpeg_decode_stats(assets: DataFrame) -> DataFrame:
     block-constant oracle certifies the decoder end to end (catalog
     ``multimodal_jpeg_roundtrip``; the png/gif precedent). Corrupt or
     out-of-scope files (progressive, color, 12-bit) raise loudly."""
-    spark = assets.sparkSession
-    _ship_package(spark)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from pipes_spark.operators.multimodal import (
-            jpeg_decode_gray,
-            sniff_image_header,
-        )
-
-        for pdf in batches:
-            out = {
-                "asset_id": [],
-                "format": [],
-                "width": [],
-                "height": [],
-                "bit_depth": [],
-                "n_components": [],
-                "n_pixels": [],
-                "pixel_sum": [],
-            }
-            for aid, content in zip(pdf["asset_id"], pdf["content"]):
-                b = bytes(content)
-                fmt, w, h, depth, ncomp = sniff_image_header(b)
-                if fmt != "jpeg":
-                    raise ValueError(f"asset {aid}: not a JPEG")
-                px = jpeg_decode_gray(b)
-                out["asset_id"].append(int(aid))
-                out["format"].append(fmt)
-                out["width"].append(int(px.shape[1]))
-                out["height"].append(int(px.shape[0]))
-                out["bit_depth"].append(int(depth))
-                out["n_components"].append(int(ncomp))
-                out["n_pixels"].append(int(px.size))
-                out["pixel_sum"].append(int(px.sum(dtype=np.int64)))
-            yield pd.DataFrame(out)
-
-    return assets.mapInPandas(
-        gen,
+    return _map_rows(
+        assets,
+        ["asset_id", "content"],
+        _jpeg_stats_row,
         "asset_id bigint, format string, width int, height int, "
         "bit_depth int, n_components int, n_pixels bigint, pixel_sum bigint",
     )
@@ -2651,6 +2550,14 @@ def jpeg_decode_stats(assets: DataFrame) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
+def _lattice_pcm16(aid, n):
+    """The full-range int16 lattice signal: sample i =
+    ((aid + i)·2557) % 65536 − 32768."""
+    import numpy as np
+
+    return ((np.arange(n, dtype=np.int64) + aid) * 2557) % 65536 - 32768
+
+
 def wav_encode_pcm16(
     asset_id: int, n_samples: int, sample_rate: int = 16000, channels: int = 1
 ) -> bytes:
@@ -2661,11 +2568,7 @@ def wav_encode_pcm16(
     walks all residues)."""
     import struct
 
-    import numpy as np
-
-    idx = np.arange(n_samples * channels, dtype=np.int64)
-    samples = (((asset_id + idx) * 2557) % 65536 - 32768).astype("<i2")
-    data = samples.tobytes()
+    data = _lattice_pcm16(asset_id, n_samples * channels).astype("<i2").tobytes()
     byte_rate = sample_rate * channels * 2
     fmt = struct.pack(
         "<HHIIHH", 1, channels, sample_rate, byte_rate, channels * 2, 16
@@ -2887,28 +2790,8 @@ def encode_wav_g711_assets(
 ) -> DataFrame:
     """Arrow-batched G.711 companded-WAV encode: (id, n_samples, rate,
     law 'ulaw'|'alaw') → (id, content binary)."""
-    spark = df.sparkSession
-    _ship_package(spark)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pipes_spark.operators.multimodal import wav_encode_g711
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col].astype("int64"),
-                    "content": [
-                        wav_encode_g711(int(i), int(n), int(r), str(lw))
-                        for i, n, r, lw in zip(
-                            pdf[id_col], pdf[samples_col], pdf[rate_col],
-                            pdf[law_col],
-                        )
-                    ],
-                }
-            )
-
-    return df.select(id_col, samples_col, rate_col, law_col).mapInPandas(
-        gen, "asset_id bigint, content binary"
+    return _encode_assets(
+        df, [id_col, samples_col, rate_col, law_col], wav_encode_g711
     )
 
 
@@ -2951,10 +2834,7 @@ def aiff_encode_pcm16(
     byte-order handling is real, not incidental."""
     import struct
 
-    import numpy as np
-
-    idx = np.arange(n_samples * channels, dtype=np.int64)
-    samples = (((asset_id + idx) * 2557) % 65536 - 32768).astype(">i2")
+    samples = _lattice_pcm16(asset_id, n_samples * channels).astype(">i2")
     comm = struct.pack(">hIh", channels, n_samples, 16)
     comm += _ieee754_extended_encode(sample_rate)
     ssnd = struct.pack(">II", 0, 0) + samples.tobytes()
@@ -3022,68 +2902,38 @@ def encode_aiff_assets(
 ) -> DataFrame:
     """Arrow-batched AIFF encode: (id, n_samples, rate, channels) →
     (id, content binary)."""
-    spark = df.sparkSession
-    _ship_package(spark)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pipes_spark.operators.multimodal import aiff_encode_pcm16
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col].astype("int64"),
-                    "content": [
-                        aiff_encode_pcm16(int(i), int(n), int(r), int(c))
-                        for i, n, r, c in zip(
-                            pdf[id_col], pdf[samples_col], pdf[rate_col],
-                            pdf[channels_col],
-                        )
-                    ],
-                }
-            )
-
-    return df.select(id_col, samples_col, rate_col, channels_col).mapInPandas(
-        gen, "asset_id bigint, content binary"
+    return _encode_assets(
+        df, [id_col, samples_col, rate_col, channels_col], aiff_encode_pcm16
     )
+
+
+#: output schema shared by the PCM-family decode stats (WAV, AIFF)
+_AUDIO_STATS_SCHEMA = (
+    "asset_id bigint, format string, n_channels int, sample_rate int, "
+    "bit_depth int, n_samples bigint, sample_sum bigint, "
+    "sample_abs_max bigint"
+)
+
+
+def _audio_stats_row(fmt, decode, aid, content):
+    import numpy as np
+
+    samples, nch, rate, bits = decode(content, label=f"asset {aid}")
+    return [
+        (aid, fmt, nch, rate, bits, samples.size // nch, samples.sum(),
+         np.abs(samples).max(initial=0))
+    ]
 
 
 def aiff_decode_stats(assets: DataFrame) -> DataFrame:
     """REAL AIFF decode over Arrow batches with the same checksum row as
     :func:`wav_decode_stats` (format 'aiff') — a hash-match proves the
     big-endian stream, COMM dims, and the 80-bit rate all decoded."""
-    spark = assets.sparkSession
-    _ship_package(spark)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from pipes_spark.operators.multimodal import aiff_decode_pcm
-
-        for pdf in batches:
-            out = {
-                "asset_id": [], "format": [], "n_channels": [],
-                "sample_rate": [], "bit_depth": [], "n_samples": [],
-                "sample_sum": [], "sample_abs_max": [],
-            }
-            for aid, content in zip(pdf["asset_id"], pdf["content"]):
-                samples, nch, rate, bits = aiff_decode_pcm(
-                    content, label=f"asset {aid}"
-                )
-                out["asset_id"].append(int(aid))
-                out["format"].append("aiff")
-                out["n_channels"].append(int(nch))
-                out["sample_rate"].append(int(rate))
-                out["bit_depth"].append(int(bits))
-                out["n_samples"].append(int(samples.size // nch))
-                out["sample_sum"].append(int(samples.sum()))
-                out["sample_abs_max"].append(int(np.abs(samples).max(initial=0)))
-            yield pd.DataFrame(out)
-
-    return assets.mapInPandas(
-        gen,
-        "asset_id bigint, format string, n_channels int, sample_rate int, "
-        "bit_depth int, n_samples bigint, sample_sum bigint, "
-        "sample_abs_max bigint",
+    return _map_rows(
+        assets,
+        ["asset_id", "content"],
+        partial(_audio_stats_row, "aiff", aiff_decode_pcm),
+        _AUDIO_STATS_SCHEMA,
     )
 
 
@@ -3326,9 +3176,7 @@ def wav_encode_pcm_depth(
         data = (((asset_id + idx) * 2557) % 256).astype(np.uint8).tobytes()
         tag, block = 1, 1
     elif bits == 16:
-        data = (
-            (((asset_id + idx) * 2557) % 65536 - 32768).astype("<i2").tobytes()
-        )
+        data = _lattice_pcm16(asset_id, n_samples).astype("<i2").tobytes()
         tag, block = 1, 2
     elif bits == 24:
         v = ((asset_id + idx) * 7654321) % (1 << 24)
@@ -3339,7 +3187,7 @@ def wav_encode_pcm_depth(
         data = raw.tobytes()
         tag, block = 1, 3
     elif bits == 32:
-        k = ((asset_id + idx) * 2557) % 65536 - 32768
+        k = _lattice_pcm16(asset_id, n_samples)
         data = (k.astype(np.float64) / 32768.0).astype("<f4").tobytes()
         tag, block = 3, 4
     else:
@@ -3365,28 +3213,8 @@ def encode_wav_depth_assets(
 ) -> DataFrame:
     """Arrow-batched multi-depth WAV encode: (id, n_samples, rate,
     bits 8|16|24|32) → (id, content binary)."""
-    spark = df.sparkSession
-    _ship_package(spark)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pipes_spark.operators.multimodal import wav_encode_pcm_depth
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col].astype("int64"),
-                    "content": [
-                        wav_encode_pcm_depth(int(i), int(n), int(r), int(b))
-                        for i, n, r, b in zip(
-                            pdf[id_col], pdf[samples_col], pdf[rate_col],
-                            pdf[bits_col],
-                        )
-                    ],
-                }
-            )
-
-    return df.select(id_col, samples_col, rate_col, bits_col).mapInPandas(
-        gen, "asset_id bigint, content binary"
+    return _encode_assets(
+        df, [id_col, samples_col, rate_col, bits_col], wav_encode_pcm_depth
     )
 
 
@@ -3399,28 +3227,8 @@ def encode_wav_adpcm_assets(
 ) -> DataFrame:
     """Arrow-batched ADPCM WAV encode: (id, n_samples, rate, codec
     'ima'|'ms') → (id, content binary)."""
-    spark = df.sparkSession
-    _ship_package(spark)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pipes_spark.operators.multimodal import wav_encode_adpcm
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col].astype("int64"),
-                    "content": [
-                        wav_encode_adpcm(int(i), int(n), int(r), str(c))
-                        for i, n, r, c in zip(
-                            pdf[id_col], pdf[samples_col], pdf[rate_col],
-                            pdf[codec_col],
-                        )
-                    ],
-                }
-            )
-
-    return df.select(id_col, samples_col, rate_col, codec_col).mapInPandas(
-        gen, "asset_id bigint, content binary"
+    return _encode_assets(
+        df, [id_col, samples_col, rate_col, codec_col], wav_encode_adpcm
     )
 
 
@@ -3431,44 +3239,11 @@ def wav_decode_stats(assets: DataFrame) -> DataFrame:
     can only come from decoding the int16 stream, so a hash-match against
     the closed-form oracle certifies the decoder (catalog
     ``multimodal_wav_roundtrip``)."""
-    spark = assets.sparkSession
-    _ship_package(spark)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from pipes_spark.operators.multimodal import wav_decode_pcm
-
-        for pdf in batches:
-            out = {
-                "asset_id": [],
-                "format": [],
-                "n_channels": [],
-                "sample_rate": [],
-                "bit_depth": [],
-                "n_samples": [],
-                "sample_sum": [],
-                "sample_abs_max": [],
-            }
-            for aid, content in zip(pdf["asset_id"], pdf["content"]):
-                samples, nch, rate, bits = wav_decode_pcm(
-                    content, label=f"asset {aid}"
-                )
-                out["asset_id"].append(int(aid))
-                out["format"].append("wav")
-                out["n_channels"].append(int(nch))
-                out["sample_rate"].append(int(rate))
-                out["bit_depth"].append(int(bits))
-                out["n_samples"].append(int(samples.size // nch))
-                out["sample_sum"].append(int(samples.sum()))
-                out["sample_abs_max"].append(int(np.abs(samples).max(initial=0)))
-            yield pd.DataFrame(out)
-
-    return assets.mapInPandas(
-        gen,
-        "asset_id bigint, format string, n_channels int, sample_rate int, "
-        "bit_depth int, n_samples bigint, sample_sum bigint, "
-        "sample_abs_max bigint",
+    return _map_rows(
+        assets,
+        ["asset_id", "content"],
+        partial(_audio_stats_row, "wav", wav_decode_pcm),
+        _AUDIO_STATS_SCHEMA,
     )
 
 
@@ -3483,35 +3258,8 @@ def encode_wav_assets(
     [, channels]) → (id, content binary) — the audio member of the
     encode_*_assets family (same 100 TB shape: embarrassingly parallel,
     samples never cross a shuffle)."""
-    spark = df.sparkSession
-    _ship_package(spark)
-    cols = [id_col, samples_col, rate_col]
-    if channels_col is not None:
-        cols.append(channels_col)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pipes_spark.operators.multimodal import wav_encode_pcm16
-
-        for pdf in batches:
-            ch = (
-                pdf[channels_col]
-                if channels_col is not None
-                else [1] * len(pdf)
-            )
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col].astype("int64"),
-                    "content": [
-                        wav_encode_pcm16(int(i), int(n), int(r), int(c))
-                        for i, n, r, c in zip(
-                            pdf[id_col], pdf[samples_col], pdf[rate_col], ch
-                        )
-                    ],
-                }
-            )
-
-    return df.select(*cols).mapInPandas(
-        gen, "asset_id bigint, content binary"
+    return _encode_assets(
+        df, [id_col, samples_col, rate_col, channels_col], wav_encode_pcm16
     )
 
 
@@ -3525,20 +3273,12 @@ def encode_wav_assets(
 # --------------------------------------------------------------------------
 
 
-def avi_mjpeg_encode(asset_id: int, width: int, height: int, n_frames: int) -> bytes:
-    """Minimal REAL AVI (RIFF 'AVI ': LIST hdrl with avih + one 'vids'
-    strl (handler MJPG, strf BITMAPINFOHEADER), LIST movi of '00dc'
-    JPEG frames, idx1 index): frame f's 8×8 block i is uniformly
-    (asset_id + 11·f + i) % 256 — block-constant content, so each frame
-    round-trips bit-exactly through the lossy codec (the
-    multimodal_jpeg_roundtrip contract) and the frame-sample oracle
-    recomputes per-frame pixel sums closed-form."""
+def _avi_container(frames, width: int, height: int, handler: bytes, ckid: bytes, strf: bytes) -> bytes:
+    """RIFF 'AVI ' around already-encoded frames — the container shared by
+    the MJPEG, raw-DIB and RLE8 writers: LIST hdrl (avih + one 'vids'
+    strl carrying ``handler`` and ``strf``), LIST movi of ``ckid``
+    chunks, and an idx1 index whose offsets are relative to 'movi'."""
     import struct
-
-    frames = []
-    for f in range(n_frames):
-        px = jpeg_block_gray(asset_id + 11 * f, width, height)
-        frames.append(jpeg_encode_gray(px))
 
     def chunk(cid: bytes, body: bytes) -> bytes:
         pad = b"\x00" if len(body) % 2 else b""
@@ -3547,6 +3287,7 @@ def avi_mjpeg_encode(asset_id: int, width: int, height: int, n_frames: int) -> b
     def lst(kind: bytes, body: bytes) -> bytes:
         return chunk(b"LIST", kind + body)
 
+    n_frames = len(frames)
     max_bytes = max(len(fr) for fr in frames)
     avih = struct.pack(
         "<IIIIIIIIII4I",
@@ -3566,31 +3307,49 @@ def avi_mjpeg_encode(asset_id: int, width: int, height: int, n_frames: int) -> b
     # language, initialFrames, scale, rate, start, length,
     # suggestedBuffer, quality, sampleSize, rcFrame(4×16-bit)
     strh = (
-        b"vids" + b"MJPG"
-        + struct.pack(
-            "<IHH8I", 0, 0, 0, 0, 1, 10, 0, n_frames, max_bytes, 0, 0
-        )
+        b"vids" + handler
+        + struct.pack("<IHH8I", 0, 0, 0, 0, 1, 10, 0, n_frames, max_bytes, 0, 0)
         + struct.pack("<4H", 0, 0, width, height)
     )
+    hdrl = lst(
+        b"hdrl",
+        chunk(b"avih", avih)
+        + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)),
+    )
+    movi_body = b"movi"
+    idx = b""
+    for fr in frames:
+        # offset of ckid relative to 'movi'
+        idx += ckid + struct.pack("<III", 0x10, len(movi_body), len(fr))
+        movi_body += chunk(ckid, fr)
+    riff_body = b"AVI " + hdrl + chunk(b"LIST", movi_body) + chunk(b"idx1", idx)
+    return b"RIFF" + struct.pack("<I", len(riff_body)) + riff_body
+
+
+#: 256-entry grayscale RGBQUAD palette (B, G, R, reserved) of the 8-bit
+#: DIB / RLE8 streams
+_AVI_GRAY_PALETTE = bytes(v for j in range(256) for v in (j, j, j, 0))
+
+
+def avi_mjpeg_encode(asset_id: int, width: int, height: int, n_frames: int) -> bytes:
+    """Minimal REAL AVI (RIFF 'AVI ': LIST hdrl with avih + one 'vids'
+    strl (handler MJPG, strf BITMAPINFOHEADER), LIST movi of '00dc'
+    JPEG frames, idx1 index): frame f's 8×8 block i is uniformly
+    (asset_id + 11·f + i) % 256 — block-constant content, so each frame
+    round-trips bit-exactly through the lossy codec (the
+    multimodal_jpeg_roundtrip contract) and the frame-sample oracle
+    recomputes per-frame pixel sums closed-form."""
+    import struct
+
+    frames = [
+        jpeg_encode_gray(jpeg_block_gray(asset_id + 11 * f, width, height))
+        for f in range(n_frames)
+    ]
     strf = struct.pack(
         "<IiiHH4sIiiII", 40, width, height, 1, 24, b"MJPG",
         width * height * 3, 0, 0, 0, 0,
     )
-    hdrl = lst(
-        b"hdrl",
-        chunk(b"avih", avih) + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)),
-    )
-    movi_body = b"movi"
-    offsets = []
-    for fr in frames:
-        offsets.append(len(movi_body))  # offset of ckid relative to 'movi'
-        movi_body += chunk(b"00dc", fr)
-    movi = chunk(b"LIST", movi_body)
-    idx = b""
-    for off, fr in zip(offsets, frames):
-        idx += b"00dc" + struct.pack("<III", 0x10, off, len(fr))
-    riff_body = b"AVI " + hdrl + movi + chunk(b"idx1", idx)
-    return b"RIFF" + struct.pack("<I", len(riff_body)) + riff_body
+    return _avi_container(frames, width, height, b"MJPG", b"00dc", strf)
 
 
 def avi_dib_encode(asset_id: int, width: int, height: int, n_frames: int) -> bytes:
@@ -3617,45 +3376,11 @@ def avi_dib_encode(asset_id: int, width: int, height: int, n_frames: int) -> byt
         rows = np.zeros((height, stride), dtype=np.uint8)
         rows[:, :width] = px
         frames.append(rows[::-1].tobytes())  # bottom-up per the DIB spec
-
-    def chunk(cid: bytes, body: bytes) -> bytes:
-        pad = b"\x00" if len(body) % 2 else b""
-        return cid + struct.pack("<I", len(body)) + body + pad
-
-    def lst(kind: bytes, body: bytes) -> bytes:
-        return chunk(b"LIST", kind + body)
-
-    max_bytes = max(len(fr) for fr in frames)
-    avih = struct.pack(
-        "<IIIIIIIIII4I",
-        100_000, max_bytes * 10, 0, 0x10, n_frames, 0, 1, max_bytes,
-        width, height, 0, 0, 0, 0,
-    )
-    strh = (
-        b"vids" + b"DIB "
-        + struct.pack("<IHH8I", 0, 0, 0, 0, 1, 10, 0, n_frames, max_bytes, 0, 0)
-        + struct.pack("<4H", 0, 0, width, height)
-    )
     strf = struct.pack(
         "<IiiHHIIiiII", 40, width, height, 1, 8, 0,
         stride * height, 0, 0, 256, 0,
-    ) + bytes(v for j in range(256) for v in (j, j, j, 0))  # B,G,R,reserved
-    hdrl = lst(
-        b"hdrl",
-        chunk(b"avih", avih)
-        + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)),
-    )
-    movi_body = b"movi"
-    offsets = []
-    for fr in frames:
-        offsets.append(len(movi_body))
-        movi_body += chunk(b"00db", fr)
-    movi = chunk(b"LIST", movi_body)
-    idx = b""
-    for off, fr in zip(offsets, frames):
-        idx += b"00db" + struct.pack("<III", 0x10, off, len(fr))
-    riff_body = b"AVI " + hdrl + movi + chunk(b"idx1", idx)
-    return b"RIFF" + struct.pack("<I", len(riff_body)) + riff_body
+    ) + _AVI_GRAY_PALETTE
+    return _avi_container(frames, width, height, b"DIB ", b"00db", strf)
 
 
 def rle8_encode_frame(px) -> bytes:
@@ -3796,45 +3521,11 @@ def avi_rle8_encode(asset_id: int, width: int, height: int, n_frames: int) -> by
         rle8_encode_frame(rle8_frame_lattice(asset_id, f, width, height))
         for f in range(n_frames)
     ]
-
-    def chunk(cid: bytes, body: bytes) -> bytes:
-        pad = b"\x00" if len(body) % 2 else b""
-        return cid + struct.pack("<I", len(body)) + body + pad
-
-    def lst(kind: bytes, body: bytes) -> bytes:
-        return chunk(b"LIST", kind + body)
-
-    max_bytes = max(len(fr) for fr in frames)
-    avih = struct.pack(
-        "<IIIIIIIIII4I",
-        100_000, max_bytes * 10, 0, 0x10, n_frames, 0, 1, max_bytes,
-        width, height, 0, 0, 0, 0,
-    )
-    strh = (
-        b"vids" + b"MRLE"
-        + struct.pack("<IHH8I", 0, 0, 0, 0, 1, 10, 0, n_frames, max_bytes, 0, 0)
-        + struct.pack("<4H", 0, 0, width, height)
-    )
     strf = struct.pack(
         "<IiiHHIIiiII", 40, width, height, 1, 8, 1,  # biCompression 1 = BI_RLE8
         width * height, 0, 0, 256, 0,
-    ) + bytes(v for j in range(256) for v in (j, j, j, 0))
-    hdrl = lst(
-        b"hdrl",
-        chunk(b"avih", avih)
-        + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)),
-    )
-    movi_body = b"movi"
-    offsets = []
-    for fr in frames:
-        offsets.append(len(movi_body))
-        movi_body += chunk(b"00dc", fr)
-    movi = chunk(b"LIST", movi_body)
-    idx = b""
-    for off, fr in zip(offsets, frames):
-        idx += b"00dc" + struct.pack("<III", 0x10, off, len(fr))
-    riff_body = b"AVI " + hdrl + movi + chunk(b"idx1", idx)
-    return b"RIFF" + struct.pack("<I", len(riff_body)) + riff_body
+    ) + _AVI_GRAY_PALETTE
+    return _avi_container(frames, width, height, b"MRLE", b"00dc", strf)
 
 
 def encode_avi_rle8_assets(
@@ -3846,29 +3537,132 @@ def encode_avi_rle8_assets(
 ) -> DataFrame:
     """Arrow-batched RLE8-AVI encode: (id, width, height, n_frames) →
     (id, content binary)."""
-    spark = df.sparkSession
-    _ship_package(spark)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pipes_spark.operators.multimodal import avi_rle8_encode
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col].astype("int64"),
-                    "content": [
-                        avi_rle8_encode(int(i), int(w), int(h), int(nf))
-                        for i, w, h, nf in zip(
-                            pdf[id_col], pdf[width_col], pdf[height_col],
-                            pdf[frames_col],
-                        )
-                    ],
-                }
-            )
-
-    return df.select(id_col, width_col, height_col, frames_col).mapInPandas(
-        gen, "asset_id bigint, content binary"
+    return _encode_assets(
+        df, [id_col, width_col, height_col, frames_col], avi_rle8_encode
     )
+
+
+def _avi_frame_rows(every_k, aid, b):
+    import struct
+
+    import numpy as np
+
+    if b[:4] != b"RIFF" or b[8:12] != b"AVI ":
+        raise ValueError(f"asset {aid}: not a RIFF/AVI file")
+    i = 12
+    handler = None
+    declared_frames = None
+    movi_start = None
+    frames = []  # (offset_rel_movi, chunk_type, frame_bytes)
+    idx_entries = None
+    strf_body = None
+    while i + 8 <= len(b):
+        cid = b[i : i + 4]
+        (clen,) = struct.unpack("<I", b[i + 4 : i + 8])
+        body = b[i + 8 : i + 8 + clen]
+        if cid == b"LIST":
+            kind = body[:4]
+            if kind == b"hdrl":
+                # walk sub-chunks for avih and strh
+                j = 4
+                while j + 8 <= len(body):
+                    scid = body[j : j + 4]
+                    (slen,) = struct.unpack("<I", body[j + 4 : j + 8])
+                    sbody = body[j + 8 : j + 8 + slen]
+                    if scid == b"avih":
+                        declared_frames = struct.unpack("<I", sbody[16:20])[0]
+                    elif scid == b"LIST" and sbody[:4] == b"strl":
+                        k = 4
+                        while k + 8 <= len(sbody):
+                            tcid = sbody[k : k + 4]
+                            (tlen,) = struct.unpack("<I", sbody[k + 4 : k + 8])
+                            if tcid == b"strh":
+                                tb = sbody[k + 8 : k + 8 + tlen]
+                                if tb[:4] == b"vids":
+                                    handler = tb[4:8]
+                            elif tcid == b"strf":
+                                strf_body = sbody[k + 8 : k + 8 + tlen]
+                            k += 8 + tlen + (tlen & 1)
+                    j += 8 + slen + (slen & 1)
+            elif kind == b"movi":
+                movi_start = i + 8
+                j = 4
+                while j + 8 <= len(body):
+                    scid = body[j : j + 4]
+                    (slen,) = struct.unpack("<I", body[j + 4 : j + 8])
+                    if scid[2:4] in (b"dc", b"db"):
+                        frames.append((j, scid[2:4], body[j + 8 : j + 8 + slen]))
+                    j += 8 + slen + (slen & 1)
+        elif cid == b"idx1":
+            idx_entries = [
+                (body[k : k + 4], *struct.unpack("<III", body[k + 4 : k + 16]))
+                for k in range(0, len(body), 16)
+            ]
+        i += 8 + clen + (clen & 1)
+    if handler == b"MJPG":
+        want_ct, mode = b"dc", "jpeg"
+    elif handler == b"DIB ":
+        want_ct, mode = b"db", "dib"
+    elif handler in (b"MRLE", b"mrle"):
+        want_ct, mode = b"dc", "rle8"
+    else:
+        raise ValueError(
+            f"asset {aid}: unsupported video handler {handler!r} "
+            "(supported: MJPG, 'DIB ' uncompressed, MRLE/BI_RLE8; "
+            "inter-frame codecs need an external library)"
+        )
+    if movi_start is None or not frames:
+        raise ValueError(f"asset {aid}: no movi frames")
+    if declared_frames is not None and declared_frames != len(frames):
+        raise ValueError(
+            f"asset {aid}: avih declares {declared_frames} frames, "
+            f"movi holds {len(frames)}"
+        )
+    if idx_entries is not None:
+        if len(idx_entries) != len(frames):
+            raise ValueError(f"asset {aid}: idx1 length mismatch")
+        for (ckid, _fl, off, size), (real_off, ct, fr) in zip(idx_entries, frames):
+            if (
+                ckid[2:4] != want_ct
+                or ct != want_ct
+                or off != real_off
+                or size != len(fr)
+            ):
+                raise ValueError(f"asset {aid}: idx1 entry mismatch")
+    if mode in ("dib", "rle8"):
+        if strf_body is None or len(strf_body) < 40:
+            raise ValueError(f"asset {aid}: stream missing strf")
+        (_bsz, bw_, bh_, _pl, bits, comp, _sz, _xp, _yp, used,
+         _imp) = struct.unpack("<IiiHHIIiiII", strf_body[:40])
+        want_comp = 0 if mode == "dib" else 1  # BI_RGB / BI_RLE8
+        if comp != want_comp or bits != 8:
+            raise ValueError(
+                f"asset {aid}: 8-bit with biCompression {want_comp} required "
+                f"for {mode} (got compression {comp}, {bits}-bit)"
+            )
+        n_pal = used or 256
+        pal = np.frombuffer(
+            strf_body[40 : 40 + 4 * n_pal], dtype=np.uint8
+        ).reshape(n_pal, 4)
+        red = pal[:, 2]  # RGBQUAD is B,G,R,reserved
+        stride = (bw_ + 3) // 4 * 4
+    out = []
+    for fno in range(0, len(frames), every_k):
+        fr = frames[fno][2]
+        if mode == "jpeg":
+            px = jpeg_decode_gray(fr)
+        elif mode == "rle8":
+            idxs = rle8_decode_frame(fr, bw_, bh_, label=f"asset {aid} frame {fno}")
+            px = red[idxs.astype(np.int64)]
+        else:
+            if len(fr) != stride * bh_:
+                raise ValueError(f"asset {aid}: DIB frame {fno} size mismatch")
+            rows = np.frombuffer(fr, dtype=np.uint8).reshape(bh_, stride)
+            # bottom-up rows, stride padding stripped, palette
+            # red channel (grayscale-identity contract)
+            px = red[rows[::-1, :bw_].astype(np.int64)]
+        out.append((aid, fno, px.shape[1], px.shape[0], px.sum(dtype=np.int64)))
+    return out
 
 
 def avi_frame_sample_stats(assets: DataFrame, every_k: int = 2) -> DataFrame:
@@ -3885,166 +3679,10 @@ def avi_frame_sample_stats(assets: DataFrame, every_k: int = 2) -> DataFrame:
     index + codec together (catalog ``multimodal_video_frame_sample``,
     ``multimodal_video_dib_frame_sample``). Other handlers (inter-frame
     codecs) and index mismatches raise loudly."""
-    spark = assets.sparkSession
-    _ship_package(spark)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
-        import numpy as np
-
-        from pipes_spark.operators.multimodal import (
-            jpeg_decode_gray,
-            rle8_decode_frame,
-        )
-
-        for pdf in batches:
-            out = {
-                "asset_id": [],
-                "frame_no": [],
-                "width": [],
-                "height": [],
-                "pixel_sum": [],
-            }
-            for aid, content in zip(pdf["asset_id"], pdf["content"]):
-                b = bytes(content)
-                if b[:4] != b"RIFF" or b[8:12] != b"AVI ":
-                    raise ValueError(f"asset {aid}: not a RIFF/AVI file")
-                i = 12
-                handler = None
-                declared_frames = None
-                movi_start = None
-                frames = []  # (offset_rel_movi, chunk_type, frame_bytes)
-                idx_entries = None
-                strf_body = None
-                while i + 8 <= len(b):
-                    cid = b[i : i + 4]
-                    (clen,) = struct.unpack("<I", b[i + 4 : i + 8])
-                    body = b[i + 8 : i + 8 + clen]
-                    if cid == b"LIST":
-                        kind = body[:4]
-                        if kind == b"hdrl":
-                            # walk sub-chunks for avih and strh
-                            j = 4
-                            while j + 8 <= len(body):
-                                scid = body[j : j + 4]
-                                (slen,) = struct.unpack("<I", body[j + 4 : j + 8])
-                                sbody = body[j + 8 : j + 8 + slen]
-                                if scid == b"avih":
-                                    declared_frames = struct.unpack(
-                                        "<I", sbody[16:20]
-                                    )[0]
-                                elif scid == b"LIST" and sbody[:4] == b"strl":
-                                    k = 4
-                                    while k + 8 <= len(sbody):
-                                        tcid = sbody[k : k + 4]
-                                        (tlen,) = struct.unpack(
-                                            "<I", sbody[k + 4 : k + 8]
-                                        )
-                                        if tcid == b"strh":
-                                            tb = sbody[k + 8 : k + 8 + tlen]
-                                            if tb[:4] == b"vids":
-                                                handler = tb[4:8]
-                                        elif tcid == b"strf":
-                                            strf_body = sbody[k + 8 : k + 8 + tlen]
-                                        k += 8 + tlen + (tlen & 1)
-                                j += 8 + slen + (slen & 1)
-                        elif kind == b"movi":
-                            movi_start = i + 8
-                            j = 4
-                            while j + 8 <= len(body):
-                                scid = body[j : j + 4]
-                                (slen,) = struct.unpack("<I", body[j + 4 : j + 8])
-                                if scid[2:4] in (b"dc", b"db"):
-                                    frames.append(
-                                        (j, scid[2:4], body[j + 8 : j + 8 + slen])
-                                    )
-                                j += 8 + slen + (slen & 1)
-                    elif cid == b"idx1":
-                        idx_entries = [
-                            (body[k : k + 4], *struct.unpack("<III", body[k + 4 : k + 16]))
-                            for k in range(0, len(body), 16)
-                        ]
-                    i += 8 + clen + (clen & 1)
-                if handler == b"MJPG":
-                    want_ct, mode = b"dc", "jpeg"
-                elif handler == b"DIB ":
-                    want_ct, mode = b"db", "dib"
-                elif handler in (b"MRLE", b"mrle"):
-                    want_ct, mode = b"dc", "rle8"
-                else:
-                    raise ValueError(
-                        f"asset {aid}: unsupported video handler {handler!r} "
-                        "(supported: MJPG, 'DIB ' uncompressed, MRLE/BI_RLE8; "
-                        "inter-frame codecs need an external library)"
-                    )
-                if movi_start is None or not frames:
-                    raise ValueError(f"asset {aid}: no movi frames")
-                if declared_frames is not None and declared_frames != len(frames):
-                    raise ValueError(
-                        f"asset {aid}: avih declares {declared_frames} frames, "
-                        f"movi holds {len(frames)}"
-                    )
-                if idx_entries is not None:
-                    if len(idx_entries) != len(frames):
-                        raise ValueError(f"asset {aid}: idx1 length mismatch")
-                    for (ckid, _fl, off, size), (real_off, ct, fr) in zip(
-                        idx_entries, frames
-                    ):
-                        if (
-                            ckid[2:4] != want_ct
-                            or ct != want_ct
-                            or off != real_off
-                            or size != len(fr)
-                        ):
-                            raise ValueError(f"asset {aid}: idx1 entry mismatch")
-                if mode in ("dib", "rle8"):
-                    if strf_body is None or len(strf_body) < 40:
-                        raise ValueError(f"asset {aid}: stream missing strf")
-                    (_bsz, bw_, bh_, _pl, bits, comp, _sz, _xp, _yp, used,
-                     _imp) = struct.unpack("<IiiHHIIiiII", strf_body[:40])
-                    want_comp = 0 if mode == "dib" else 1  # BI_RGB / BI_RLE8
-                    if comp != want_comp or bits != 8:
-                        raise ValueError(
-                            f"asset {aid}: 8-bit with biCompression "
-                            f"{want_comp} required for {mode} "
-                            f"(got compression {comp}, {bits}-bit)"
-                        )
-                    n_pal = used or 256
-                    pal = np.frombuffer(
-                        strf_body[40 : 40 + 4 * n_pal], dtype=np.uint8
-                    ).reshape(n_pal, 4)
-                    red = pal[:, 2]  # RGBQUAD is B,G,R,reserved
-                    stride = (bw_ + 3) // 4 * 4
-                for fno in range(0, len(frames), every_k):
-                    fr = frames[fno][2]
-                    if mode == "jpeg":
-                        px = jpeg_decode_gray(fr)
-                    elif mode == "rle8":
-                        idxs = rle8_decode_frame(
-                            fr, bw_, bh_, label=f"asset {aid} frame {fno}"
-                        )
-                        px = red[idxs.astype(np.int64)]
-                    else:
-                        if len(fr) != stride * bh_:
-                            raise ValueError(
-                                f"asset {aid}: DIB frame {fno} size mismatch"
-                            )
-                        rows = np.frombuffer(fr, dtype=np.uint8).reshape(
-                            bh_, stride
-                        )
-                        # bottom-up rows, stride padding stripped, palette
-                        # red channel (grayscale-identity contract)
-                        px = red[rows[::-1, :bw_].astype(np.int64)]
-                    out["asset_id"].append(int(aid))
-                    out["frame_no"].append(int(fno))
-                    out["width"].append(int(px.shape[1]))
-                    out["height"].append(int(px.shape[0]))
-                    out["pixel_sum"].append(int(px.sum(dtype=np.int64)))
-            yield pd.DataFrame(out)
-
-    return assets.mapInPandas(
-        gen,
+    return _map_rows(
+        assets,
+        ["asset_id", "content"],
+        partial(_avi_frame_rows, every_k),
         "asset_id bigint, frame_no int, width int, height int, "
         "pixel_sum bigint",
     )
@@ -4060,30 +3698,8 @@ def encode_avi_assets(
     """Arrow-batched REAL AVI/MJPEG encode: (id, width, height,
     n_frames) → (id, content binary) — the video member of the
     encode_*_assets family."""
-    spark = df.sparkSession
-    _ship_package(spark)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pipes_spark.operators.multimodal import avi_mjpeg_encode
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col].astype("int64"),
-                    "content": [
-                        avi_mjpeg_encode(int(i), int(w), int(h), int(nf))
-                        for i, w, h, nf in zip(
-                            pdf[id_col],
-                            pdf[width_col],
-                            pdf[height_col],
-                            pdf[frames_col],
-                        )
-                    ],
-                }
-            )
-
-    return df.select(id_col, width_col, height_col, frames_col).mapInPandas(
-        gen, "asset_id bigint, content binary"
+    return _encode_assets(
+        df, [id_col, width_col, height_col, frames_col], avi_mjpeg_encode
     )
 
 
@@ -4098,30 +3714,8 @@ def encode_avi_dib_assets(
     height, n_frames) → (id, content binary) through
     :func:`avi_dib_encode` — the raw-video sibling of
     :func:`encode_avi_assets`."""
-    spark = df.sparkSession
-    _ship_package(spark)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pipes_spark.operators.multimodal import avi_dib_encode
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col].astype("int64"),
-                    "content": [
-                        avi_dib_encode(int(i), int(w), int(h), int(nf))
-                        for i, w, h, nf in zip(
-                            pdf[id_col],
-                            pdf[width_col],
-                            pdf[height_col],
-                            pdf[frames_col],
-                        )
-                    ],
-                }
-            )
-
-    return df.select(id_col, width_col, height_col, frames_col).mapInPandas(
-        gen, "asset_id bigint, content binary"
+    return _encode_assets(
+        df, [id_col, width_col, height_col, frames_col], avi_dib_encode
     )
 
 
@@ -4435,9 +4029,6 @@ def png_decode_gray(content: bytes):
     Up, Average, Paeth) and ADAM7 interlacing (seven independently
     filtered sub-images merged on the pass grid), not just the
     engine's own filter-0 write profile."""
-    import struct
-    import zlib as _z
-
     import numpy as np
 
     fmt, w, h, depth, ctype = sniff_image_header(content)
@@ -4449,16 +4040,7 @@ def png_decode_gray(content: bytes):
             "8-bit grayscale only)"
         )
     interlace = content[28]
-    idat, i = b"", 8
-    while i + 8 <= len(content):
-        (ln,) = struct.unpack(">I", content[i : i + 4])
-        typ = content[i + 4 : i + 8]
-        if typ == b"IDAT":
-            idat += content[i + 8 : i + 8 + ln]
-        i += 12 + ln
-        if typ == b"IEND":
-            break
-    raw = np.frombuffer(_z.decompress(idat), dtype=np.uint8)
+    raw = _png_inflate(content)
     if interlace == 0:
         if raw.size != h * (w + 1):
             raise ValueError("PNG stream size mismatch")
@@ -4484,58 +4066,7 @@ def png_decode_gray(content: bytes):
 def gif_decode_gray(content: bytes):
     """Decode the first frame of a GIF to grayscale via the palette's
     RED channel — the standalone form of :func:`gif_decode_stats`."""
-    import struct
-
-    import numpy as np
-
-    b = bytes(content)
-    if b[:6] not in (b"GIF87a", b"GIF89a") or len(b) < 13:
-        raise ValueError("not a GIF")
-    _sw, _sh, packed, _bg, _ar = struct.unpack("<HHBBB", b[6:13])
-    i = 13
-    palette = None
-    if packed & 0x80:
-        gct_n = 2 << (packed & 0x7)
-        palette = np.frombuffer(b[i : i + 3 * gct_n], dtype=np.uint8).reshape(
-            gct_n, 3
-        )
-        i += 3 * gct_n
-    while i < len(b):
-        blk = b[i]
-        i += 1
-        if blk == 0x21:
-            i += 1
-            while b[i]:
-                i += 1 + b[i]
-            i += 1
-            continue
-        if blk != 0x2C:
-            raise ValueError(f"unexpected GIF block 0x{blk:02x}")
-        _l, _t, w, h, ipk = struct.unpack("<HHHHB", b[i : i + 9])
-        i += 9
-        if ipk & 0x80:
-            lct_n = 2 << (ipk & 0x7)
-            palette = np.frombuffer(
-                b[i : i + 3 * lct_n], dtype=np.uint8
-            ).reshape(lct_n, 3)
-            i += 3 * lct_n
-        if palette is None:
-            raise ValueError("GIF has no color table")
-        mcs = b[i]
-        i += 1
-        lzw = bytearray()
-        while b[i]:
-            ln = b[i]
-            lzw += b[i + 1 : i + 1 + ln]
-            i += 1 + ln
-        idx = np.frombuffer(
-            bytes(_gif_lzw_decode(bytes(lzw), mcs)), dtype=np.uint8
-        )
-        stored = idx.reshape(h, w)
-        grid = np.empty_like(stored)
-        grid[_gif_row_order(h, bool(ipk & 0x40)), :] = stored
-        return palette[:, 0][grid]
-    raise ValueError("truncated GIF")
+    return _gif_first_image(bytes(content), "asset")[2]
 
 
 def gif_encode_animation(
@@ -4587,12 +4118,7 @@ def gif_encode_animation(
                     base = 11 * f if f > 0 else 0
                     rows.append((asset_id + base + xx * 13 + yy * 7) % 255)
         out.append(8)
-        lzw = _gif_lzw_encode(bytes(rows), 8)
-        for i in range(0, len(lzw), 255):
-            chunk = lzw[i : i + 255]
-            out.append(len(chunk))
-            out += chunk
-        out += b"\x00"
+        out += _gif_sub_blocks(_gif_lzw_encode(bytes(rows), 8))
     out += b"\x3b"
     return bytes(out)
 
@@ -4706,29 +4232,19 @@ def encode_gif_animation_assets(
 ) -> DataFrame:
     """Arrow-batched animated-GIF encode: (id, width, height, n_frames)
     → (id, content binary)."""
-    spark = df.sparkSession
-    _ship_package(spark)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pipes_spark.operators.multimodal import gif_encode_animation
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col].astype("int64"),
-                    "content": [
-                        gif_encode_animation(int(i), int(w), int(h), int(nf))
-                        for i, w, h, nf in zip(
-                            pdf[id_col], pdf[width_col], pdf[height_col],
-                            pdf[frames_col],
-                        )
-                    ],
-                }
-            )
-
-    return df.select(id_col, width_col, height_col, frames_col).mapInPandas(
-        gen, "asset_id bigint, content binary"
+    return _encode_assets(
+        df, [id_col, width_col, height_col, frames_col], gif_encode_animation
     )
+
+
+def _gif_frame_rows(aid, content):
+    import numpy as np
+
+    frames = gif_decode_frames(content, label=f"asset {aid}")
+    return [
+        (aid, fno, c.shape[1], c.shape[0], c.sum(dtype=np.int64))
+        for fno, c in enumerate(frames)
+    ]
 
 
 def gif_animation_frame_stats(assets: DataFrame) -> DataFrame:
@@ -4736,32 +4252,10 @@ def gif_animation_frame_stats(assets: DataFrame) -> DataFrame:
     COMPOSITED frame (asset_id, frame_no, width, height, pixel_sum) —
     the GIF sibling of avi_frame_sample_stats (catalog
     ``multimodal_gif_animation_frames``)."""
-    spark = assets.sparkSession
-    _ship_package(spark)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from pipes_spark.operators.multimodal import gif_decode_frames
-
-        for pdf in batches:
-            out = {
-                "asset_id": [], "frame_no": [], "width": [], "height": [],
-                "pixel_sum": [],
-            }
-            for aid, content in zip(pdf["asset_id"], pdf["content"]):
-                for fno, canvas in enumerate(
-                    gif_decode_frames(content, label=f"asset {aid}")
-                ):
-                    out["asset_id"].append(int(aid))
-                    out["frame_no"].append(int(fno))
-                    out["width"].append(int(canvas.shape[1]))
-                    out["height"].append(int(canvas.shape[0]))
-                    out["pixel_sum"].append(int(canvas.sum(dtype=np.int64)))
-            yield pd.DataFrame(out)
-
-    return assets.mapInPandas(
-        gen,
+    return _map_rows(
+        assets,
+        ["asset_id", "content"],
+        _gif_frame_rows,
         "asset_id bigint, frame_no int, width int, height int, "
         "pixel_sum bigint",
     )
@@ -4903,29 +4397,29 @@ def encode_bmp_assets(
 ) -> DataFrame:
     """Arrow-batched BMP encode: (id, width, height, bpp 8|24, topdown
     bool) → (id, content binary)."""
-    spark = df.sparkSession
-    _ship_package(spark)
+    return _encode_assets(
+        df, [id_col, width_col, height_col, bpp_col, topdown_col], bmp_encode
+    )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pipes_spark.operators.multimodal import bmp_encode
 
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col].astype("int64"),
-                    "content": [
-                        bmp_encode(int(i), int(w), int(h), int(p), bool(t))
-                        for i, w, h, p, t in zip(
-                            pdf[id_col], pdf[width_col], pdf[height_col],
-                            pdf[bpp_col], pdf[topdown_col],
-                        )
-                    ],
-                }
-            )
+def _weighted_sums(px):
+    """(pixel_sum, weighted_sum) of a 2-D pixel matrix, weighted_sum =
+    Σ px(x,y)·(y·W + x + 1) — the position-pinned checksum of the BMP,
+    TIFF and codec-independent image stats rows."""
+    import numpy as np
 
-    return df.select(
-        id_col, width_col, height_col, bpp_col, topdown_col
-    ).mapInPandas(gen, "asset_id bigint, content binary")
+    px = px.astype(np.int64)
+    weights = np.arange(1, px.size + 1, dtype=np.int64).reshape(px.shape)
+    return px.sum(), (px * weights).sum()
+
+
+def _bmp_stats_row(aid, content):
+    fmt, _w, _h, bpp, _ = sniff_image_header(content)
+    if fmt != "bmp":
+        raise ValueError(f"asset {aid}: expected BMP, got {fmt}")
+    px = bmp_decode_gray(content)
+    h, w = px.shape
+    return [(aid, "bmp", w, h, bpp, *_weighted_sums(px), px.min(), px.max())]
 
 
 def bmp_decode_stats(assets: DataFrame) -> DataFrame:
@@ -4935,47 +4429,10 @@ def bmp_decode_stats(assets: DataFrame) -> DataFrame:
     TOP-DOWN orientation — bottom-up files must be flipped and strides
     skipped exactly for the weight grid to line up (catalog
     ``multimodal_bmp_roundtrip``)."""
-    spark = assets.sparkSession
-    _ship_package(spark)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from pipes_spark.operators.multimodal import (
-            bmp_decode_gray,
-            sniff_image_header,
-        )
-
-        for pdf in batches:
-            out = {
-                "asset_id": [], "format": [], "width": [], "height": [],
-                "bpp": [], "pixel_sum": [], "weighted_sum": [],
-                "px_min": [], "px_max": [],
-            }
-            for aid, content in zip(pdf["asset_id"], pdf["content"]):
-                fmt, w, h, bpp, _ = sniff_image_header(bytes(content))
-                if fmt != "bmp":
-                    raise ValueError(f"asset {aid}: expected BMP, got {fmt}")
-                px = bmp_decode_gray(bytes(content)).astype(np.int64)
-                hh, ww = px.shape
-                weights = (
-                    np.arange(hh, dtype=np.int64)[:, None] * ww
-                    + np.arange(ww, dtype=np.int64)[None, :]
-                    + 1
-                )
-                out["asset_id"].append(int(aid))
-                out["format"].append("bmp")
-                out["width"].append(int(ww))
-                out["height"].append(int(hh))
-                out["bpp"].append(int(bpp))
-                out["pixel_sum"].append(int(px.sum()))
-                out["weighted_sum"].append(int((px * weights).sum()))
-                out["px_min"].append(int(px.min()))
-                out["px_max"].append(int(px.max()))
-            yield pd.DataFrame(out)
-
-    return assets.mapInPandas(
-        gen,
+    return _map_rows(
+        assets,
+        ["asset_id", "content"],
+        _bmp_stats_row,
         "asset_id bigint, format string, width int, height int, bpp int, "
         "pixel_sum bigint, weighted_sum bigint, px_min int, px_max int",
     )
@@ -5382,31 +4839,30 @@ def encode_tiff_assets(
 ) -> DataFrame:
     """Arrow-batched TIFF encode: (id, width, height, byte_order
     'II'|'MM', compression 1|32773, photometric 0|1) → (id, content)."""
-    spark = df.sparkSession
-    _ship_package(spark)
+    cols = [id_col, width_col, height_col, order_col, comp_col, photo_col]
+    return _encode_assets(df, cols, tiff_encode_gray)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pipes_spark.operators.multimodal import tiff_encode_gray
 
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col].astype("int64"),
-                    "content": [
-                        tiff_encode_gray(
-                            int(i), int(w), int(h), str(o), int(c), int(p)
-                        )
-                        for i, w, h, o, c, p in zip(
-                            pdf[id_col], pdf[width_col], pdf[height_col],
-                            pdf[order_col], pdf[comp_col], pdf[photo_col],
-                        )
-                    ],
-                }
-            )
+def _tiff_stats_row(aid, b):
+    import struct
 
-    return df.select(
-        id_col, width_col, height_col, order_col, comp_col, photo_col
-    ).mapInPandas(gen, "asset_id bigint, content binary")
+    e = "<" if b[:2] == b"II" else ">"
+    px = tiff_decode_gray(b, label=f"asset {aid}")
+    # re-read compression/photometric for the evidence row
+    (_, ifd_at) = struct.unpack(e + "HI", b[2:8])
+    (n_entries,) = struct.unpack(e + "H", b[ifd_at : ifd_at + 2])
+    comp = photo = 1
+    for i in range(n_entries):
+        at = ifd_at + 2 + i * 12
+        tag, typ, _cnt = struct.unpack(e + "HHI", b[at : at + 8])
+        if tag in (259, 262):
+            (val,) = struct.unpack(e + "H", b[at + 8 : at + 10])
+            if tag == 259:
+                comp = val
+            else:
+                photo = val
+    h, w = px.shape
+    return [(aid, "tiff", b[:2].decode(), comp, photo, w, h, *_weighted_sums(px))]
 
 
 def tiff_decode_stats(assets: DataFrame) -> DataFrame:
@@ -5415,60 +4871,10 @@ def tiff_decode_stats(assets: DataFrame) -> DataFrame:
     byte_order, compression, photometric, width, height, pixel_sum,
     weighted_sum) — the weighted sum catches strip mis-assembly and a
     skipped WhiteIsZero inversion alike."""
-    spark = assets.sparkSession
-    _ship_package(spark)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
-        import numpy as np
-
-        from pipes_spark.operators.multimodal import tiff_decode_gray
-
-        for pdf in batches:
-            out = {
-                "asset_id": [], "format": [], "byte_order": [],
-                "compression": [], "photometric": [], "width": [],
-                "height": [], "pixel_sum": [], "weighted_sum": [],
-            }
-            for aid, content in zip(pdf["asset_id"], pdf["content"]):
-                b = bytes(content)
-                e = "<" if b[:2] == b"II" else ">"
-                px = tiff_decode_gray(b, label=f"asset {aid}").astype(
-                    np.int64
-                )
-                # re-read compression/photometric for the evidence row
-                (_, ifd_at) = struct.unpack(e + "HI", b[2:8])
-                (n_entries,) = struct.unpack(e + "H", b[ifd_at : ifd_at + 2])
-                comp = photo = 1
-                for i in range(n_entries):
-                    at = ifd_at + 2 + i * 12
-                    tag, typ, _cnt = struct.unpack(e + "HHI", b[at : at + 8])
-                    if tag in (259, 262):
-                        (val,) = struct.unpack(e + "H", b[at + 8 : at + 10])
-                        if tag == 259:
-                            comp = val
-                        else:
-                            photo = val
-                hh, ww = px.shape
-                weights = (
-                    np.arange(hh, dtype=np.int64)[:, None] * ww
-                    + np.arange(ww, dtype=np.int64)[None, :]
-                    + 1
-                )
-                out["asset_id"].append(int(aid))
-                out["format"].append("tiff")
-                out["byte_order"].append(b[:2].decode())
-                out["compression"].append(int(comp))
-                out["photometric"].append(int(photo))
-                out["width"].append(int(ww))
-                out["height"].append(int(hh))
-                out["pixel_sum"].append(int(px.sum()))
-                out["weighted_sum"].append(int((px * weights).sum()))
-            yield pd.DataFrame(out)
-
-    return assets.mapInPandas(
-        gen,
+    return _map_rows(
+        assets,
+        ["asset_id", "content"],
+        _tiff_stats_row,
         "asset_id bigint, format string, byte_order string, "
         "compression int, photometric int, width int, height int, "
         "pixel_sum bigint, weighted_sum bigint",
@@ -5684,6 +5090,20 @@ def _jpeg_decode_hierarchical(data: bytes):
     raise ValueError("no differential scan found in hierarchical stream")
 
 
+def _pixel_lattice(aid, w, h):
+    """The standard per-pixel gray lattice: pixel (x, y) =
+    (aid·7 + x·11 + y·13) % 256."""
+    import numpy as np
+
+    x = np.arange(w, dtype=np.int64)[None, :]
+    y = np.arange(h, dtype=np.int64)[:, None]
+    return ((aid * 7 + x * 11 + y * 13) % 256).astype(np.uint8)
+
+
+def _jpeg_hierarchical_asset(aid, w, h):
+    return jpeg_encode_hierarchical(_pixel_lattice(aid, w, h))
+
+
 def encode_jpeg_hierarchical_assets(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -5694,30 +5114,13 @@ def encode_jpeg_hierarchical_assets(
     width, height) → (id, content binary) over the standard per-pixel
     lattice (the differential-lossless top frame makes arbitrary
     content bit-exact)."""
-    spark = df.sparkSession
-    _ship_package(spark)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from pipes_spark.operators.multimodal import jpeg_encode_hierarchical
-
-        for pdf in batches:
-            content = []
-            for i, w, h in zip(
-                pdf[id_col], pdf[width_col], pdf[height_col]
-            ):
-                x = np.arange(int(w), dtype=np.int64)[None, :]
-                y = np.arange(int(h), dtype=np.int64)[:, None]
-                px = ((int(i) * 7 + x * 11 + y * 13) % 256).astype(np.uint8)
-                content.append(jpeg_encode_hierarchical(px))
-            yield pd.DataFrame(
-                {"asset_id": pdf[id_col].astype("int64"), "content": content}
-            )
-
-    return df.select(id_col, width_col, height_col).mapInPandas(
-        gen, "asset_id bigint, content binary"
+    return _encode_assets(
+        df, [id_col, width_col, height_col], _jpeg_hierarchical_asset
     )
+
+
+def _jpeg_lossless_asset(aid, w, h, predictor, point_transform):
+    return jpeg_encode_lossless(_pixel_lattice(aid, w, h), predictor, point_transform)
 
 
 def encode_jpeg_lossless_assets(
@@ -5732,33 +5135,15 @@ def encode_jpeg_lossless_assets(
     height, predictor 1-7, point_transform) → (id, content binary),
     over the standard per-pixel lattice (lossless ⇒ arbitrary per-pixel
     content reconstructs exactly — no block-constant contract)."""
-    spark = df.sparkSession
-    _ship_package(spark)
+    cols = [id_col, width_col, height_col, pred_col, pt_col]
+    return _encode_assets(df, cols, _jpeg_lossless_asset)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
 
-        from pipes_spark.operators.multimodal import jpeg_encode_lossless
-
-        for pdf in batches:
-            content = []
-            for i, w, h, pr, pt in zip(
-                pdf[id_col], pdf[width_col], pdf[height_col],
-                pdf[pred_col], pdf[pt_col],
-            ):
-                x = np.arange(int(w), dtype=np.int64)[None, :]
-                y = np.arange(int(h), dtype=np.int64)[:, None]
-                px = ((int(i) * 7 + x * 11 + y * 13) % 256).astype(np.uint8)
-                content.append(
-                    jpeg_encode_lossless(px, int(pr), int(pt))
-                )
-            yield pd.DataFrame(
-                {"asset_id": pdf[id_col].astype("int64"), "content": content}
-            )
-
-    return df.select(
-        id_col, width_col, height_col, pred_col, pt_col
-    ).mapInPandas(gen, "asset_id bigint, content binary")
+def _image_weighted_row(aid, content):
+    fmt, *_ = sniff_image_header(content)
+    px = decode_image_gray(content)
+    h, w = px.shape
+    return [(aid, fmt, w, h, *_weighted_sums(px), px.min(), px.max())]
 
 
 def image_decode_weighted_stats(assets: DataFrame) -> DataFrame:
@@ -5768,44 +5153,10 @@ def image_decode_weighted_stats(assets: DataFrame) -> DataFrame:
     output (asset_id, format, width, height, pixel_sum, weighted_sum,
     px_min, px_max). The weighted sum pins every pixel to its
     position, so a hash-pass proves exact per-pixel reconstruction."""
-    spark = assets.sparkSession
-    _ship_package(spark)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from pipes_spark.operators.multimodal import (
-            decode_image_gray,
-            sniff_image_header,
-        )
-
-        for pdf in batches:
-            out = {
-                "asset_id": [], "format": [], "width": [], "height": [],
-                "pixel_sum": [], "weighted_sum": [], "px_min": [],
-                "px_max": [],
-            }
-            for aid, content in zip(pdf["asset_id"], pdf["content"]):
-                fmt, *_ = sniff_image_header(bytes(content))
-                px = decode_image_gray(bytes(content)).astype(np.int64)
-                hh, ww = px.shape
-                weights = (
-                    np.arange(hh, dtype=np.int64)[:, None] * ww
-                    + np.arange(ww, dtype=np.int64)[None, :]
-                    + 1
-                )
-                out["asset_id"].append(int(aid))
-                out["format"].append(str(fmt))
-                out["width"].append(int(ww))
-                out["height"].append(int(hh))
-                out["pixel_sum"].append(int(px.sum()))
-                out["weighted_sum"].append(int((px * weights).sum()))
-                out["px_min"].append(int(px.min()))
-                out["px_max"].append(int(px.max()))
-            yield pd.DataFrame(out)
-
-    return assets.mapInPandas(
-        gen,
+    return _map_rows(
+        assets,
+        ["asset_id", "content"],
+        _image_weighted_row,
         "asset_id bigint, format string, width int, height int, "
         "pixel_sum bigint, weighted_sum bigint, px_min int, px_max int",
     )
@@ -5998,45 +5349,49 @@ def exif_extract(content: bytes, label: str = "asset"):
     return rows
 
 
+def _exif_rows(aid, content):
+    # emit per-asset rows already in (ifd, tag_id) order — the catalog
+    # query's output order contract ("Exif" < "IFD0" in plain string
+    # order), so a range-sorted input needs no final orderBy over the
+    # extraction (same row multiset)
+    tags = exif_extract(content, label=f"asset {aid}")
+    return [(aid, *t) for t in sorted(tags, key=lambda t: (t[0], t[1]))]
+
+
 def exif_metadata_rows(assets: DataFrame) -> DataFrame:
     """1→N EXIF extraction over Arrow batches: (asset_id, content) →
     one row per metadata tag (asset_id, ifd, tag_id, tag_name,
     tag_type, value) — pixels are never touched, which is the point:
     a 100 TB ingest scan reads headers, not images (catalog
     ``multimodal_exif_metadata``)."""
-    spark = assets.sparkSession
-    _ship_package(spark)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pipes_spark.operators.multimodal import exif_extract
-
-        for pdf in batches:
-            out = {
-                "asset_id": [], "ifd": [], "tag_id": [], "tag_name": [],
-                "tag_type": [], "value": [],
-            }
-            for aid, content in zip(pdf["asset_id"], pdf["content"]):
-                # emit per-asset rows already in (ifd, tag_id) order — the
-                # catalog query's output order contract ("Exif" < "IFD0"
-                # in plain string order), so a range-sorted input needs no
-                # final orderBy over the extraction (same row multiset)
-                for ifd, tag, name, typ, val in sorted(
-                    exif_extract(content, label=f"asset {aid}"),
-                    key=lambda r: (r[0], r[1]),
-                ):
-                    out["asset_id"].append(int(aid))
-                    out["ifd"].append(ifd)
-                    out["tag_id"].append(int(tag))
-                    out["tag_name"].append(name)
-                    out["tag_type"].append(typ)
-                    out["value"].append(val)
-            yield pd.DataFrame(out)
-
-    return assets.mapInPandas(
-        gen,
+    return _map_rows(
+        assets,
+        ["asset_id", "content"],
+        _exif_rows,
         "asset_id bigint, ifd string, tag_id int, tag_name string, "
         "tag_type string, value string",
     )
+
+
+def _exif_jpeg_asset(i):
+    import numpy as np
+
+    base = jpeg_encode_gray(np.full((8, 8), i % 256, np.uint8))
+    tags0 = [
+        (271, 2, f"maker_{i % 5}"),
+        (272, 2, f"model_{i % 7}"),
+        (274, 3, [i % 8 + 1]),
+        (306, 2, f"2021:{i % 12 + 1:02d}:{i % 28 + 1:02d} 10:30:{i % 60:02d}"),
+        (282, 5, [(72 + (i % 4) * 72, 1)]),
+    ]
+    exif_tags = [
+        (33434, 5, [(1, 60 + i % 200)]),
+        (34855, 3, [100 * (1 + i % 8)]),
+        (40962, 4, [8]),
+        (40963, 4, [8]),
+    ]
+    order = "II" if i % 2 == 0 else "MM"
+    return jpeg_with_exif(base, exif_app1_payload(tags0, exif_tags, order))
 
 
 def encode_exif_jpeg_assets(
@@ -6046,52 +5401,11 @@ def encode_exif_jpeg_assets(
     an APP1 Exif segment holding a deterministic tag ladder (byte order
     by id parity — the extractor must honor 'MM' tag reads to
     reproduce the same value strings)."""
-    spark = df.sparkSession
-    _ship_package(spark)
+    return _encode_assets(df, [id_col], _exif_jpeg_asset)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
 
-        from pipes_spark.operators.multimodal import (
-            exif_app1_payload,
-            jpeg_encode_gray,
-            jpeg_with_exif,
-        )
-
-        for pdf in batches:
-            content = []
-            for i in pdf[id_col]:
-                i = int(i)
-                base = jpeg_encode_gray(
-                    np.full((8, 8), i % 256, np.uint8)
-                )
-                tags0 = [
-                    (271, 2, f"maker_{i % 5}"),
-                    (272, 2, f"model_{i % 7}"),
-                    (274, 3, [i % 8 + 1]),
-                    (306, 2, f"2021:{i % 12 + 1:02d}:{i % 28 + 1:02d} "
-                             f"10:30:{i % 60:02d}"),
-                    (282, 5, [(72 + (i % 4) * 72, 1)]),
-                ]
-                exif_tags = [
-                    (33434, 5, [(1, 60 + i % 200)]),
-                    (34855, 3, [100 * (1 + i % 8)]),
-                    (40962, 4, [8]),
-                    (40963, 4, [8]),
-                ]
-                order = "II" if i % 2 == 0 else "MM"
-                content.append(
-                    jpeg_with_exif(
-                        base, exif_app1_payload(tags0, exif_tags, order)
-                    )
-                )
-            yield pd.DataFrame(
-                {"asset_id": pdf[id_col].astype("int64"), "content": content}
-            )
-
-    return df.select(id_col).mapInPandas(
-        gen, "asset_id bigint, content binary"
-    )
+def _png_filtered_asset(aid, w, h, filter_mode, interlaced):
+    return png_encode_filtered(_pixel_lattice(aid, w, h), filter_mode, interlaced)
 
 
 def encode_png_filtered_assets(
@@ -6105,31 +5419,8 @@ def encode_png_filtered_assets(
     """Arrow-batched general-profile PNG encode: (id, width, height,
     filter_mode '0'..'4'|'adaptive', interlaced bool) → (id, content)
     over the standard per-pixel lattice."""
-    spark = df.sparkSession
-    _ship_package(spark)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from pipes_spark.operators.multimodal import png_encode_filtered
-
-        for pdf in batches:
-            content = []
-            for i, w, h, m, il in zip(
-                pdf[id_col], pdf[width_col], pdf[height_col],
-                pdf[mode_col], pdf[interlace_col],
-            ):
-                x = np.arange(int(w), dtype=np.int64)[None, :]
-                y = np.arange(int(h), dtype=np.int64)[:, None]
-                px = ((int(i) * 7 + x * 11 + y * 13) % 256).astype(np.uint8)
-                content.append(png_encode_filtered(px, str(m), bool(il)))
-            yield pd.DataFrame(
-                {"asset_id": pdf[id_col].astype("int64"), "content": content}
-            )
-
-    return df.select(
-        id_col, width_col, height_col, mode_col, interlace_col
-    ).mapInPandas(gen, "asset_id bigint, content binary")
+    cols = [id_col, width_col, height_col, mode_col, interlace_col]
+    return _encode_assets(df, cols, _png_filtered_asset)
 
 
 def _subtitle_ts_ms(ts: str, sep: str, label: str) -> int:
@@ -6221,6 +5512,11 @@ def subtitle_parse(text: str, label: str = "asset"):
     return cues
 
 
+def _subtitle_cue_rows(aid, text):
+    cues = subtitle_parse(text, label=f"asset {aid}")
+    return [(aid, no, s, e, e - s, t) for no, s, e, t in cues]
+
+
 def subtitle_cue_rows(
     assets: DataFrame, id_col: str = "asset_id", text_col: str = "content"
 ) -> DataFrame:
@@ -6228,34 +5524,25 @@ def subtitle_cue_rows(
     → one row per cue (asset_id, cue_no, start_ms, end_ms, duration_ms,
     cue_text) — the video-text alignment step of a multimodal training
     pipeline (catalog ``multimodal_subtitle_cues``)."""
-    spark = assets.sparkSession
-    _ship_package(spark)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pipes_spark.operators.multimodal import subtitle_parse
-
-        for pdf in batches:
-            out = {
-                "asset_id": [], "cue_no": [], "start_ms": [], "end_ms": [],
-                "duration_ms": [], "cue_text": [],
-            }
-            for aid, text in zip(pdf[id_col], pdf[text_col]):
-                for no, s, e, t in subtitle_parse(
-                    str(text), label=f"asset {aid}"
-                ):
-                    out["asset_id"].append(int(aid))
-                    out["cue_no"].append(int(no))
-                    out["start_ms"].append(int(s))
-                    out["end_ms"].append(int(e))
-                    out["duration_ms"].append(int(e - s))
-                    out["cue_text"].append(t)
-            yield pd.DataFrame(out)
-
-    return assets.mapInPandas(
-        gen,
+    return _map_rows(
+        assets,
+        [id_col, text_col],
+        _subtitle_cue_rows,
         "asset_id bigint, cue_no int, start_ms bigint, end_ms bigint, "
         "duration_ms bigint, cue_text string",
     )
+
+
+def _subtitle_asset(i, n_cues):
+    cues = [
+        (
+            i * 1000 + c * 2000,
+            i * 1000 + c * 2000 + 1500 + (c % 3) * 200,
+            f"cue {i}_{c}",
+        )
+        for c in range(n_cues)
+    ]
+    return srt_render(cues) if i % 2 == 0 else vtt_render(cues)
 
 
 def encode_subtitle_assets(
@@ -6266,33 +5553,11 @@ def encode_subtitle_assets(
     (i % 3)·200 ms, text 'cue <id>_<i>'), rendered as SubRip for even
     ids and WebVTT (with a NOTE block and cue settings the parser must
     skip) for odd."""
-    spark = df.sparkSession
-    _ship_package(spark)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pipes_spark.operators.multimodal import srt_render, vtt_render
-
-        for pdf in batches:
-            content = []
-            for i, nc in zip(pdf[id_col], pdf[cues_col]):
-                i, nc = int(i), int(nc)
-                cues = [
-                    (
-                        i * 1000 + c * 2000,
-                        i * 1000 + c * 2000 + 1500 + (c % 3) * 200,
-                        f"cue {i}_{c}",
-                    )
-                    for c in range(nc)
-                ]
-                content.append(
-                    srt_render(cues) if i % 2 == 0 else vtt_render(cues)
-                )
-            yield pd.DataFrame(
-                {"asset_id": pdf[id_col].astype("int64"), "content": content}
-            )
-
-    return df.select(id_col, cues_col).mapInPandas(
-        gen, "asset_id bigint, content string"
+    return _map_rows(
+        df,
+        [id_col, cues_col],
+        partial(_encode_row, _subtitle_asset),
+        "asset_id bigint, content string",
     )
 
 
@@ -6354,6 +5619,11 @@ def image_ahash(assets: DataFrame, grid: int = 8) -> DataFrame:
     )
 
 
+def _block_image_asset(seed_mul, cell_mul, aid, w, h, codec, seed=None):
+    seed = aid if seed is None else seed
+    return encode_pixels(block_gray_lattice(seed, w, h, seed_mul, cell_mul), codec)
+
+
 def encode_image_assets(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -6372,36 +5642,12 @@ def encode_image_assets(
     streams. ``seed_col`` decouples the content seed from the asset id so
     near-duplicate pairs can be PLANTED (two ids sharing a seed get
     identical pixels under different codecs — the phash-pairs gate)."""
-    spark = df.sparkSession
-    _ship_package(spark)
-    seed_col = seed_col or id_col
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pipes_spark.operators.multimodal import (
-            block_gray_lattice,
-            encode_pixels,
-        )
-
-        for pdf in batches:
-            blobs = []
-            for s, w, h, codec in zip(
-                pdf[seed_col], pdf[width_col], pdf[height_col], pdf[codec_col]
-            ):
-                px = block_gray_lattice(
-                    int(s), int(w), int(h), seed_mul, cell_mul
-                )
-                blobs.append(encode_pixels(px, str(codec)))
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col].astype("int64"),
-                    "content": blobs,
-                }
-            )
-
-    cols = [id_col, width_col, height_col, codec_col]
-    if seed_col != id_col:
-        cols.append(seed_col)
-    return df.select(*cols).mapInPandas(gen, "asset_id bigint, content binary")
+    seed_col = None if seed_col == id_col else seed_col
+    return _encode_assets(
+        df,
+        [id_col, width_col, height_col, codec_col, seed_col],
+        partial(_block_image_asset, seed_mul, cell_mul),
+    )
 
 
 def png_encode_array(px) -> bytes:
@@ -6428,21 +5674,7 @@ def gif_encode_array(px) -> bytes:
     """GIF89a of an arbitrary (h, w) uint8 array under the 256-entry
     grayscale-identity global color table (palette red channel == pixel
     value, the :func:`gif_decode_gray` contract)."""
-    import struct
-
-    h, w = px.shape
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HHBBB", w, h, 0xF7, 0, 0)
-    out += bytes(j for j in range(256) for _ in range(3))
-    out += b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, 0)
-    out.append(8)
-    lzw = _gif_lzw_encode(px.tobytes(), 8)
-    for i in range(0, len(lzw), 255):
-        chunk = lzw[i : i + 255]
-        out.append(len(chunk))
-        out += chunk
-    out += b"\x00\x3b"
-    return bytes(out)
+    return _gif_image(px)
 
 
 def encode_pixels(px, codec: str) -> bytes:
@@ -6455,6 +5687,15 @@ def encode_pixels(px, codec: str) -> bytes:
     if codec == "jpeg":
         return jpeg_encode_gray(px)
     raise ValueError(f"unknown codec {codec!r}")
+
+
+def _pixel_asset(width, height, seed_mul, pos_mul, hit_mod, _aid, seed, delta, codec):
+    import numpy as np
+
+    p = np.arange(width * height, dtype=np.int64)
+    mul = pos_mul + 2 * (seed % 13)
+    v = (seed * seed_mul + p * mul + delta * (p % hit_mod == 0)) % 256
+    return encode_pixels(v.astype(np.uint8).reshape(height, width), codec)
 
 
 def encode_pixel_assets(
@@ -6481,34 +5722,10 @@ def encode_pixel_assets(
     The fixture generator behind the real-mode phash gate (catalog
     ``multimodal_phash_pairs``); the oracle recomputes the same lattice
     closed-form."""
-    spark = df.sparkSession
-    _ship_package(spark)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from pipes_spark.operators.multimodal import encode_pixels
-
-        p = np.arange(width * height, dtype=np.int64)
-        hits = (p % hit_mod == 0).astype(np.int64)
-        for pdf in batches:
-            blobs = []
-            for s, dlt, codec in zip(
-                pdf[seed_col], pdf[delta_col], pdf[codec_col]
-            ):
-                mul = pos_mul + 2 * (int(s) % 13)
-                v = (int(s) * seed_mul + p * mul + int(dlt) * hits) % 256
-                px = v.astype(np.uint8).reshape(height, width)
-                blobs.append(encode_pixels(px, str(codec)))
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col].astype("int64"),
-                    "content": blobs,
-                }
-            )
-
-    return df.select(id_col, seed_col, delta_col, codec_col).mapInPandas(
-        gen, "asset_id bigint, content binary"
+    return _encode_assets(
+        df,
+        [id_col, seed_col, delta_col, codec_col],
+        partial(_pixel_asset, width, height, seed_mul, pos_mul, hit_mod),
     )
 
 
@@ -6673,6 +5890,17 @@ def jpeg_encode_color(
     return bytes(out)
 
 
+def _gray_rgb(aid, w, h):
+    """R = G = B = the :func:`jpeg_block_gray` lattice (Cb = Cr = 128)."""
+    import numpy as np
+
+    return np.stack([jpeg_block_gray(aid, w, h)] * 3, axis=2)
+
+
+def _jpeg_color_asset(aid, w, h, subsample):
+    return jpeg_encode_color(_gray_rgb(aid, w, h), subsample)
+
+
 def encode_jpeg_color_assets(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -6685,32 +5913,21 @@ def encode_jpeg_color_assets(
     lattice, so Cb = Cr = 128 exactly and the lossy pipeline is
     bit-exact): (id, width, height, subsample '420'|'444') →
     (id, content binary)."""
-    spark = df.sparkSession
-    _ship_package(spark)
+    cols = [id_col, width_col, height_col, subsample_col]
+    return _encode_assets(df, cols, _jpeg_color_asset)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
 
-        from pipes_spark.operators.multimodal import (
-            jpeg_block_gray,
-            jpeg_encode_color,
-        )
+def _jpeg_color_stats_row(aid, content):
+    import numpy as np
 
-        for pdf in batches:
-            blobs = []
-            for i, w, h, sub in zip(
-                pdf[id_col], pdf[width_col], pdf[height_col], pdf[subsample_col]
-            ):
-                gray = jpeg_block_gray(int(i), int(w), int(h))
-                rgb = np.stack([gray] * 3, axis=2)
-                blobs.append(jpeg_encode_color(rgb, str(sub)))
-            yield pd.DataFrame(
-                {"asset_id": pdf[id_col].astype("int64"), "content": blobs}
-            )
-
-    return df.select(id_col, width_col, height_col, subsample_col).mapInPandas(
-        gen, "asset_id bigint, content binary"
-    )
+    fmt, _w, _h, _d, ncomp = sniff_image_header(content)
+    if fmt != "jpeg":
+        raise ValueError(f"asset {aid}: not a JPEG")
+    px = jpeg_decode(content)
+    if px.ndim != 3:
+        raise ValueError(f"asset {aid}: expected a color JPEG")
+    h, w = px.shape[:2]
+    return [(aid, fmt, w, h, ncomp, h * w, px.sum(dtype=np.int64))]
 
 
 def jpeg_color_decode_stats(assets: DataFrame) -> DataFrame:
@@ -6720,46 +5937,10 @@ def jpeg_color_decode_stats(assets: DataFrame) -> DataFrame:
     width, height, n_components, n_pixels, pixel_sum). A hash-match
     against the closed-form oracle certifies the color pipeline
     end to end (catalog ``multimodal_jpeg_color_roundtrip``)."""
-    spark = assets.sparkSession
-    _ship_package(spark)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from pipes_spark.operators.multimodal import (
-            jpeg_decode,
-            sniff_image_header,
-        )
-
-        for pdf in batches:
-            out = {
-                "asset_id": [],
-                "format": [],
-                "width": [],
-                "height": [],
-                "n_components": [],
-                "n_pixels": [],
-                "pixel_sum": [],
-            }
-            for aid, content in zip(pdf["asset_id"], pdf["content"]):
-                b = bytes(content)
-                fmt, _w, _h, _d, ncomp = sniff_image_header(b)
-                if fmt != "jpeg":
-                    raise ValueError(f"asset {aid}: not a JPEG")
-                px = jpeg_decode(b)
-                if px.ndim != 3:
-                    raise ValueError(f"asset {aid}: expected a color JPEG")
-                out["asset_id"].append(int(aid))
-                out["format"].append(fmt)
-                out["width"].append(int(px.shape[1]))
-                out["height"].append(int(px.shape[0]))
-                out["n_components"].append(int(ncomp))
-                out["n_pixels"].append(int(px.shape[0] * px.shape[1]))
-                out["pixel_sum"].append(int(px.sum(dtype=np.int64)))
-            yield pd.DataFrame(out)
-
-    return assets.mapInPandas(
-        gen,
+    return _map_rows(
+        assets,
+        ["asset_id", "content"],
+        _jpeg_color_stats_row,
         "asset_id bigint, format string, width int, height int, "
         "n_components int, n_pixels bigint, pixel_sum bigint",
     )
@@ -7196,6 +6377,11 @@ _JPEG_PROG_DEEP_SCANS = (
 )
 
 
+def _jpeg_progressive_asset(aid, w, h, deep=False):
+    kw = {"scans": _JPEG_PROG_DEEP_SCANS} if deep else {}
+    return jpeg_encode_progressive(jpeg_block_gray(aid, w, h), **kw)
+
+
 def encode_jpeg_progressive_assets(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -7209,36 +6395,8 @@ def encode_jpeg_progressive_assets(
     9-scan split-band successive-approximation ladder; default is the
     4-scan script — so BOTH real-world script shapes run under the
     gate."""
-    spark = df.sparkSession
-    _ship_package(spark)
-    cols = [id_col, width_col, height_col]
-    if deep_col is not None:
-        cols.append(deep_col)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pipes_spark.operators.multimodal import (
-            _JPEG_PROG_DEEP_SCANS,
-            jpeg_block_gray,
-            jpeg_encode_progressive,
-        )
-
-        for pdf in batches:
-            deep = (
-                pdf[deep_col] if deep_col is not None else [False] * len(pdf)
-            )
-            blobs = []
-            for i, w, h, d in zip(
-                pdf[id_col], pdf[width_col], pdf[height_col], deep
-            ):
-                px = jpeg_block_gray(int(i), int(w), int(h))
-                kw = {"scans": _JPEG_PROG_DEEP_SCANS} if bool(d) else {}
-                blobs.append(jpeg_encode_progressive(px, **kw))
-            yield pd.DataFrame(
-                {"asset_id": pdf[id_col].astype("int64"), "content": blobs}
-            )
-
-    return df.select(*cols).mapInPandas(
-        gen, "asset_id bigint, content binary"
+    return _encode_assets(
+        df, [id_col, width_col, height_col, deep_col], _jpeg_progressive_asset
     )
 
 
@@ -7256,6 +6414,11 @@ _JPEG_PROG_COLOR_DEEP_SCANS = (
 )
 
 
+def _jpeg_progressive_color_asset(aid, w, h, subsample, deep=False):
+    kw = {"scans": _JPEG_PROG_COLOR_DEEP_SCANS} if deep else {}
+    return jpeg_encode_progressive_color(_gray_rgb(aid, w, h), subsample, **kw)
+
+
 def encode_jpeg_progressive_color_assets(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -7269,45 +6432,8 @@ def encode_jpeg_progressive_color_assets(
     bit-exact lossy pipeline): (id, width, height, subsample
     '420'|'422'|'444'[, deep]) → (id, content binary). ``deep_col``
     switches those images to the 15-scan split-band ladder."""
-    spark = df.sparkSession
-    _ship_package(spark)
-    cols = [id_col, width_col, height_col, subsample_col]
-    if deep_col is not None:
-        cols.append(deep_col)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from pipes_spark.operators.multimodal import (
-            _JPEG_PROG_COLOR_DEEP_SCANS,
-            jpeg_block_gray,
-            jpeg_encode_progressive_color,
-        )
-
-        for pdf in batches:
-            deep = (
-                pdf[deep_col] if deep_col is not None else [False] * len(pdf)
-            )
-            blobs = []
-            for i, w, h, sub, d in zip(
-                pdf[id_col], pdf[width_col], pdf[height_col],
-                pdf[subsample_col], deep,
-            ):
-                gray = jpeg_block_gray(int(i), int(w), int(h))
-                rgb = np.stack([gray] * 3, axis=2)
-                kw = (
-                    {"scans": _JPEG_PROG_COLOR_DEEP_SCANS} if bool(d) else {}
-                )
-                blobs.append(
-                    jpeg_encode_progressive_color(rgb, str(sub), **kw)
-                )
-            yield pd.DataFrame(
-                {"asset_id": pdf[id_col].astype("int64"), "content": blobs}
-            )
-
-    return df.select(*cols).mapInPandas(
-        gen, "asset_id bigint, content binary"
-    )
+    cols = [id_col, width_col, height_col, subsample_col, deep_col]
+    return _encode_assets(df, cols, _jpeg_progressive_color_asset)
 
 
 def jpeg_encode_progressive_color(
@@ -8063,6 +7189,12 @@ def jpeg_encode_arith(
     return bytes(out)
 
 
+def _jpeg_arith_asset(aid, w, h, restart_interval=0, ac_kx=5):
+    return jpeg_encode_arith(
+        jpeg_block_gray(aid, w, h), restart_interval=restart_interval, ac_kx=ac_kx
+    )
+
+
 def encode_jpeg_arith_assets(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -8079,50 +7211,9 @@ def encode_jpeg_arith_assets(
     band-split magnitude bins — both decoded back by the SAME
     :func:`jpeg_decode_stats` the Huffman modes use (dispatch via SOF9
     in :func:`jpeg_decode`). Pixels never cross a shuffle."""
-    spark = df.sparkSession
-    _ship_package(spark)
-    cols = [id_col, width_col, height_col]
-    if restart_col is not None:
-        cols.append(restart_col)
-    if kx_col is not None:
-        cols.append(kx_col)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pipes_spark.operators.multimodal import (
-            jpeg_block_gray,
-            jpeg_encode_arith,
-        )
-
-        for pdf in batches:
-            ri = (
-                pdf[restart_col]
-                if restart_col is not None
-                else [0] * len(pdf)
-            )
-            kx = pdf[kx_col] if kx_col is not None else [5] * len(pdf)
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col].astype("int64"),
-                    "content": [
-                        jpeg_encode_arith(
-                            jpeg_block_gray(int(i), int(w), int(h)),
-                            restart_interval=int(r),
-                            ac_kx=int(k),
-                        )
-                        for i, w, h, r, k in zip(
-                            pdf[id_col],
-                            pdf[width_col],
-                            pdf[height_col],
-                            ri,
-                            kx,
-                        )
-                    ],
-                }
-            )
-
-    return df.select(*cols).mapInPandas(
-        gen, "asset_id bigint, content binary"
-    )
+    # lit(0) keeps kx_col in its position when restart_col is unset
+    cols = [id_col, width_col, height_col, restart_col or F.lit(0), kx_col]
+    return _encode_assets(df, cols, _jpeg_arith_asset)
 
 
 # --------------------------------------------------------------------------
@@ -9067,6 +8158,16 @@ def flac_decode(content: bytes, label: str = "asset", frame_table=None):
     return out, nch, rate, bps, total, md5_ok
 
 
+def _flac_asset(aid, n_samples, rate, ch, stereo_mode="independent", block_size=192):
+    return flac_encode_pcm16(
+        _lattice_pcm16(aid, n_samples * ch),
+        rate,
+        channels=ch,
+        block_size=block_size,
+        stereo_mode=stereo_mode,
+    )
+
+
 def encode_flac_assets(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -9083,45 +8184,22 @@ def encode_flac_assets(
     stereo modes exercise all three decorrelation reconstructions and
     per-row block sizes exercise both table-coded and end-of-header
     block-size forms under the gate."""
-    spark = df.sparkSession
-    _ship_package(spark)
     cols = [id_col, n_samples_col, rate_col, channels_col]
-    if mode_col is not None:
-        cols.append(mode_col)
-    if block_col is not None:
-        cols.append(block_col)
+    # the lit keeps block_col in its position when mode_col is unset
+    cols += [mode_col or F.lit("independent"), block_col]
+    return _encode_assets(df, cols, _flac_asset)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
 
-        from pipes_spark.operators.multimodal import flac_encode_pcm16
+def _flac_stats_row(aid, content):
+    import numpy as np
 
-        for pdf in batches:
-            modes = (
-                pdf[mode_col] if mode_col is not None
-                else ["independent"] * len(pdf)
-            )
-            blocks = pdf[block_col] if block_col is not None else [192] * len(pdf)
-            blobs = []
-            for i, ns, rate, ch, mode, bs in zip(
-                pdf[id_col], pdf[n_samples_col], pdf[rate_col],
-                pdf[channels_col], modes, blocks,
-            ):
-                n = int(ns) * int(ch)
-                sig = ((np.arange(n, dtype=np.int64) + int(i)) * 2557) % 65536 - 32768
-                blobs.append(
-                    flac_encode_pcm16(
-                        sig, int(rate), channels=int(ch),
-                        block_size=int(bs), stereo_mode=str(mode),
-                    )
-                )
-            yield pd.DataFrame(
-                {"asset_id": pdf[id_col].astype("int64"), "content": blobs}
-            )
-
-    return df.select(*cols).mapInPandas(
-        gen, "asset_id bigint, content binary"
+    samples, nch, rate, bps, total, md5_ok = flac_decode(
+        content, label=f"asset {aid}"
     )
+    return [
+        (aid, "flac", nch, rate, bps, total, samples.sum(dtype=np.int64),
+         np.abs(samples).max(), md5_ok)
+    ]
 
 
 def flac_decode_stats(assets: DataFrame) -> DataFrame:
@@ -9133,37 +8211,10 @@ def flac_decode_stats(assets: DataFrame) -> DataFrame:
     sample_abs_max, md5_ok). A hash-match against the closed-form
     lattice oracle with md5_ok = TRUE certifies byte-exact lossless
     reconstruction — the strongest decode proof in the audio family."""
-    spark = assets.sparkSession
-    _ship_package(spark)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from pipes_spark.operators.multimodal import flac_decode
-
-        for pdf in batches:
-            out = {k: [] for k in (
-                "asset_id", "format", "n_channels", "sample_rate",
-                "bit_depth", "n_samples", "sample_sum", "sample_abs_max",
-                "md5_ok",
-            )}
-            for aid, content in zip(pdf["asset_id"], pdf["content"]):
-                samples, nch, rate, bps, total, md5_ok = flac_decode(
-                    bytes(content), label=f"asset {aid}"
-                )
-                out["asset_id"].append(int(aid))
-                out["format"].append("flac")
-                out["n_channels"].append(int(nch))
-                out["sample_rate"].append(int(rate))
-                out["bit_depth"].append(int(bps))
-                out["n_samples"].append(int(total))
-                out["sample_sum"].append(int(samples.sum(dtype=np.int64)))
-                out["sample_abs_max"].append(int(np.abs(samples).max()))
-                out["md5_ok"].append(bool(md5_ok))
-            yield pd.DataFrame(out)
-
-    return assets.mapInPandas(
-        gen,
+    return _map_rows(
+        assets,
+        ["asset_id", "content"],
+        _flac_stats_row,
         "asset_id bigint, format string, n_channels int, sample_rate int, "
         "bit_depth int, n_samples bigint, sample_sum bigint, "
         "sample_abs_max bigint, md5_ok boolean",
@@ -9390,6 +8441,10 @@ def flv_screen_block_frames(
     return frames
 
 
+def _flv_screen_asset(aid, w, h, n_frames):
+    return flv_screen_encode(flv_screen_block_frames(aid, w, h, n_frames))
+
+
 def encode_flv_screen_assets(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -9400,36 +8455,19 @@ def encode_flv_screen_assets(
     """Arrow-batched REAL FLV/Screen-Video encode of the deterministic
     inter-frame lattice: (id, width, height, n_frames) → (id, content
     binary). Pixels never cross a shuffle."""
-    spark = df.sparkSession
-    _ship_package(spark)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pipes_spark.operators.multimodal import (
-            flv_screen_block_frames,
-            flv_screen_encode,
-        )
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf[id_col].astype("int64"),
-                    "content": [
-                        flv_screen_encode(
-                            flv_screen_block_frames(
-                                int(i), int(w), int(h), int(n)
-                            )
-                        )
-                        for i, w, h, n in zip(
-                            pdf[id_col], pdf[width_col], pdf[height_col],
-                            pdf[frames_col],
-                        )
-                    ],
-                }
-            )
-
-    return df.select(id_col, width_col, height_col, frames_col).mapInPandas(
-        gen, "asset_id bigint, content binary"
+    return _encode_assets(
+        df, [id_col, width_col, height_col, frames_col], _flv_screen_asset
     )
+
+
+def _flv_frame_rows(aid, content):
+    import numpy as np
+
+    frames = flv_screen_decode(content, label=f"asset {aid}")
+    return [
+        (aid, fno, f.shape[1], f.shape[0], updated, f[:, :, 0].sum(dtype=np.int64))
+        for fno, (_ts, f, updated) in enumerate(frames)
+    ]
 
 
 def flv_screen_frame_stats(assets: DataFrame) -> DataFrame:
@@ -9440,35 +8478,10 @@ def flv_screen_frame_stats(assets: DataFrame) -> DataFrame:
     only the changed block, every frame's sum can only be right if the
     canvas persisted every earlier update — the inter-frame contract
     the hash gate certifies."""
-    spark = assets.sparkSession
-    _ship_package(spark)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from pipes_spark.operators.multimodal import flv_screen_decode
-
-        for pdf in batches:
-            out = {k: [] for k in (
-                "asset_id", "frame_no", "width", "height",
-                "n_blocks_updated", "pixel_sum",
-            )}
-            for aid, content in zip(pdf["asset_id"], pdf["content"]):
-                for fno, (_ts, frame, updated) in enumerate(
-                    flv_screen_decode(bytes(content), label=f"asset {aid}")
-                ):
-                    out["asset_id"].append(int(aid))
-                    out["frame_no"].append(fno)
-                    out["height"].append(int(frame.shape[0]))
-                    out["width"].append(int(frame.shape[1]))
-                    out["n_blocks_updated"].append(int(updated))
-                    out["pixel_sum"].append(
-                        int(frame[:, :, 0].sum(dtype=np.int64))
-                    )
-            yield pd.DataFrame(out)
-
-    return assets.mapInPandas(
-        gen,
+    return _map_rows(
+        assets,
+        ["asset_id", "content"],
+        _flv_frame_rows,
         "asset_id bigint, frame_no int, width int, height int, "
         "n_blocks_updated int, pixel_sum bigint",
     )
@@ -9601,6 +8614,20 @@ def flac_parse_metadata(content: bytes, label: str = "asset"):
     return out
 
 
+def _flac_tagged_asset(i, n_samples):
+    raw = flac_encode_pcm16(_lattice_pcm16(i, n_samples), 16000, block_size=192)
+    return flac_add_metadata(
+        raw,
+        tags=[
+            ("TITLE", f"doc_{i}"),
+            ("ARTIST", f"artist_{i % 7}"),
+            ("TRACKNUMBER", str(i % 12 + 1)),
+        ],
+        seek_every=1,
+        padding=16,
+    )
+
+
 def encode_flac_tagged_assets(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -9609,42 +8636,28 @@ def encode_flac_tagged_assets(
     """Arrow-batched FLAC encode with metadata: the lattice signal
     (mono, 16 kHz, block 192) plus per-doc Vorbis comments and a
     per-frame seek table: (id, n_samples) → (id, content binary)."""
-    spark = df.sparkSession
-    _ship_package(spark)
+    return _encode_assets(df, [id_col, n_samples_col], _flac_tagged_asset)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
 
-        from pipes_spark.operators.multimodal import (
-            flac_add_metadata,
-            flac_encode_pcm16,
-        )
-
-        for pdf in batches:
-            blobs = []
-            for i, ns in zip(pdf[id_col], pdf[n_samples_col]):
-                i, ns = int(i), int(ns)
-                sig = ((np.arange(ns, dtype=np.int64) + i) * 2557) % 65536 - 32768
-                raw = flac_encode_pcm16(sig, 16000, block_size=192)
-                blobs.append(
-                    flac_add_metadata(
-                        raw,
-                        tags=[
-                            ("TITLE", f"doc_{i}"),
-                            ("ARTIST", f"artist_{i % 7}"),
-                            ("TRACKNUMBER", str(i % 12 + 1)),
-                        ],
-                        seek_every=1,
-                        padding=16,
-                    )
-                )
-            yield pd.DataFrame(
-                {"asset_id": pdf[id_col].astype("int64"), "content": blobs}
-            )
-
-    return df.select(id_col, n_samples_col).mapInPandas(
-        gen, "asset_id bigint, content binary"
-    )
+def _flac_metadata_rows(aid, b):
+    *_, md5_ok = flac_decode(b, label=f"asset {aid}")
+    if not md5_ok:
+        raise ValueError(f"asset {aid}: audio corrupted by splice")
+    rows = []
+    for entry in flac_parse_metadata(b, label=f"asset {aid}"):
+        if entry["type"] == "VORBIS_COMMENT":
+            rows.append(("VORBIS_COMMENT", "vendor", entry["vendor"]))
+            for k, v in entry["comments"]:
+                rows.append(("VORBIS_COMMENT", k, v))
+        elif entry["type"] == "SEEKTABLE":
+            for i, (sn, _off, cnt) in enumerate(entry["points"]):
+                rows.append(("SEEKTABLE", f"seekpoint_{i}", f"{sn}/{cnt}"))
+        elif entry["type"] == "PADDING":
+            rows.append(("PADDING", "length", str(entry["length"])))
+    # emit per-asset rows in (block_type, item) string order — the
+    # catalog query's output order contract, so the range-sorted input
+    # needs no final orderBy (same multiset)
+    return [(aid, *r) for r in sorted(rows, key=lambda r: (r[0], r[1]))]
 
 
 def flac_metadata_rows(assets: DataFrame) -> DataFrame:
@@ -9657,45 +8670,9 @@ def flac_metadata_rows(assets: DataFrame) -> DataFrame:
     closed-form oracle); padding → its length. The decoded stream
     itself is additionally MD5-verified so the metadata splice is
     proven not to corrupt audio."""
-    spark = assets.sparkSession
-    _ship_package(spark)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pipes_spark.operators.multimodal import (
-            flac_decode,
-            flac_parse_metadata,
-        )
-
-        for pdf in batches:
-            out = {k: [] for k in ("asset_id", "block_type", "item", "value")}
-
-            for aid, content in zip(pdf["asset_id"], pdf["content"]):
-                b = bytes(content)
-                *_, md5_ok = flac_decode(b, label=f"asset {aid}")
-                if not md5_ok:
-                    raise ValueError(f"asset {aid}: audio corrupted by splice")
-                rows = []
-                for entry in flac_parse_metadata(b, label=f"asset {aid}"):
-                    if entry["type"] == "VORBIS_COMMENT":
-                        rows.append(("VORBIS_COMMENT", "vendor", entry["vendor"]))
-                        for k, v in entry["comments"]:
-                            rows.append(("VORBIS_COMMENT", k, v))
-                    elif entry["type"] == "SEEKTABLE":
-                        for i, (sn, _off, cnt) in enumerate(entry["points"]):
-                            rows.append(("SEEKTABLE", f"seekpoint_{i}",
-                                         f"{sn}/{cnt}"))
-                    elif entry["type"] == "PADDING":
-                        rows.append(("PADDING", "length", str(entry["length"])))
-                # emit per-asset rows in (block_type, item) string order —
-                # the catalog query's output order contract, so the
-                # range-sorted input needs no final orderBy (same multiset)
-                for bt, item, value in sorted(rows, key=lambda r: (r[0], r[1])):
-                    out["asset_id"].append(int(aid))
-                    out["block_type"].append(bt)
-                    out["item"].append(item)
-                    out["value"].append(value)
-            yield pd.DataFrame(out)
-
-    return assets.mapInPandas(
-        gen, "asset_id bigint, block_type string, item string, value string"
+    return _map_rows(
+        assets,
+        ["asset_id", "content"],
+        _flac_metadata_rows,
+        "asset_id bigint, block_type string, item string, value string",
     )

@@ -13,7 +13,8 @@ stages). A sink whose fn returns a ``StreamingQuery`` is awaited via
 
 from __future__ import annotations
 
-from concurrent.futures import Future, ThreadPoolExecutor
+import time
+from concurrent.futures import Future, ThreadPoolExecutor, wait
 from dataclasses import dataclass
 from typing import Any, Callable, Optional
 
@@ -74,18 +75,41 @@ class Runner:
         finite (``availableNow``) streaming pipeline completes like a batch
         one — the analog of channel-close cascading to the sinks
         (ref: pipe/internal/connect/connectors.go:36-41).
+
+        ``timeout`` is ONE deadline for all sinks, not a per-sink wait. When
+        it passes, ``TimeoutError`` is raised and nothing is torn down: the
+        sinks keep running, the shared fan-out caches stay persisted, and a
+        later ``done()`` still collects every result.
         """
         if not self._started:
             raise PipelineError("runner not started; call start() first")
+        deadline = None if timeout is None else time.monotonic() + timeout
+
+        def left() -> Optional[float]:
+            return None if deadline is None else max(0.0, deadline - time.monotonic())
+
+        pending = wait(self._futures.values(), timeout=timeout).not_done
+        if pending:
+            names = sorted(n for n, f in self._futures.items() if f in pending)
+            raise TimeoutError(f"sinks still running after {timeout}s: {names}")
         failures: dict[str, BaseException] = {}
+        stalled: list[str] = []
         for name, fut in self._futures.items():
             try:
-                res = fut.result(timeout=timeout)
+                res = fut.result()
                 if hasattr(res, "awaitTermination"):  # StreamingQuery sink
-                    res.awaitTermination()
+                    rest = left()
+                    if rest is not None and res.isActive and not (
+                        rest > 0 and res.awaitTermination(rest)
+                    ):
+                        stalled.append(name)
+                        continue
+                    res.awaitTermination()  # raises the query's error, if any
                 self._results[name] = res
             except Exception as e:  # noqa: BLE001 — aggregate all sink errors
                 failures[name] = e
+        if stalled:
+            raise TimeoutError(f"streaming sinks still running after {timeout}s: {stalled}")
         if self._executor is not None:
             self._executor.shutdown(wait=False)
         for df in self._persisted:

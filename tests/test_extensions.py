@@ -1117,3 +1117,35 @@ def test_bpe_segment_applies_learned_merges(spark):
         if tok.endswith("</w>"):
             break
     assert n_low_tokens < len("low") + 1
+
+
+@pytest.mark.parametrize(
+    "row_fn, expected",
+    [
+        # 1→0 inside a NON-empty batch: odd ids emit nothing
+        (lambda aid, n: [(aid, n)] if aid % 2 == 0 else [], [(0, 0), (2, 2), (4, 1)]),
+        # 1→N with a null in a bigint column: values past 2^53 stay exact
+        (
+            lambda aid, n: [(aid, k * 2**60 + aid if k else None) for k in range(n)],
+            [(1, None), (2, None), (2, 2**60 + 2), (4, None), (5, None), (5, 2**60 + 5)],
+        ),
+        # every row → 0: the batch is emitted empty but typed
+        (lambda aid, n: [], []),
+    ],
+    ids=["one_to_zero", "one_to_n_nulls", "all_empty"],
+)
+def test_map_rows_row_contract(spark, row_fn, expected):
+    """``_map_rows`` — the plumbing under every per-row codec wrapper —
+    turns each input row into the 0..n tuples its kernel returns."""
+    from pipes_spark.operators.multimodal import _map_rows
+
+    df = spark.createDataFrame(
+        [(i, i % 3) for i in range(6)], "asset_id bigint, n int"
+    ).coalesce(1)  # one batch holding kept AND dropped rows
+    out = _map_rows(df, ["asset_id", "n", None], row_fn, "asset_id bigint, v bigint")
+    assert out.schema.simpleString() == "struct<asset_id:bigint,v:bigint>"
+
+    def key(r):
+        return r[0], r[1] is not None, r[1] or 0
+
+    assert sorted(((r.asset_id, r.v) for r in out.collect()), key=key) == expected

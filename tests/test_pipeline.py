@@ -445,3 +445,44 @@ def test_fanout_disk_storage_level(spark):
 
     with pytest.raises(GraphError):
         Pipeline(G, spark=spark, fanout_storage="tape")
+
+
+def test_done_timeout_keeps_fanout_running(spark):
+    """``done(timeout)`` is one deadline: when it passes, the runner raises
+    without tearing anything down — the shared fan-out cache stays
+    persisted while a slow sink still reads it, and a later ``done()``
+    collects every sink's result."""
+    import threading
+
+    from pyspark import StorageLevel
+
+    release = threading.Event()
+    captured = {}
+
+    class G(NodesMap):
+        src = Start()
+        shared = Middle()
+        fast = Final()
+        slow = Final()
+
+        def connect(self):
+            self.src.send_to(self.shared)
+            self.shared.send_to(self.fast, self.slow)
+
+    def slow(df):
+        captured["df"] = df
+        release.wait(60)
+        return df.count()
+
+    p = Pipeline(G, spark=spark)
+    p.add_start("src", ints_source(1, 2, 3))
+    p.add_middle("shared", lambda df: df.select((F.col("n") * 2).alias("n")))
+    p.add_final("fast", lambda df: sum(r.n for r in df.collect()))
+    p.add_final("slow", slow)
+    r = p.build().start()
+    with pytest.raises(TimeoutError):
+        r.done(timeout=0.5)
+    assert captured["df"].storageLevel != StorageLevel.NONE  # still held
+    release.set()
+    assert r.done(timeout=60) == {"fast": 12, "slow": 3}
+    assert captured["df"].storageLevel == StorageLevel.NONE  # released at the end

@@ -7,7 +7,7 @@ strategies, whole-stage-codegen spans, any cartesian fallback) — the
 ".explain and iterate" audit trail, kept as a committed artifact so plan
 regressions show up in review diffs.
 
-Usage: python tools/plan_report.py [query ...]   (default: headline set)
+Usage: python tools/plan_report.py [query ...]   (default: HEADLINE below)
 """
 
 from __future__ import annotations
@@ -20,73 +20,21 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
-#: the full bench.py headline set (in bench order), plus a few
-#: plan-shape-interesting extras kept from earlier rounds
-HEADLINE = [
-    "q1_pricing_summary",
-    "q6_forecast_revenue",
-    "q3_shipping_priority",
-    "q3_bucketed_colocated",
-    "q5_local_supplier_volume",
-    "q8_market_share",
-    "q10_returned_items",
-    "q18_large_volume",
-    "q21_waiting_supplier",
-    "subquery_exists",
-    "subquery_scalar_corr",
-    "join_inner_agg",
-    "join_asof",
-    "agg_stats",
-    "grouping_cube",
-    "window_frames",
-    "topk_per_group",
-    "events_hourly",
-    "sessionize_stats",
-    "ts_ewma",
-    "stats_mad_outliers",
-    "stats_histogram",
-    "scalar_array_explode",
-    "dedup_keyed",
-    "text_quality",
-    "dedup_minhash_lsh",
-    "dedup_lsh_verified",
-    "dedup_simhash",
-    "sim_cosine_topk",
-    "sim_cosine_neardup",
-    "sim_lsh_topk",
-    "sim_ivf_topk",
-    "sim_ivf_indexed",
-    "sim_ivfpq_indexed",
-    "sim_quantized_topk",
-    "text_tfidf",
-    "udf_grouped_zscore",
-    "streaming_events_hourly",
-    "streaming_stateful_totals",
-    # plan-shape extras
+import bench  # noqa: E402 — side-effect free; its main() sits behind __main__
+
+#: the bench.py measured sets (headline, then extended, in bench order),
+#: plus plan-shape-interesting queries the bench does not time
+HEADLINE = bench.HEADLINE + bench.EXTENDED + [
     "q17_small_quantity_revenue",
     "graph_shortest_paths",
     "ml_auc_roc",
     "sample_shard_assignment",
     "text_vocab_oov",
     "stats_chi_square",
-    # round-9 second-wave additions
-    "sketch_theta_diff",
     "sample_rendezvous_reshard",
     "quality_l_diversity",
     "stats_cramers_v",
     "ts_ljung_box",
-    # round-10 additions: the bench EXTENDED section (ingest-artifact
-    # read paths + codec round trips) and the LLM-core graded rotations
-    "text_phrase_indexed",
-    "text_kn_perplexity_indexed",
-    "source_avro_roundtrip",
-    "source_avro_evolution",
-    "multimodal_png_roundtrip",
-    "multimodal_gif_roundtrip",
-    "multimodal_jpeg_roundtrip",
-    "multimodal_wav_roundtrip",
-    "multimodal_audio_features",
-    "multimodal_video_frame_sample",
     "dedup_remove_spans",
     "dedup_duplicated_spans",
     "dedup_containment",
@@ -95,12 +43,6 @@ HEADLINE = [
     "text_boilerplate",
     "entity_resolution",
     "ml_threshold_sweep",
-    "multimodal_cross_codec_ahash",
-    "multimodal_jpeg_color_roundtrip",
-    "multimodal_jpeg_progressive_roundtrip",
-    "dedup_prefix_doubling",
-    # round-11 additions: the rotated-in graded families + the new
-    # real-mode multimodal gates and the snappy avro round trip
     "geo_nearest_poi",
     "geo_trajectory_pairs",
     "graph_triangles",
@@ -112,18 +54,8 @@ HEADLINE = [
     "multimodal_features",
     "multimodal_phash_pairs",
     "multimodal_resize",
-    "source_avro_snappy_roundtrip",
-    # round-11 second session: the new codec/metadata families
-    "multimodal_adpcm_roundtrip",
-    "multimodal_aiff_roundtrip",
-    "multimodal_bmp_roundtrip",
-    "multimodal_tiff_roundtrip",
-    "multimodal_video_rle_frame_sample",
-    "multimodal_jpeg_lossless_roundtrip",
-    "multimodal_jpeg_hierarchical_roundtrip",
     "multimodal_png_filters_roundtrip",
     "multimodal_wav_depths_roundtrip",
-    "multimodal_exif_metadata",
     "multimodal_subtitle_cues",
 ]
 
