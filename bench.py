@@ -268,9 +268,11 @@ def main() -> None:
         "queries_warm_runs": {n: [round(x, 3) for x in rs] for n, rs in runs.items()},
         "warm_pass_totals": pass_totals,
     }
-    detail_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json")
+    # under a gitignored directory, so a bench run leaves the checkout clean
+    detail_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".bench_out")
     try:
-        with open(detail_path, "w") as fh:
+        os.makedirs(detail_dir, exist_ok=True)
+        with open(os.path.join(detail_dir, "BENCH_DETAIL.json"), "w") as fh:
             json.dump(detail, fh, indent=1)
     except OSError:
         pass  # detail is best-effort; the headline line below is the contract

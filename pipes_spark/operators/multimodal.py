@@ -34,7 +34,6 @@ shuffles.
 from __future__ import annotations
 
 import os
-import tempfile
 import zipfile
 from functools import partial
 from typing import Iterator
@@ -51,15 +50,22 @@ def _ship_package(spark) -> None:
     Module-level functions referenced from mapInPandas are pickled *by
     reference*, so workers must import this package — which fails when the
     driver process was launched outside the repo. Shipping the package as a
-    zip via addPyFile fixes that for any deployment (local or cluster)."""
+    zip via addPyFile fixes that for any deployment (local or cluster).
+
+    The zip is written under the driver's SparkFiles root, which Spark
+    deletes when the SparkContext stops — it lives exactly as long as the
+    session that serves it. It sits in a subdirectory because addPyFile
+    copies the file into that root itself."""
+    from pyspark import SparkFiles
+
     sc = spark.sparkContext
     if getattr(sc, "_pipes_spark_shipped", False):
         return
     pkg_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     root = os.path.dirname(pkg_dir)
-    zpath = os.path.join(
-        tempfile.gettempdir(), f"pipes_spark_pkg_{os.getpid()}.zip"
-    )
+    out_dir = os.path.join(SparkFiles.getRootDirectory(), "pipes_spark_src")
+    os.makedirs(out_dir, exist_ok=True)
+    zpath = os.path.join(out_dir, "pipes_spark_pkg.zip")
     with zipfile.ZipFile(zpath, "w") as z:
         for dirpath, _dirs, files in os.walk(pkg_dir):
             for f in files:

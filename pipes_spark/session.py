@@ -10,7 +10,8 @@ to the DuckDB correctness oracle).
 from __future__ import annotations
 
 import os
-from typing import Optional
+from contextlib import contextmanager
+from typing import Mapping, Optional
 
 from pyspark.sql import SparkSession
 
@@ -61,6 +62,51 @@ def ensure_protobuf() -> bool:
             except ImportError:
                 continue
     return False
+
+
+#: glibc's cap on malloc arenas for the JVM the factory launches. glibc's
+#: default is 8 arenas per core; the local-mode JVM's ~465 threads spread
+#: over all of them, and each arena keeps freed native memory resident.
+#: On a 4-core host two arenas cut the `relational` benchmark's retained
+#: JVM RSS from a median 676 MB to 599 MB over ten runs each, at unchanged
+#: speed (four arenas, four runs: 611 MB). Hadoop exports the same cap
+#: for its JVMs (HADOOP-7154).
+_MALLOC_ARENA_MAX = "2"
+
+
+def jvm_launch_env(environ: Mapping[str, str]) -> dict:
+    """The environment to launch the gateway JVM with: a copy of
+    ``environ`` plus ``MALLOC_ARENA_MAX=2``. A ``MALLOC_ARENA_MAX`` the
+    caller already set wins. Pure: ``environ`` is not modified. The
+    PySpark daemon and its workers inherit the JVM's environment, so they
+    get the same cap."""
+    env = dict(environ)
+    env.setdefault("MALLOC_ARENA_MAX", _MALLOC_ARENA_MAX)
+    return env
+
+
+@contextmanager
+def _jvm_launch_environ():
+    """Apply :func:`jvm_launch_env` to ``os.environ`` for the block that
+    may launch the JVM, and afterwards remove exactly the keys it added —
+    the driver's own environment is left as it was (the SparkContext's
+    own ``os.environ`` writes during start-up stay). When a JVM is
+    already running nothing changes: its environment was fixed at its
+    launch."""
+    from pyspark import SparkContext
+
+    if SparkContext._gateway is not None:
+        yield
+        return
+    added = {
+        k: v for k, v in jvm_launch_env(os.environ).items() if k not in os.environ
+    }
+    os.environ.update(added)
+    try:
+        yield
+    finally:
+        for k in added:
+            os.environ.pop(k, None)
 
 
 _WORKER_PROTOBUF_STATE: dict = {}
@@ -152,6 +198,13 @@ def get_spark(
     shuffle_partitions: Optional[int] = None,
     extra_conf: Optional[dict] = None,
 ) -> SparkSession:
+    """The process's SparkSession (``getOrCreate``), local[N] by default.
+
+    When this call launches the JVM, it launches it with
+    :func:`jvm_launch_env` (glibc's ``MALLOC_ARENA_MAX=2`` unless the
+    caller set it) and leaves the driver's ``os.environ`` as it was. When
+    a JVM is already running, its environment and any static conf stay
+    as they are."""
     ensure_protobuf()  # before the JVM starts — workers inherit the env
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     master = master or f"local[{cpus}]"
@@ -211,6 +264,7 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    with _jvm_launch_environ():
+        spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

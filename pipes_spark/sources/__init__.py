@@ -61,8 +61,13 @@ def _footer_schema(path: str):
     map straight to TIMESTAMP (``prefer_timestamp_ntz=False``), which
     under the engine's pinned UTC session zone is value-identical to the
     NTZ-read-then-cast path in :func:`normalize_ntz` (raw epoch micros
-    either way). Cached per path."""
-    if path not in _FOOTER_SCHEMAS:
+    either way). Cached per (path, size, mtime), so a file rewritten in
+    place is read with its new schema."""
+    import os
+
+    st = os.stat(path)
+    key = (path, st.st_size, st.st_mtime_ns)
+    if key not in _FOOTER_SCHEMAS:
         import pyarrow as pa
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import from_arrow_schema
@@ -71,11 +76,11 @@ def _footer_schema(path: str):
         naive_ts = any(
             isinstance(f.type, pa.TimestampType) and f.type.tz is None for f in arrow
         )
-        _FOOTER_SCHEMAS[path] = (
+        _FOOTER_SCHEMAS[key] = (
             from_arrow_schema(arrow, prefer_timestamp_ntz=False),
             naive_ts,
         )
-    return _FOOTER_SCHEMAS[path]
+    return _FOOTER_SCHEMAS[key]
 
 
 def read_parquet(spark: SparkSession, path: str, columns: Optional[Sequence[str]] = None) -> DataFrame:

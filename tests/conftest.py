@@ -60,6 +60,44 @@ def job_budget(spark):
 
 
 @pytest.fixture
+def py4j_budget(spark):
+    """Driver→JVM call audit: count the py4j commands the calling thread
+    sends (``ClientServerConnection.send_command``) during a block and
+    assert at most ``max_calls`` — the host-speed-free measure of a
+    query's construction cost. py4j's memory-delete commands (``m\\nd\\n…``)
+    are left out: Python's cyclic GC sends them in bursts of 40–611
+    whenever it frees proxies left by EARLIER requests, which made raw
+    counts drift ~4 % between identical constructions. Without them a
+    construction's count repeats exactly."""
+    import threading
+    from contextlib import contextmanager
+
+    from py4j.clientserver import ClientServerConnection
+
+    @contextmanager
+    def budget(name: str, max_calls: int):
+        me, calls = threading.get_ident(), [0]
+        send = ClientServerConnection.send_command
+
+        def counting(conn, command):
+            if threading.get_ident() == me and not command.startswith("m\nd\n"):
+                calls[0] += 1
+            return send(conn, command)
+
+        ClientServerConnection.send_command = counting
+        try:
+            yield
+        finally:
+            ClientServerConnection.send_command = send
+        assert calls[0] <= max_calls, (
+            f"{name} sent {calls[0]} py4j commands (budget {max_calls}) — "
+            "construction grew more driver→JVM round trips"
+        )
+
+    return budget
+
+
+@pytest.fixture
 def action_audit(spark):
     """EXACT foreground-action audit, the strict complement to
     ``job_budget``: reads the SQL status store's execution counter (one

@@ -1149,3 +1149,25 @@ def test_map_rows_row_contract(spark, row_fn, expected):
         return r[0], r[1] is not None, r[1] or 0
 
     assert sorted(((r.asset_id, r.v) for r in out.collect()), key=key) == expected
+
+
+def test_shipped_package_zip_lives_in_spark_driver_dir(spark):
+    """The package zip handed to addPyFile sits under the driver's
+    SparkFiles root — the directory Spark deletes when the SparkContext
+    stops — not in the system temp directory, where one zip per driver
+    process used to pile up."""
+    import os
+    import tempfile
+
+    from pyspark import SparkFiles
+
+    from pipes_spark.operators.multimodal import _ship_package
+
+    _ship_package(spark)
+    root = SparkFiles.getRootDirectory()
+    driver_tmp = spark._jvm.org.apache.spark.SparkEnv.get().driverTmpDir().get()
+    assert os.path.realpath(root) == os.path.realpath(driver_tmp)
+    assert os.path.isfile(os.path.join(root, "pipes_spark_src", "pipes_spark_pkg.zip"))
+    assert not os.path.exists(
+        os.path.join(tempfile.gettempdir(), f"pipes_spark_pkg_{os.getpid()}.zip")
+    )

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from pipes_spark.catalog import QUERIES
@@ -590,6 +591,30 @@ def test_laziness_exemptions_are_declared_queries():
     """The exemption list must not rot: every entry names a live query."""
     unknown = sorted(set(CONSTRUCTION_JOB_EXEMPT) - set(QUERIES))
     assert not unknown, f"exempt names not in registry: {unknown}"
+
+
+#: py4j commands one warm construction of each ``perfbench`` relational
+#: query sends on the tests' data (memory deletes left out; see
+#: ``py4j_budget``) — the counts repeat exactly. Each round trip costs
+#: ~1 ms of driver time at any data size; lower a budget when a change
+#: cuts its count.
+CONSTRUCTION_PY4J_BUDGET = {
+    "q3_shipping_priority": 156,
+    "q5_local_supplier_volume": 179,
+    "q8_market_share": 311,
+    "q18_large_volume": 212,
+    "subquery_exists": 35,
+}
+
+
+@pytest.mark.parametrize("name", list(CONSTRUCTION_PY4J_BUDGET))
+def test_query_construction_py4j_budget(spark, sf_dir, py4j_budget, name):
+    # the first construction in a process sends a few one-time calls, and
+    # building the query also releases other queries' cached blocks: do
+    # both before counting
+    QUERIES[name].fn(spark, sf_dir)
+    with py4j_budget(name, CONSTRUCTION_PY4J_BUDGET[name]):
+        QUERIES[name].fn(spark, sf_dir)
 
 
 def test_pii_redact_plans_zero_exchange(spark, sf_dir):

@@ -270,6 +270,27 @@ def test_parquet_schema_evolution_merge(spark, tmp_path):
     assert rows[2]["score"] == 9.5
 
 
+def test_read_parquet_sees_file_rewritten_in_place(spark, tmp_path):
+    """A single-file read pins its schema from the parquet footer; a file
+    rewritten in place within the same process must be read with its NEW
+    schema, not the one cached from the first read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pipes_spark.sources import read_parquet
+
+    p = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2], "b": [10, 20]}), p)
+    assert read_parquet(spark, p).columns == ["a", "b"]
+    pq.write_table(pa.table({"a": [3], "c": ["x"]}), p)
+    st = os.stat(p)
+    # a coarse-clock filesystem could stamp both writes alike
+    os.utime(p, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    df = read_parquet(spark, p)
+    assert df.columns == ["a", "c"]
+    assert [tuple(r) for r in df.collect()] == [(3, "x")]
+
+
 def test_stream_function_sink_partition_parallel_exactly_once(spark, tmp_path):
     """DataSourceStreamWriter sink: the user fn runs per partition of each
     micro-batch on executors, sees distinct batch ids across triggers, and
