@@ -34,6 +34,7 @@ shuffles.
 from __future__ import annotations
 
 import os
+import struct
 import zipfile
 from functools import partial
 from typing import Iterator
@@ -692,7 +693,6 @@ def sniff_image_header(content: bytes):
     first SOFn marker scan (the dimension source; C4/C8/CC are not
     frame headers). Pure byte parsing from the public specs — the
     'typed metadata without decoding pixels' step of an ingest scan."""
-    import struct
     import zlib as _z
 
     if content[:8] == _PNG_SIG:
@@ -745,33 +745,19 @@ def sniff_image_header(content: bytes):
         )
         return ("bmp", w, abs(h), bitcount, None)
     if content[:2] == b"\xff\xd8":
-        # standard marker walk: fill bytes (repeated 0xFF) are padding,
-        # and TEM/RSTn/SOI are standalone markers with NO length field —
-        # reading a length there derails the scan past a present SOF
-        i, n = 2, len(content)
-        while i < n:
-            if content[i] != 0xFF:
-                break
-            while i < n and content[i] == 0xFF:
-                i += 1
-            if i >= n:
-                break
-            marker = content[i]
-            i += 1
-            if marker == 0x01 or 0xD0 <= marker <= 0xD8:
-                continue
-            if marker == 0xD9 or i + 2 > n:
-                break
-            seglen = struct.unpack(">H", content[i : i + 2])[0]
+        # the shared marker walk never raises: a truncated or corrupt
+        # stream ends the sniff with unknown dimensions
+        i = 2
+        while True:
+            marker, p, seg_end = _jpeg_next_segment(content, i)
+            if marker in (None, 0xD9):
+                return ("jpeg", None, None, None, None)
             if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
-                if i + 8 > n:
-                    break
-                depth = content[i + 2]
-                h, w = struct.unpack(">HH", content[i + 3 : i + 7])
-                ncomp = content[i + 7]
-                return ("jpeg", w, h, depth, ncomp)
-            i += seglen
-        return ("jpeg", None, None, None, None)
+                if p + 6 > len(content):
+                    return ("jpeg", None, None, None, None)
+                h, w = struct.unpack(">HH", content[p + 1 : p + 5])
+                return ("jpeg", w, h, content[p], content[p + 5])
+            i = seg_end
     return (None, None, None, None, None)
 
 
@@ -1088,19 +1074,15 @@ def encode_gif_assets(
     )
 
 
-def _gif_first_image(b: bytes, label: str):
-    """Parse a GIF up to its FIRST image block — header + logical-screen
-    parse, global/local color table, extension-block walk, variable-width
-    LZW inflate, de-interlace. Returns ``(bit_depth, palette, red)`` with
-    ``red`` the (h, w) palette-RED grid; corrupt files raise loudly."""
-    import struct
-
+def _gif_screen(b: bytes, label: str):
+    """Header, logical screen descriptor and global color table of a GIF:
+    (width, height, packed fields, background index, palette or None,
+    offset of the first block)."""
     import numpy as np
 
     if b[:6] not in (b"GIF87a", b"GIF89a") or len(b) < 13:
         raise ValueError(f"{label}: not a GIF")
-    _sw, _sh, packed, _bg, _ar = struct.unpack("<HHBBB", b[6:13])
-    depth = ((packed >> 4) & 0x7) + 1
+    sw, sh, packed, bg, _ar = struct.unpack("<HHBBB", b[6:13])
     i = 13
     palette = None
     if packed & 0x80:
@@ -1109,28 +1091,49 @@ def _gif_first_image(b: bytes, label: str):
             gct_n, 3
         )
         i += 3 * gct_n
+    return sw, sh, packed, bg, palette, i
+
+
+def _gif_images(b: bytes, i: int, palette, label: str):
+    """Walk a GIF's blocks from offset ``i``: extensions are skipped by
+    their sub-block framing, and each image gets its local color table,
+    gathered sub-blocks, variable-width LZW inflate and de-interlace.
+    Yields (left, top, palette, grid, disposal, transparent index) per
+    image, with ``grid`` the (h, w) palette indices and the last Graphic
+    Control Extension's fields (0 / None without one); yields None at
+    the trailer. Corrupt images raise loudly."""
+    import numpy as np
+
+    disposal = 0
+    transparent = None
     while i < len(b):
         blk = b[i]
         i += 1
+        if blk == 0x3B:
+            yield None
+            return
         if blk == 0x21:  # extension: label + sub-blocks
+            if b[i] == 0xF9:  # Graphic Control Extension
+                pk = b[i + 2]
+                disposal = (pk >> 2) & 0x7
+                transparent = b[i + 5] if pk & 1 else None
             i += 1
             while b[i]:
                 i += 1 + b[i]
             i += 1
             continue
-        if blk == 0x3B:
-            raise ValueError(f"{label}: trailer before image")
         if blk != 0x2C:
             raise ValueError(f"{label}: unknown block 0x{blk:02x}")
-        _l, _t, w, h, ipk = struct.unpack("<HHHHB", b[i : i + 9])
+        left, top, w, h, ipk = struct.unpack("<HHHHB", b[i : i + 9])
         i += 9
+        pal = palette
         if ipk & 0x80:  # local color table overrides
             lct_n = 2 << (ipk & 0x7)
-            palette = np.frombuffer(
-                b[i : i + 3 * lct_n], dtype=np.uint8
-            ).reshape(lct_n, 3)
+            pal = np.frombuffer(b[i : i + 3 * lct_n], dtype=np.uint8).reshape(
+                lct_n, 3
+            )
             i += 3 * lct_n
-        if palette is None:
+        if pal is None:
             raise ValueError(f"{label}: no color table")
         mcs = b[i]
         i += 1
@@ -1139,7 +1142,7 @@ def _gif_first_image(b: bytes, label: str):
             ln = b[i]
             lzw += b[i + 1 : i + 1 + ln]
             i += 1 + ln
-        i += 1
+        i += 1  # block terminator
         idx = np.frombuffer(
             bytes(_gif_lzw_decode(bytes(lzw), mcs)), dtype=np.uint8
         )
@@ -1147,12 +1150,25 @@ def _gif_first_image(b: bytes, label: str):
             raise ValueError(
                 f"{label}: decoded {idx.size} pixels, expected {w * h}"
             )
-        if int(idx.max(initial=0)) >= len(palette):
+        if int(idx.max(initial=0)) >= len(pal):
             raise ValueError(f"{label}: index beyond palette")
-        stored = idx.reshape(h, w)
-        grid = np.empty_like(stored)
-        grid[_gif_row_order(h, bool(ipk & 0x40)), :] = stored
-        return depth, palette, palette[:, 0][grid]
+        grid = np.empty((h, w), dtype=np.uint8)
+        grid[_gif_row_order(h, bool(ipk & 0x40)), :] = idx.reshape(h, w)
+        yield left, top, pal, grid, disposal, transparent
+        disposal = 0
+        transparent = None
+
+
+def _gif_first_image(b: bytes, label: str):
+    """Parse a GIF up to its FIRST image block. Returns ``(bit_depth,
+    palette, red)`` with ``red`` the (h, w) palette-RED grid; corrupt
+    files raise loudly."""
+    _sw, _sh, packed, _bg, palette, i = _gif_screen(b, label)
+    for img in _gif_images(b, i, palette, label):
+        if img is None:
+            raise ValueError(f"{label}: trailer before image")
+        _left, _top, pal, grid, _disposal, _transparent = img
+        return ((packed >> 4) & 0x7) + 1, pal, pal[:, 0][grid]
     raise ValueError(f"{label}: truncated GIF")
 
 
@@ -1203,9 +1219,9 @@ def gif_decode_stats(assets: DataFrame) -> DataFrame:
 # Random-content closeness is pytest-covered (the entropy layer must be
 # bit-exact around the quantize/dequantize core).
 #
-# Scope (documented narrowing): baseline grayscale only — color
-# components, chroma subsampling, progressive (SOF2), arithmetic coding,
-# and 12-bit precision raise loudly.
+# The seven encoders (baseline gray/color, progressive gray/color,
+# arithmetic, lossless, hierarchical) share one front end, one segment
+# writer and one marker walk, defined below; 12-bit precision raises.
 # --------------------------------------------------------------------------
 
 #: zigzag scan order (T.81 figure 5): _JPEG_ZIGZAG[k] = (row, col) flat index
@@ -1317,148 +1333,227 @@ def _jpeg_category(v: int):
     return size, bits
 
 
-def jpeg_encode_gray(
-    pixels,
-    quality_qtable=None,
-    restart_interval: int = 0,
-    optimize_huffman: bool = False,
-) -> bytes:
-    """REAL baseline JPEG encode of an 8-bit grayscale image (2-D numpy
-    array): SOI, JFIF APP0, DQT, SOF0, two DHTs, optional DRI, SOS,
-    Huffman-coded quantized block DCTs with byte stuffing and restart
-    markers, EOI. ``quality_qtable`` is the 64-entry quantization table
-    in NATURAL (row-major) order — default is DC=8 / AC=16, the table
-    under which block-constant content round-trips bit-exactly.
-    ``optimize_huffman=True`` runs the two-pass table build of T.81
-    Annex K.2 (per-image symbol frequencies → spec CODE_SIZE/
-    ADJUST_BITS procedure), emitting VARIABLE-length canonical codes in
-    the DHTs — smaller files, and the decoder's general table
-    construction gets exercised beyond the fixed-length default."""
-    import struct
+#: JFIF APP0: version 1.01, no density units, 1:1 aspect, no thumbnail
+_JFIF_APP0 = b"\xff\xe0\x00\x10JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
 
+#: the fixed-length tables as DHT entries (Tc << 4, BITS, HUFFVAL)
+_JPEG_STD_TABLES = (
+    (0x00, _JPEG_DC_BITS, _JPEG_DC_VALS),
+    (0x10, _JPEG_AC_BITS, _JPEG_AC_VALS),
+)
+
+
+def _jpeg_qtable(qtable):
+    """An 8×8 int32 quantization table from 64 entries in natural
+    (row-major) order; the default DC 8 / AC 16 is the table under which
+    block-constant content round-trips bit-exactly."""
     import numpy as np
 
-    px = np.asarray(pixels, dtype=np.uint8)
-    if px.ndim != 2:
-        raise ValueError("jpeg_encode_gray expects a 2-D array")
-    h, w = px.shape
-    if not (0 < h <= 65535 and 0 < w <= 65535):
-        raise ValueError("image dimensions out of JPEG range")
     q = np.asarray(
-        quality_qtable if quality_qtable is not None else [8] + [16] * 63,
-        dtype=np.int32,
+        qtable if qtable is not None else [8] + [16] * 63, dtype=np.int32
     ).reshape(8, 8)
     if q.min() < 1 or q.max() > 255:
         raise ValueError("8-bit quantization table entries must be 1..255")
+    return q
 
-    # pad to block multiples by edge replication
-    ph, pw = (h + 7) // 8 * 8, (w + 7) // 8 * 8
-    padded = np.pad(px, ((0, ph - h), (0, pw - w)), mode="edge")
+
+def _jpeg_fdct_zigzag(plane, q):
+    """Quantized block DCT of one sample plane: edge-pad to whole 8×8
+    blocks, level-shift by 128, forward DCT, divide by ``q`` and round,
+    reorder to zigzag. Returns an int64 (block rows, block cols, 64)
+    array."""
+    import numpy as np
+
+    plane = np.asarray(plane, dtype=np.float64)
+    h, w = plane.shape
+    bh, bw = (h + 7) // 8, (w + 7) // 8
+    plane = np.pad(plane, ((0, bh * 8 - h), (0, bw * 8 - w)), mode="edge")
     blocks = (
-        padded.reshape(ph // 8, 8, pw // 8, 8)
-        .transpose(0, 2, 1, 3)
-        .reshape(-1, 8, 8)
-        .astype(np.float64)
+        plane.reshape(bh, 8, bw, 8).transpose(0, 2, 1, 3).reshape(-1, 8, 8)
         - 128.0
     )
     m = _jpeg_dct_matrix()
     coef = np.einsum("ux,nxy,vy->nuv", m, blocks, m)
     quant = np.round(coef / q[None, :, :]).astype(np.int64).reshape(-1, 64)
-    zz = quant[:, _JPEG_ZIGZAG]
+    return quant[:, _JPEG_ZIGZAG].reshape(bh, bw, 64)
 
-    zz_list = zz.tolist()  # plain ints: per-coefficient numpy scalar
-    # indexing was a measured encoder hot spot
 
-    def block_symbols(blk, prev_dc):
-        """Symbol stream for one block: [('dc'|'ac', symbol, size, bits)]
-        — shared between the counting pass (optimize_huffman) and the
-        emit pass so both see the identical stream. ``blk`` is a plain
-        64-list in zigzag order."""
-        syms = []
-        size, bits = _jpeg_category(blk[0] - prev_dc)
-        syms.append(("dc", size, size, bits))
-        run = 0
-        last_nz = 0
-        for k in range(63, 0, -1):
-            if blk[k]:
-                last_nz = k
-                break
-        for k in range(1, last_nz + 1):
-            v = blk[k]
-            if v == 0:
-                run += 1
-                continue
-            while run >= 16:
-                syms.append(("ac", 0xF0, 0, 0))  # ZRL
-                run -= 16
-            size, bits = _jpeg_category(v)
-            if size > 10:
-                raise ValueError("AC coefficient magnitude beyond category 10")
-            syms.append(("ac", (run << 4) | size, size, bits))
-            run = 0
-        if last_nz < 63:
-            syms.append(("ac", 0x00, 0, 0))  # EOB
-        return blk[0], syms
+def _jpeg_ycbcr_planes(px, subsample: str):
+    """JFIF front end of the color encoders: edge-pad (h, w, 3) RGB to
+    whole MCUs, convert to YCbCr, and box-average the chroma planes 2×
+    horizontally ("422") or both ways ("420"). Returns ((y, cb, cr), hs,
+    vs) with (hs, vs) the luma sampling factors."""
+    import numpy as np
 
-    if optimize_huffman:
-        # pass 1 (Annex K.2): per-image symbol frequencies -> spec tables
-        fdc = [0] * 257
-        fac = [0] * 257
-        prev_dc = 0
-        for i, blk in enumerate(zz_list):
-            if restart_interval and i and i % restart_interval == 0:
-                prev_dc = 0
-            prev_dc, syms = block_symbols(blk, prev_dc)
-            for tbl, sym, _size, _bits in syms:
-                (fdc if tbl == "dc" else fac)[sym] += 1
-        fdc[256] = 1
-        fac[256] = 1
-        dc_bits, dc_vals = _jpeg_optimal_table(fdc)
-        ac_bits, ac_vals = _jpeg_optimal_table(fac)
+    if subsample not in ("444", "422", "420"):
+        raise ValueError("subsample must be '444', '422', or '420'")
+    h, w = px.shape[:2]
+    hs = 2 if subsample in ("420", "422") else 1
+    vs = 2 if subsample == "420" else 1
+    mcus_x = (w + 8 * hs - 1) // (8 * hs)
+    mcus_y = (h + 8 * vs - 1) // (8 * vs)
+    ph, pw = mcus_y * 8 * vs, mcus_x * 8 * hs
+    padded = np.pad(
+        px.astype(np.float64), ((0, ph - h), (0, pw - w), (0, 0)), mode="edge"
+    )
+    r_, g_, b_ = padded[..., 0], padded[..., 1], padded[..., 2]
+    y = 0.299 * r_ + 0.587 * g_ + 0.114 * b_
+    cb = 128.0 - 0.168736 * r_ - 0.331264 * g_ + 0.5 * b_
+    cr = 128.0 + 0.5 * r_ - 0.418688 * g_ - 0.081312 * b_
+    if vs == 2:
+        cb = cb.reshape(ph // 2, 2, pw).mean(axis=1)
+        cr = cr.reshape(ph // 2, 2, pw).mean(axis=1)
+    if hs == 2:
+        cb = cb.reshape(cb.shape[0], pw // 2, 2).mean(axis=2)
+        cr = cr.reshape(cr.shape[0], pw // 2, 2).mean(axis=2)
+    return (y, cb, cr), hs, vs
+
+
+def _jpeg_mcus(stores, hs: int = 1, vs: int = 1) -> list:
+    """The MCUs of an interleaved scan in T.81 A.2.3 order, each a list of
+    (component, block): the first component's vs×hs blocks, then one
+    block of each further (1×1) component. ``stores`` are per-component
+    grids of blocks; the first one spans whole MCUs."""
+    samp = [(hs, vs)] + [(1, 1)] * (len(stores) - 1)
+    return [
+        [
+            (ci, stores[ci][my * sv + v][mx * sh + hh])
+            for ci, (sh, sv) in enumerate(samp)
+            for v in range(sv)
+            for hh in range(sh)
+        ]
+        for my in range(len(stores[0]) // vs)
+        for mx in range(len(stores[0][0]) // hs)
+    ]
+
+
+def _jpeg_segment(marker: int, payload: bytes) -> bytes:
+    """One marker segment: 0xFF, the marker, the big-endian length (which
+    counts its own two bytes) and the payload."""
+    return bytes((0xFF, marker)) + struct.pack(">H", 2 + len(payload)) + payload
+
+
+def _jpeg_dqt(tables) -> bytes:
+    """One DQT segment per (table id, 8×8 table), entries in zigzag
+    order."""
+    return b"".join(
+        _jpeg_segment(0xDB, bytes([tid] + q.reshape(-1)[_JPEG_ZIGZAG].tolist()))
+        for tid, q in tables
+    )
+
+
+def _jpeg_dht(tables, ids=(0,)) -> bytes:
+    """One DHT segment per table id and (Tc << 4, BITS, HUFFVAL) entry."""
+    return b"".join(
+        _jpeg_segment(0xC4, bytes([tc | tid, *bits, *vals]))
+        for tid in ids
+        for tc, bits, vals in tables
+    )
+
+
+def _jpeg_sof(marker: int, h: int, w: int, sampling=None) -> bytes:
+    """Frame header (SOFn, or DHP, which shares its syntax) for 8-bit
+    samples: one component on table 0, or, given the luma's (H, V)
+    ``sampling``, YCbCr with both chroma components 1×1 on table 1."""
+    if sampling is None:
+        comps = [1, 0x11, 0]
     else:
-        dc_bits, dc_vals = _JPEG_DC_BITS, _JPEG_DC_VALS
-        ac_bits, ac_vals = _JPEG_AC_BITS, _JPEG_AC_VALS
+        comps = [1, (sampling[0] << 4) | sampling[1], 0, 2, 0x11, 1, 3, 0x11, 1]
+    return _jpeg_segment(
+        marker, struct.pack(">BHHB", 8, h, w, len(comps) // 3) + bytes(comps)
+    )
+
+
+def _jpeg_sos(comps, ss: int = 0, se: int = 63, ah: int = 0, al: int = 0) -> bytes:
+    """Scan header over ``comps`` = [(component id, Td << 4 | Ta)]."""
+    sel = [v for comp in comps for v in comp]
+    return _jpeg_segment(0xDA, bytes([len(comps), *sel, ss, se, (ah << 4) | al]))
+
+
+def _jpeg_dri(restart_interval: int) -> bytes:
+    """DRI segment, or nothing when restarts are off."""
+    if not restart_interval:
+        return b""
+    return _jpeg_segment(0xDD, struct.pack(">H", restart_interval))
+
+
+def _jpeg_block_symbols(blk, prev_dc: int, syms: list) -> int:
+    """Append one baseline block's Huffman symbols to ``syms`` as
+    (table, symbol, size, appended bits) and return its DC. ``blk`` is a
+    plain 64-int list in zigzag order; the DC codes as the difference
+    from ``prev_dc``."""
+    size, bits = _jpeg_category(blk[0] - prev_dc)
+    syms.append(("dc", size, size, bits))
+    run = 0
+    last_nz = 0
+    for k in range(63, 0, -1):
+        if blk[k]:
+            last_nz = k
+            break
+    for k in range(1, last_nz + 1):
+        v = blk[k]
+        if v == 0:
+            run += 1
+            continue
+        while run >= 16:
+            syms.append(("ac", 0xF0, 0, 0))  # ZRL
+            run -= 16
+        size, bits = _jpeg_category(v)
+        if size > 10:
+            raise ValueError("AC coefficient magnitude beyond category 10")
+        syms.append(("ac", (run << 4) | size, size, bits))
+        run = 0
+    if last_nz < 63:
+        syms.append(("ac", 0x00, 0, 0))  # EOB
+    return blk[0]
+
+
+def _jpeg_scan_symbols(mcus, n_comp: int, restart_interval: int) -> list:
+    """Symbol list of each MCU of a baseline scan; ``mcus`` yields every
+    MCU's [(component, block)] in scan order. The DC predictors reset at
+    each restart interval."""
+    out = []
+    prev = [0] * n_comp
+    for i, units in enumerate(mcus):
+        if restart_interval and i and i % restart_interval == 0:
+            prev = [0] * n_comp
+        syms: list = []
+        for ci, blk in units:
+            prev[ci] = _jpeg_block_symbols(blk, prev[ci], syms)
+        out.append(syms)
+    return out
+
+
+def _jpeg_stuffed(raw: bytearray, acc: int, n: int) -> bytes:
+    """Close an entropy-coded segment: pad the ``n`` pending bits of
+    ``acc`` with 1-bits, then stuff 0x00 after every 0xFF byte. Stuffing
+    never creates a new 0xFF, so one bytes-level replace gives the bytes
+    of a per-byte stuffing writer (incl. a stuffed 0xFF pad byte)."""
+    if n:
+        pad = 8 - n
+        raw.append((acc << pad) | ((1 << pad) - 1))
+    return bytes(raw).replace(b"\xff", b"\xff\x00")
+
+
+def _jpeg_huffman_scan(mcu_syms, restart_interval: int, tables) -> bytes:
+    """Entropy-coded data of a baseline scan from its per-MCU symbol
+    lists, Huffman-coded with the (DC, AC) ``tables``: a local
+    accumulator packs each segment in whole-byte chunks, and RSTn
+    markers go between the stuffed segments."""
+    (_, dc_bits, dc_vals), (_, ac_bits, ac_vals) = tables
     dc_codes = _jpeg_canonical_codes(dc_bits, dc_vals)
     ac_codes = _jpeg_canonical_codes(ac_bits, ac_vals)
-
-    out = bytearray(b"\xff\xd8")  # SOI
-    out += b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
-    zz_q = q.reshape(-1)[_JPEG_ZIGZAG]
-    out += b"\xff\xdb" + struct.pack(">H", 67) + b"\x00" + bytes(int(v) for v in zz_q)
-    out += b"\xff\xc0" + struct.pack(">HBHHB", 11, 8, h, w, 1) + b"\x01\x11\x00"
-    for cls, bits, vals in (
-        (0x00, dc_bits, dc_vals),
-        (0x10, ac_bits, ac_vals),
-    ):
-        out += b"\xff\xc4" + struct.pack(">H", 19 + len(vals))
-        out.append(cls)
-        out += bytes(bits) + bytes(vals)
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-    out += b"\xff\xda" + struct.pack(">HB", 8, 1) + b"\x01\x00\x00\x3f\x00"
-
-    # emit pass: local-accumulator bit pack per entropy segment, whole-
-    # byte chunk flushes, then T.81 stuffing in ONE bytes-level replace —
-    # stuffing inserts 0x00 after every 0xFF data byte and never creates
-    # new 0xFF bytes, and restart markers are appended OUTSIDE the
-    # replaced segments, so the byte stream is identical to the
-    # per-symbol _JpegBitWriter path (incl. a stuffed 0xFF pad byte)
+    out = bytearray()
+    raw = bytearray()
     acc = 0
     n = 0
-    raw = bytearray()
-    prev_dc = 0
-    for i, blk in enumerate(zz_list):
+    for i, syms in enumerate(mcu_syms):
         if restart_interval and i and i % restart_interval == 0:
-            if n:  # 1-bit padding per spec
-                pad = 8 - n
-                raw.append((acc << pad) | ((1 << pad) - 1))
-            out += bytes(raw).replace(b"\xff", b"\xff\x00")
+            out += _jpeg_stuffed(raw, acc, n)
+            out += bytes([0xFF, 0xD0 + ((i // restart_interval - 1) % 8)])
             raw = bytearray()
             acc = 0
             n = 0
-            out += bytes([0xFF, 0xD0 + ((i // restart_interval - 1) % 8)])
-            prev_dc = 0
-        prev_dc, syms = block_symbols(blk, prev_dc)
         for tbl, sym, size, bits in syms:
             ln, code = (dc_codes if tbl == "dc" else ac_codes)[sym]
             if size:
@@ -1476,12 +1571,63 @@ def jpeg_encode_gray(
                 n -= nb << 3
                 raw += (acc >> n).to_bytes(nb, "big")
                 acc &= (1 << n) - 1
-    if n:  # 1-bit padding per spec
-        pad = 8 - n
-        raw.append((acc << pad) | ((1 << pad) - 1))
-    out += bytes(raw).replace(b"\xff", b"\xff\x00")
-    out += b"\xff\xd9"  # EOI
+    out += _jpeg_stuffed(raw, acc, n)
     return bytes(out)
+
+
+def jpeg_encode_gray(
+    pixels,
+    quality_qtable=None,
+    restart_interval: int = 0,
+    optimize_huffman: bool = False,
+) -> bytes:
+    """REAL baseline JPEG encode of an 8-bit grayscale image (2-D numpy
+    array): SOI, JFIF APP0, DQT, SOF0, two DHTs, optional DRI, SOS,
+    Huffman-coded quantized block DCTs with byte stuffing and restart
+    markers, EOI. ``quality_qtable`` is the 64-entry quantization table
+    in NATURAL (row-major) order — default is DC=8 / AC=16, the table
+    under which block-constant content round-trips bit-exactly.
+    ``optimize_huffman=True`` runs the two-pass table build of T.81
+    Annex K.2 (per-image symbol frequencies → spec CODE_SIZE/
+    ADJUST_BITS procedure), emitting VARIABLE-length canonical codes in
+    the DHTs — smaller files, and the decoder's general table
+    construction gets exercised beyond the fixed-length default."""
+    import numpy as np
+
+    px = np.asarray(pixels, dtype=np.uint8)
+    if px.ndim != 2:
+        raise ValueError("jpeg_encode_gray expects a 2-D array")
+    h, w = px.shape
+    if not (0 < h <= 65535 and 0 < w <= 65535):
+        raise ValueError("image dimensions out of JPEG range")
+    q = _jpeg_qtable(quality_qtable)
+    # plain ints: per-coefficient numpy scalar indexing was a measured
+    # encoder hot spot
+    zz = _jpeg_fdct_zigzag(px, q).tolist()
+    mcu_syms = _jpeg_scan_symbols(_jpeg_mcus([zz]), 1, restart_interval)
+    tables = _JPEG_STD_TABLES
+    if optimize_huffman:
+        # Annex K.2: per-image symbol frequencies -> spec tables
+        freq = {"dc": [0] * 257, "ac": [0] * 257}
+        for syms in mcu_syms:
+            for tbl, sym, _size, _bits in syms:
+                freq[tbl][sym] += 1
+        freq["dc"][256] = freq["ac"][256] = 1
+        tables = [
+            (tc, *_jpeg_optimal_table(freq[t]))
+            for tc, t in ((0x00, "dc"), (0x10, "ac"))
+        ]
+    return (
+        b"\xff\xd8"
+        + _JFIF_APP0
+        + _jpeg_dqt([(0, q)])
+        + _jpeg_sof(0xC0, h, w)
+        + _jpeg_dht(tables)
+        + _jpeg_dri(restart_interval)
+        + _jpeg_sos([(1, 0x00)])
+        + _jpeg_huffman_scan(mcu_syms, restart_interval, tables)
+        + b"\xff\xd9"
+    )
 
 
 class _JpegBitReader:
@@ -1551,14 +1697,16 @@ class _JpegBitReader:
             self.n += 8
         return (self.acc >> (self.n - 8)) & 0xFF
 
-    def align_to_marker(self):
-        """Discard pad bits; expect and consume an RST marker."""
+    def align_to_marker(self) -> None:
+        """Discard pad bits; expect and consume an RSTn marker."""
         self.acc = 0
         self.n = 0
         if self.pos + 1 < len(self.d) and self.d[self.pos] == 0xFF:
             m = self.d[self.pos + 1]
+            if not (0xD0 <= m <= 0xD7):
+                raise ValueError(f"expected RSTn, got 0x{m:02x}")
             self.pos += 2
-            return m
+            return
         raise ValueError("expected restart marker")
 
 
@@ -1626,6 +1774,46 @@ def _jpeg_huff_decoder(bits, vals):
         _JPEG_DECODER_CACHE.clear()
     _JPEG_DECODER_CACHE[key] = decode
     return decode
+
+
+def _jpeg_next_segment(data, i: int):
+    """Walk one step of a JPEG marker sequence from offset ``i``: returns
+    (marker, payload start, segment end). Fill bytes (extra 0xFF, T.81
+    B.1.1.2) and the standalone TEM / RSTn / SOI markers, which carry no
+    length field, are skipped. EOI, and data that ends before the next
+    length field, return marker 0xD9; a non-0xFF byte at the walk
+    position returns marker None with that offset. Never raises."""
+    n = len(data)
+    while i < n and data[i] == 0xFF:
+        while i < n and data[i] == 0xFF:
+            i += 1
+        if i >= n:
+            break
+        marker = data[i]
+        i += 1
+        if marker == 0xD9:
+            return marker, i, i
+        if marker == 0x01 or 0xD0 <= marker <= 0xD8:
+            continue
+        if i + 2 > n:
+            break
+        return marker, i + 2, i + ((data[i] << 8) | data[i + 1])
+    if i < n:
+        return None, i, i
+    return 0xD9, n, n
+
+
+def _jpeg_parse_dht(data, p: int, seg_end: int, dc_dec: dict, ac_dec: dict):
+    """Build a decoder for each table of the DHT payload at ``p``, stored
+    by class into ``dc_dec`` / ``ac_dec`` under its table id."""
+    while p < seg_end:
+        tc_th = data[p]
+        bits = list(data[p + 1 : p + 17])
+        nv = sum(bits)
+        vals = list(data[p + 17 : p + 17 + nv])
+        p += 17 + nv
+        dec = _jpeg_huff_decoder(bits, vals)
+        (dc_dec if tc_th >> 4 == 0 else ac_dec)[tc_th & 0xF] = dec
 
 
 def _jpeg_diff_run(r: _JpegBitReader, dec, cnt: int) -> list:
@@ -1876,8 +2064,6 @@ def jpeg_encode_lossless(
     NO quantization and no DCT — decode reproduces the (point-
     transformed) samples bit-for-bit, which is what the hash gate
     certifies."""
-    import struct
-
     import numpy as np
 
     if not 1 <= predictor <= 7:
@@ -1886,28 +2072,13 @@ def jpeg_encode_lossless(
         raise ValueError(f"point transform must be 0-7, got {point_transform}")
     px = np.asarray(pixels, dtype=np.int64) >> point_transform
     h, w = px.shape
-    default = 1 << (8 - point_transform - 1)
     a = np.zeros_like(px)
     b = np.zeros_like(px)
     c = np.zeros_like(px)
     a[:, 1:] = px[:, :-1]
     b[1:, :] = px[:-1, :]
     c[1:, 1:] = px[:-1, :-1]
-    sel = predictor
-    if sel == 1:
-        pred = a.copy()
-    elif sel == 2:
-        pred = b.copy()
-    elif sel == 3:
-        pred = c.copy()
-    elif sel == 4:
-        pred = a + b - c
-    elif sel == 5:
-        pred = a + ((b - c) >> 1)
-    elif sel == 6:
-        pred = b + ((a - c) >> 1)
-    else:
-        pred = (a + b) >> 1
+    pred = _jpeg_lossless_predict(a, b, c, predictor)
     # H.1.1 boundary rules: first row predicts from 'a', first column
     # from 'b', the very first sample from the default
     if h > 0:
@@ -1915,20 +2086,9 @@ def jpeg_encode_lossless(
     if w > 0:
         pred[1:, 0] = px[:-1, 0]
     if h > 0 and w > 0:
-        pred[0, 0] = default
-    diff = (px - pred) & 0xFFFF
-    diff = np.where(diff >= 32768, diff - 65536, diff)  # signed mod 2^16
-    bits_spec, huffval, entropy = _jpeg_code_diff_stream(diff.reshape(-1))
-    out = bytearray(b"\xff\xd8")
-    dht = bytes([0x00] + bits_spec + huffval)
-    out += b"\xff\xc4" + struct.pack(">H", 2 + len(dht)) + dht
-    sof = struct.pack(">BHHB", 8, h, w, 1) + bytes([1, 0x11, 0])
-    out += b"\xff\xc3" + struct.pack(">H", 2 + len(sof)) + sof
-    sos = bytes([1, 1, 0x00, predictor, 0, point_transform])
-    out += b"\xff\xda" + struct.pack(">H", 2 + len(sos)) + sos
-    out += entropy
-    out += b"\xff\xd9"
-    return bytes(out)
+        pred[0, 0] = 1 << (8 - point_transform - 1)
+    frame = _jpeg_diff_frame(0xC3, px - pred, predictor, point_transform)
+    return b"\xff\xd8" + frame + b"\xff\xd9"
 
 
 _BITLEN8_CACHE = None
@@ -1982,12 +2142,8 @@ def _jpeg_code_diff_stream(flat):
     )
     vals = (code_lut[cat] << size) | extra
     lens = len_lut[cat] + size
-    # pack with a local accumulator, flushing whole-byte chunks, then
-    # apply T.81 byte stuffing in ONE pass: stuffing inserts 0x00 after
-    # every 0xFF *data* byte and never creates new 0xFF bytes, and this
-    # stream contains no markers, so bytes-level replace IS the
-    # _JpegBitWriter behavior (byte-identical, incl. a stuffed 0xFF pad
-    # byte)
+    # pack with a local accumulator, flushing whole-byte chunks; the
+    # stream holds no markers, so it is one stuffed segment
     acc = 0
     n = 0
     raw = bytearray()
@@ -1999,10 +2155,26 @@ def _jpeg_code_diff_stream(flat):
             n -= nb << 3
             raw += (acc >> n).to_bytes(nb, "big")
             acc &= (1 << n) - 1
-    if n:  # 1-bit padding per spec
-        pad = 8 - n
-        raw.append((acc << pad) | ((1 << pad) - 1))
-    return bits_spec, huffval, bytes(raw).replace(b"\xff", b"\xff\x00")
+    return bits_spec, huffval, _jpeg_stuffed(raw, acc, n)
+
+
+def _jpeg_diff_frame(marker: int, diff, ss: int, al: int) -> bytes:
+    """DHT, frame header, scan header and entropy data of a one-component
+    frame that codes the (h, w) differences ``diff`` modulo 2^16: the
+    SOF3 lossless frame (``ss`` = predictor, ``al`` = point transform)
+    and the hierarchical mode's SOF7 differential frame (``ss`` = 0)."""
+    import numpy as np
+
+    h, w = diff.shape
+    diff = diff & 0xFFFF
+    diff = np.where(diff >= 32768, diff - 65536, diff)  # signed mod 2^16
+    bits_spec, huffval, entropy = _jpeg_code_diff_stream(diff.reshape(-1))
+    return (
+        _jpeg_dht([(0x00, bits_spec, huffval)])
+        + _jpeg_sof(marker, h, w)
+        + _jpeg_sos([(1, 0x00)], ss, 0, 0, al)
+        + entropy
+    )
 
 
 def _jpeg_decode_lossless(data: bytes):
@@ -2011,8 +2183,6 @@ def _jpeg_decode_lossless(data: bytes):
     decode, predictor reconstruction modulo 2^16 with the H.1.1
     boundary rules, point-transform left shift on output. Single
     8-bit component; other shapes raise loudly."""
-    import struct
-
     import numpy as np
 
     if data[:2] != b"\xff\xd8":
@@ -2022,33 +2192,15 @@ def _jpeg_decode_lossless(data: bytes):
     predictor = None
     pt = 0
     i = 2
-    n = len(data)
     pos = None
-    while i < n:
-        if data[i] != 0xFF:
-            raise ValueError(f"expected marker at offset {i}")
-        while i < n and data[i] == 0xFF:
-            i += 1
-        marker = data[i]
-        i += 1
-        if marker in (0x01,) or 0xD0 <= marker <= 0xD8:
-            continue
+    while True:
+        marker, p, seg_end = _jpeg_next_segment(data, i)
+        if marker is None:
+            raise ValueError(f"expected marker at offset {p}")
         if marker == 0xD9:
             break
-        (seglen,) = struct.unpack(">H", data[i : i + 2])
-        seg_end = i + seglen
-        p = i + 2
         if marker == 0xC4:
-            while p < seg_end:
-                cls, tid = data[p] >> 4, data[p] & 0xF
-                p += 1
-                bits = list(data[p : p + 16])
-                p += 16
-                nv = sum(bits)
-                vals = list(data[p : p + nv])
-                p += nv
-                if cls == 0:
-                    dc_dec[tid] = _jpeg_huff_decoder(bits, vals)
+            _jpeg_parse_dht(data, p, seg_end, dc_dec, {})
         elif marker == 0xC3:
             prec = data[p]
             if prec != 8:
@@ -2142,8 +2294,6 @@ def jpeg_decode(data: bytes):
     arithmetic progressive/lossless/differential modes, 12-bit
     precision, or sampling factors beyond 2 — the documented scope
     narrowing."""
-    import struct
-
     import numpy as np
 
     if data[:2] != b"\xff\xd8":
@@ -2162,22 +2312,14 @@ def jpeg_decode(data: bytes):
     prog_stores = None  # progressive: per-COMPONENT zigzag stores (true dims)
     i = 2
     n = len(data)
-    while i < n:
-        if data[i] != 0xFF:
-            raise ValueError(f"expected marker at offset {i}")
-        while i < n and data[i] == 0xFF:
-            i += 1
-        marker = data[i]
-        i += 1
-        if marker == 0xD9:  # EOI
+    while True:
+        marker, p, seg_end = _jpeg_next_segment(data, i)
+        if marker is None:
+            raise ValueError(f"expected marker at offset {p}")
+        if marker == 0xD9:  # EOI, or the data ran out
             if progressive and prog_stores is not None:
                 break
-            raise ValueError("EOI before SOS")
-        if marker in (0x01,) or 0xD0 <= marker <= 0xD7:
-            continue
-        (seglen,) = struct.unpack(">H", data[i : i + 2])
-        seg_end = i + seglen
-        p = i + 2
+            raise ValueError("EOI or end of data before SOS")
         if marker == 0xDB:  # DQT
             while p < seg_end:
                 pq, tq = data[p] >> 4, data[p] & 0xF
@@ -2189,16 +2331,7 @@ def jpeg_decode(data: bytes):
                 qtables[tq] = tbl.reshape(8, 8)
                 p += 64
         elif marker == 0xC4:  # DHT
-            while p < seg_end:
-                cls, tid = data[p] >> 4, data[p] & 0xF
-                p += 1
-                bits = list(data[p : p + 16])
-                p += 16
-                nv = sum(bits)
-                vals = list(data[p : p + nv])
-                p += nv
-                dec = _jpeg_huff_decoder(bits, vals)
-                (dc_dec if cls == 0 else ac_dec)[tid] = dec
+            _jpeg_parse_dht(data, p, seg_end, dc_dec, ac_dec)
         elif marker in (0xC0, 0xC1, 0xC2, 0xC9):
             # SOF0/1 baseline, SOF2 progressive, SOF9 sequential arithmetic
             progressive = marker == 0xC2
@@ -2274,8 +2407,6 @@ def jpeg_decode(data: bytes):
             ss_, se_ = data[off], data[off + 1]
             ah_, al_ = data[off + 2] >> 4, data[off + 2] & 0xF
             if prog_stores is None:
-                import numpy as _np
-
                 hmax_ = max(c[1] for c in comps)
                 vmax_ = max(c[2] for c in comps)
                 prog_stores = []
@@ -2285,9 +2416,9 @@ def jpeg_decode(data: bytes):
                     cw_ = (w * hi_c + hmax_ - 1) // hmax_
                     ch_ = (h * vi_c + vmax_ - 1) // vmax_
                     prog_stores.append(
-                        _np.zeros(
+                        np.zeros(
                             ((ch_ + 7) // 8, (cw_ + 7) // 8, 64),
-                            dtype=_np.int64,
+                            dtype=np.int64,
                         )
                     )
             cindex = {c[0]: k for k, c in enumerate(comps)}
@@ -2311,12 +2442,6 @@ def jpeg_decode(data: bytes):
                 )
             continue
         i = seg_end
-    else:
-        if progressive and prog_stores is not None:
-            # EOI path for progressive streams falls through the loop
-            pass
-        else:
-            raise ValueError("no SOS marker")
 
     hmax = max(c[1] for c in comps)
     vmax = max(c[2] for c in comps)
@@ -2405,9 +2530,7 @@ def jpeg_decode(data: bytes):
                     ac_stats = {}
                     dc_ctx = [0] * len(comps)
                 else:
-                    m_ = r.align_to_marker()
-                    if not (0xD0 <= m_ <= 0xD7):
-                        raise ValueError(f"expected RSTn, got 0x{m_:02x}")
+                    r.align_to_marker()
                 prev_dc = [0] * len(comps)
             my, mx = divmod(midx, mcus_x)
             for ci, (cid, hi, vi, tq) in enumerate(comps):
@@ -4138,73 +4261,19 @@ def gif_decode_frames(content: bytes, label: str = "asset"):
     pixels keeping the previous canvas, then the disposal step —
     0/1 leave, 2 restore-to-background over the frame's rect;
     3 (restore-previous) raises honestly."""
-    import struct
-
     import numpy as np
 
     b = bytes(content)
-    if b[:6] not in (b"GIF87a", b"GIF89a") or len(b) < 13:
-        raise ValueError(f"{label}: not a GIF")
-    sw, sh, packed, bg, _ar = struct.unpack("<HHBBB", b[6:13])
-    i = 13
-    palette = None
-    if packed & 0x80:
-        gct_n = 2 << (packed & 0x7)
-        palette = np.frombuffer(b[i : i + 3 * gct_n], dtype=np.uint8).reshape(
-            gct_n, 3
-        )
-        i += 3 * gct_n
+    sw, sh, _packed, bg, palette, i = _gif_screen(b, label)
     canvas = np.zeros((sh, sw), dtype=np.uint8)
     if palette is not None and bg < palette.shape[0]:
         canvas[:] = palette[bg, 0]
     frames = []
-    disposal = 0
-    transparent = None
-    while i < len(b):
-        blk = b[i]
-        i += 1
-        if blk == 0x3B:  # trailer
+    for img in _gif_images(b, i, palette, label):
+        if img is None:
             break
-        if blk == 0x21:
-            label_b = b[i]
-            i += 1
-            if label_b == 0xF9:  # Graphic Control Extension
-                sz = b[i]
-                pk = b[i + 1]
-                disposal = (pk >> 2) & 0x7
-                transparent = b[i + 4] if pk & 1 else None
-                i += 1 + sz
-            while b[i]:  # remaining/other sub-blocks
-                i += 1 + b[i]
-            i += 1
-            continue
-        if blk != 0x2C:
-            raise ValueError(f"{label}: unexpected GIF block 0x{blk:02x}")
-        left, top, w, h, ipk = struct.unpack("<HHHHB", b[i : i + 9])
-        i += 9
-        pal = palette
-        if ipk & 0x80:
-            lct_n = 2 << (ipk & 0x7)
-            pal = np.frombuffer(
-                b[i : i + 3 * lct_n], dtype=np.uint8
-            ).reshape(lct_n, 3)
-            i += 3 * lct_n
-        if pal is None:
-            raise ValueError(f"{label}: GIF has no color table")
-        mcs = b[i]
-        i += 1
-        lzw = bytearray()
-        while b[i]:
-            ln = b[i]
-            lzw += b[i + 1 : i + 1 + ln]
-            i += 1 + ln
-        i += 1  # block terminator
-        idx = np.frombuffer(
-            bytes(_gif_lzw_decode(bytes(lzw), mcs)), dtype=np.uint8
-        )
-        stored = idx.reshape(h, w)
-        grid = np.empty_like(stored)
-        grid[_gif_row_order(h, bool(ipk & 0x40)), :] = stored
+        left, top, pal, grid, disposal, transparent = img
+        h, w = grid.shape
         if top + h > sh or left + w > sw:
             raise ValueError(f"{label}: frame rect beyond logical screen")
         region = canvas[top : top + h, left : left + w]
@@ -4222,8 +4291,6 @@ def gif_decode_frames(content: bytes, label: str = "asset"):
             raise ValueError(
                 f"{label}: disposal 3 (restore previous) unsupported"
             )
-        disposal = 0
-        transparent = None
     if not frames:
         raise ValueError(f"{label}: GIF holds no frames")
     return frames
@@ -4923,8 +4990,6 @@ def jpeg_encode_hierarchical(pixels) -> bytes:
     arbitrary content even though the base frame is lossy — and the
     hash gate thereby certifies the decoder's J.1.1.2 upsample filter
     (any filter slip leaves a nonzero net error)."""
-    import struct
-
     import numpy as np
 
     px = np.asarray(pixels, dtype=np.int64)
@@ -4932,24 +4997,15 @@ def jpeg_encode_hierarchical(pixels) -> bytes:
     small = px[::2, ::2].astype(np.uint8)  # encoder's downsample choice
     frame1 = jpeg_encode_gray(small)
     ref = jpeg_decode_gray(frame1).astype(np.int64)
-    ref_up = _jpeg_hier_upsample(ref, h, w)
-    diff = (px - ref_up) & 0xFFFF
-    diff = np.where(diff >= 32768, diff - 65536, diff)
-    bits_spec, huffval, entropy = _jpeg_code_diff_stream(diff.reshape(-1))
-    out = bytearray(b"\xff\xd8")
-    dhp = struct.pack(">BHHB", 8, h, w, 1) + bytes([1, 0x11, 0])
-    out += b"\xff\xde" + struct.pack(">H", 2 + len(dhp)) + dhp
-    out += frame1[2:-2]  # strip the embedded SOI/EOI
-    out += b"\xff\xdf" + struct.pack(">H", 3) + bytes([0x11])  # EXP Eh=Ev=1
-    dht = bytes([0x00] + bits_spec + huffval)
-    out += b"\xff\xc4" + struct.pack(">H", 2 + len(dht)) + dht
-    sof7 = struct.pack(">BHHB", 8, h, w, 1) + bytes([1, 0x11, 0])
-    out += b"\xff\xc7" + struct.pack(">H", 2 + len(sof7)) + sof7
-    sos = bytes([1, 1, 0x00, 0, 0, 0])  # Ss=0: no prediction (differential)
-    out += b"\xff\xda" + struct.pack(">H", 2 + len(sos)) + sos
-    out += entropy
-    out += b"\xff\xd9"
-    return bytes(out)
+    return (
+        b"\xff\xd8"
+        + _jpeg_sof(0xDE, h, w)  # DHP
+        + frame1[2:-2]  # strip the embedded SOI/EOI
+        + _jpeg_segment(0xDF, b"\x11")  # EXP Eh=Ev=1
+        # Ss=0: no prediction (differential)
+        + _jpeg_diff_frame(0xC7, px - _jpeg_hier_upsample(ref, h, w), 0, 0)
+        + b"\xff\xd9"
+    )
 
 
 def _jpeg_decode_hierarchical(data: bytes):
@@ -4960,8 +5016,6 @@ def _jpeg_decode_hierarchical(data: bytes):
     with zero prediction and ADDED to the reference modulo 2^16.
     Single 8-bit component; differential DCT frames and multi-level
     pyramids beyond one EXP raise loudly."""
-    import struct
-
     import numpy as np
 
     if data[:2] != b"\xff\xd8":
@@ -4973,20 +5027,12 @@ def _jpeg_decode_hierarchical(data: bytes):
     dc_dec = {}
     i = 2
     n = len(data)
-    while i < n:
-        if data[i] != 0xFF:
-            raise ValueError(f"expected marker at offset {i}")
-        while i < n and data[i] == 0xFF:
-            i += 1
-        marker = data[i]
-        i += 1
-        if marker in (0x01,) or 0xD0 <= marker <= 0xD8:
-            continue
+    while True:
+        marker, p, seg_end = _jpeg_next_segment(data, i)
+        if marker is None:
+            raise ValueError(f"expected marker at offset {p}")
         if marker == 0xD9:
             break
-        (seglen,) = struct.unpack(">H", data[i : i + 2])
-        seg_end = i + seglen
-        p = i + 2
         if marker == 0xDE:  # DHP
             prec = data[p]
             if prec != 8:
@@ -4996,53 +5042,40 @@ def _jpeg_decode_hierarchical(data: bytes):
                 raise ValueError(
                     "multi-component hierarchical JPEG unsupported"
                 )
-            i = seg_end
-        elif marker in (0xDB, 0xDD):  # DQT / DRI for the embedded frame
-            tables_raw += b"\xff" + bytes([marker])
-            tables_raw += data[i:seg_end]
-            i = seg_end
-        elif marker == 0xC4:  # DHT: keep raw for frame 1 AND parsed for SOF7
-            tables_raw += b"\xff\xc4" + data[i:seg_end]
-            while p < seg_end:
-                cls, tid = data[p] >> 4, data[p] & 0xF
-                p += 1
-                bits = list(data[p : p + 16])
-                p += 16
-                nv = sum(bits)
-                vals = list(data[p : p + nv])
-                p += nv
-                if cls == 0:
-                    dc_dec[tid] = _jpeg_huff_decoder(bits, vals)
-            i = seg_end
+        elif marker in (0xDB, 0xDD, 0xC4):
+            # DQT / DRI / DHT for the embedded frame; the DHT is also
+            # parsed for SOF7
+            tables_raw += bytes((0xFF, marker)) + data[p - 2 : seg_end]
+            if marker == 0xC4:
+                _jpeg_parse_dht(data, p, seg_end, dc_dec, {})
         elif marker == 0xC0:  # first (non-differential) frame
             if ref is not None:
                 raise ValueError("second non-differential frame unsupported")
             if full_h is None:
                 raise ValueError("SOF0 before DHP in hierarchical stream")
-            # find this frame's SOS and the end of its entropy data
+            # copy this frame's segments up to its SOS, then its entropy
+            # data, which ends at the first marker other than RSTn
             j = seg_end
-            frame_raw = bytearray(b"\xff\xc0" + data[i:seg_end])
-            while j < n:
-                if data[j] != 0xFF:
+            frame_raw = bytearray(b"\xff\xc0" + data[p - 2 : seg_end])
+            m2 = marker
+            while m2 != 0xDA:
+                m2, p2, j2 = _jpeg_next_segment(data, j)
+                if m2 is None or m2 == 0xD9:
                     raise ValueError("marker expected inside frame 1")
-                m2 = data[j + 1]
-                (l2,) = struct.unpack(">H", data[j + 2 : j + 4])
-                if m2 == 0xDA:
-                    k = j + 2 + l2
-                    while k + 1 < n and not (
-                        data[k] == 0xFF
-                        and data[k + 1] != 0x00
-                        and not 0xD0 <= data[k + 1] <= 0xD7
-                    ):
-                        k += 1
-                    frame_raw += data[j : k]
-                    j = k
-                    break
-                frame_raw += data[j : j + 2 + l2]
-                j += 2 + l2
+                frame_raw += bytes((0xFF, m2)) + data[p2 - 2 : j2]
+                j = j2
+            k = j
+            while k + 1 < n and not (
+                data[k] == 0xFF
+                and data[k + 1] != 0x00
+                and not 0xD0 <= data[k + 1] <= 0xD7
+            ):
+                k += 1
+            frame_raw += data[j:k]
             standalone = b"\xff\xd8" + bytes(tables_raw) + bytes(frame_raw) + b"\xff\xd9"
             ref = jpeg_decode_gray(standalone).astype(np.int64)
-            i = j
+            i = k
+            continue
         elif marker == 0xDF:  # EXP
             if ref is None:
                 raise ValueError("EXP before the first frame")
@@ -5053,14 +5086,12 @@ def _jpeg_decode_hierarchical(data: bytes):
                 raise ValueError(f"EXP Eh/Ev {ehv:#x} unsupported (1/1 only)")
             ref = _jpeg_hier_upsample(ref, full_h, full_w)
             expanded = True
-            i = seg_end
         elif marker == 0xC7:  # differential lossless frame
             if data[p] != 8 or data[p + 5] != 1:
                 raise ValueError("SOF7 shape unsupported")
             fh, fw = struct.unpack(">HH", data[p + 1 : p + 5])
             if (fh, fw) != (full_h, full_w):
                 raise ValueError("SOF7 dims disagree with DHP")
-            i = seg_end
         elif marker in (0xC5, 0xC6):
             raise ValueError(
                 "differential DCT frames unsupported (lossless SOF7 only)"
@@ -5091,8 +5122,7 @@ def _jpeg_decode_hierarchical(data: bytes):
             if out.max() > 255:
                 raise ValueError("hierarchical reconstruction out of range")
             return out.astype(np.uint8)
-        else:
-            i = seg_end
+        i = seg_end
     raise ValueError("no differential scan found in hierarchical stream")
 
 
@@ -5248,12 +5278,9 @@ def exif_app1_payload(tags0, exif_tags, byte_order: str = "II") -> bytes:
 def jpeg_with_exif(jpeg: bytes, app1_payload: bytes) -> bytes:
     """Splice an APP1 segment right after SOI (the Exif placement
     rule)."""
-    import struct
-
     if jpeg[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG (missing SOI)")
-    seg = b"\xff\xe1" + struct.pack(">H", 2 + len(app1_payload)) + app1_payload
-    return jpeg[:2] + seg + jpeg[2:]
+    return jpeg[:2] + _jpeg_segment(0xE1, app1_payload) + jpeg[2:]
 
 
 def _exif_walk_ifd(b: bytes, e: str, ifd_at: int, label: str):
@@ -5307,29 +5334,17 @@ def exif_extract(content: bytes, label: str = "asset"):
     by a marker walk) or a bare TIFF; walks IFD0 and, when present, the
     Exif sub-IFD pointed to by tag 34665. Returns rows of
     (ifd, tag_id, tag_name, tag_type, value)."""
-    import struct
-
     b = bytes(content)
     if b[:2] == b"\xff\xd8":
         i = 2
-        tiff = None
-        while i + 4 <= len(b):
-            if b[i] != 0xFF:
+        while True:
+            marker, p, seg_end = _jpeg_next_segment(b, i)
+            if marker == 0xE1 and b[p : p + 6] == b"Exif\x00\x00":
+                b = b[p + 6 : seg_end]
                 break
-            marker = b[i + 1]
-            if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-                i += 2
-                continue
-            (seglen,) = struct.unpack(">H", b[i + 2 : i + 4])
-            if marker == 0xE1 and b[i + 4 : i + 10] == b"Exif\x00\x00":
-                tiff = b[i + 10 : i + 2 + seglen]
-                break
-            if marker == 0xDA:
-                break
-            i += 2 + seglen
-        if tiff is None:
-            raise ValueError(f"{label}: JPEG carries no Exif APP1 segment")
-        b = tiff
+            if marker in (None, 0xD9, 0xDA):
+                raise ValueError(f"{label}: JPEG carries no Exif APP1 segment")
+            i = seg_end
     if b[:2] not in (b"II", b"MM"):
         raise ValueError(f"{label}: no TIFF header in EXIF payload")
     e = "<" if b[:2] == b"II" else ">"
@@ -5735,37 +5750,6 @@ def encode_pixel_assets(
     )
 
 
-def _jpeg_block_symbols(blk, prev_dc: int):
-    """Module-level symbol stream for one zigzag block (the color
-    encoder's twin of the closure inside :func:`jpeg_encode_gray`):
-    returns (new_prev_dc, [(table, symbol, size, bits), ...])."""
-    syms = []
-    size, bits = _jpeg_category(int(blk[0]) - prev_dc)
-    syms.append(("dc", size, size, bits))
-    run = 0
-    last_nz = 0
-    for k in range(63, 0, -1):
-        if blk[k]:
-            last_nz = k
-            break
-    for k in range(1, last_nz + 1):
-        v = int(blk[k])
-        if v == 0:
-            run += 1
-            continue
-        while run >= 16:
-            syms.append(("ac", 0xF0, 0, 0))
-            run -= 16
-        size, bits = _jpeg_category(v)
-        if size > 10:
-            raise ValueError("AC coefficient magnitude beyond category 10")
-        syms.append(("ac", (run << 4) | size, size, bits))
-        run = 0
-    if last_nz < 63:
-        syms.append(("ac", 0x00, 0, 0))
-    return int(blk[0]), syms
-
-
 def jpeg_encode_color(
     rgb,
     subsample: str = "420",
@@ -5784,116 +5768,30 @@ def jpeg_encode_color(
     bit-exactly — the hash-gate contract; chroma-rich content is the
     standard lossy path, pytest-held against the quantize→dequantize
     reference."""
-    import struct
-
     import numpy as np
 
     px = np.asarray(rgb, dtype=np.uint8)
     if px.ndim != 3 or px.shape[2] != 3:
         raise ValueError("jpeg_encode_color expects (h, w, 3)")
-    if subsample not in ("444", "422", "420"):
-        raise ValueError("subsample must be '444', '422', or '420'")
+    planes, hs, vs = _jpeg_ycbcr_planes(px, subsample)
+    ql, qc = _jpeg_qtable(qtable_luma), _jpeg_qtable(qtable_chroma)
+    zz = [
+        _jpeg_fdct_zigzag(plane, q).tolist()
+        for plane, q in zip(planes, (ql, qc, qc))
+    ]
+    mcu_syms = _jpeg_scan_symbols(_jpeg_mcus(zz, hs, vs), 3, restart_interval)
     h, w = px.shape[:2]
-    hs = 2 if subsample in ("420", "422") else 1
-    vs = 2 if subsample == "420" else 1
-    mcus_x = (w + 8 * hs - 1) // (8 * hs)
-    mcus_y = (h + 8 * vs - 1) // (8 * vs)
-    ph, pw = mcus_y * 8 * vs, mcus_x * 8 * hs
-    padded = np.pad(
-        px.astype(np.float64), ((0, ph - h), (0, pw - w), (0, 0)), mode="edge"
+    return (
+        b"\xff\xd8"
+        + _JFIF_APP0
+        + _jpeg_dqt([(0, ql), (1, qc)])
+        + _jpeg_sof(0xC0, h, w, (hs, vs))
+        + _jpeg_dht(_JPEG_STD_TABLES, (0, 1))  # same fixed tables under both ids
+        + _jpeg_dri(restart_interval)
+        + _jpeg_sos([(1, 0x00), (2, 0x11), (3, 0x11)])
+        + _jpeg_huffman_scan(mcu_syms, restart_interval, _JPEG_STD_TABLES)
+        + b"\xff\xd9"
     )
-    r_, g_, b_ = padded[..., 0], padded[..., 1], padded[..., 2]
-    y = 0.299 * r_ + 0.587 * g_ + 0.114 * b_
-    cb = 128.0 - 0.168736 * r_ - 0.331264 * g_ + 0.5 * b_
-    cr = 128.0 + 0.5 * r_ - 0.418688 * g_ - 0.081312 * b_
-    if vs == 2:
-        cb = cb.reshape(ph // 2, 2, pw).mean(axis=1)
-        cr = cr.reshape(ph // 2, 2, pw).mean(axis=1)
-    if hs == 2:
-        cb = cb.reshape(cb.shape[0], pw // 2, 2).mean(axis=2)
-        cr = cr.reshape(cr.shape[0], pw // 2, 2).mean(axis=2)
-
-    ql = np.asarray(
-        qtable_luma if qtable_luma is not None else [8] + [16] * 63,
-        dtype=np.int32,
-    ).reshape(8, 8)
-    qc = np.asarray(
-        qtable_chroma if qtable_chroma is not None else [8] + [16] * 63,
-        dtype=np.int32,
-    ).reshape(8, 8)
-
-    m = _jpeg_dct_matrix()
-
-    def to_blocks(plane, q):
-        bh, bw_ = plane.shape[0] // 8, plane.shape[1] // 8
-        blocks = (
-            plane.reshape(bh, 8, bw_, 8).transpose(0, 2, 1, 3).reshape(-1, 8, 8)
-            - 128.0
-        )
-        coef = np.einsum("ux,nxy,vy->nuv", m, blocks, m)
-        quant = np.round(coef / q[None, :, :]).astype(np.int64).reshape(-1, 64)
-        return quant[:, _JPEG_ZIGZAG].reshape(bh, bw_, 64)
-
-    zz_y = to_blocks(y, ql)
-    zz_cb = to_blocks(cb, qc)
-    zz_cr = to_blocks(cr, qc)
-
-    dc_codes = _jpeg_canonical_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
-    ac_codes = _jpeg_canonical_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
-
-    out = bytearray(b"\xff\xd8")
-    out += b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
-    for tid, q in ((0, ql), (1, qc)):
-        zzq = q.reshape(-1)[_JPEG_ZIGZAG]
-        out += b"\xff\xdb" + struct.pack(">H", 67)
-        out.append(tid)
-        out += bytes(int(v) for v in zzq)
-    out += b"\xff\xc0" + struct.pack(">HBHHB", 17, 8, h, w, 3)
-    out += bytes([1, (hs << 4) | vs, 0])  # Y
-    out += bytes([2, 0x11, 1])  # Cb
-    out += bytes([3, 0x11, 1])  # Cr
-    for tid in (0, 1):  # same fixed tables under both ids
-        for cls, bits, vals in (
-            (0x00, _JPEG_DC_BITS, _JPEG_DC_VALS),
-            (0x10, _JPEG_AC_BITS, _JPEG_AC_VALS),
-        ):
-            out += b"\xff\xc4" + struct.pack(">H", 19 + len(vals))
-            out.append(cls | tid)
-            out += bytes(bits) + bytes(vals)
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
-    out += b"\xff\xda" + struct.pack(">HB", 12, 3)
-    out += bytes([1, 0x00, 2, 0x11, 3, 0x11, 0, 0x3F, 0])
-
-    bw = _JpegBitWriter()
-    prev = [0, 0, 0]
-    rst = 0
-    for midx in range(mcus_y * mcus_x):
-        if restart_interval and midx and midx % restart_interval == 0:
-            bw.flush()
-            out += bw.out
-            bw = _JpegBitWriter()
-            out += bytes([0xFF, 0xD0 + (rst % 8)])
-            rst += 1
-            prev = [0, 0, 0]
-        my, mx = divmod(midx, mcus_x)
-        mcu_blocks = []
-        for v in range(vs):
-            for hh in range(hs):
-                mcu_blocks.append((0, zz_y[my * vs + v, mx * hs + hh]))
-        mcu_blocks.append((1, zz_cb[my, mx]))
-        mcu_blocks.append((2, zz_cr[my, mx]))
-        for ci, blk in mcu_blocks:
-            prev[ci], syms = _jpeg_block_symbols(blk, prev[ci])
-            for tbl, sym, size, bits in syms:
-                ln, code = (dc_codes if tbl == "dc" else ac_codes)[sym]
-                bw.write(code, ln)
-                if size:
-                    bw.write(bits, size)
-    bw.flush()
-    out += bw.out
-    out += b"\xff\xd9"
-    return bytes(out)
 
 
 def _gray_rgb(aid, w, h):
@@ -5964,23 +5862,24 @@ def jpeg_color_decode_stats(assets: DataFrame) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def _jpeg_emit_dc_first(zz, al, bw, dc_codes):
+def _jpeg_emit_dc_first(units, al, bw, dc_codes):
     """DC-first scan (Ss=Se=0, Ah=0): sequential-style DIFF coding of the
-    point-transformed DC (arithmetic shift — T.81 G.1.2.1)."""
-    prev = 0
-    for blk in zz:
+    point-transformed DC (arithmetic shift — T.81 G.1.2.1), with one
+    predictor per component of the (component, block) ``units``."""
+    prev = [0, 0, 0]
+    for ci, blk in units:
         v = int(blk[0]) >> al
-        size, bits = _jpeg_category(v - prev)
-        prev = v
+        size, bits = _jpeg_category(v - prev[ci])
+        prev[ci] = v
         ln, code = dc_codes[size]
         bw.write(code, ln)
         if size:
             bw.write(bits, size)
 
 
-def _jpeg_emit_dc_refine(zz, al, bw):
+def _jpeg_emit_dc_refine(units, al, bw):
     """DC refinement (Ah=Al+1): one raw bit per block — bit Al of DC."""
-    for blk in zz:
+    for _ci, blk in units:
         bw.write((int(blk[0]) >> al) & 1, 1)
 
 
@@ -5990,7 +5889,7 @@ def _pt_ac(v, al):
     return -((-v) >> al) if v < 0 else v >> al
 
 
-def _jpeg_emit_ac_first(zz, ss, se, al, bw, ac_codes):
+def _jpeg_emit_ac_first(units, ss, se, al, bw, ac_codes):
     """AC-first scan (Ah=0): sequential run/size coding within the band
     plus cross-block EOB runs (EOBn symbols r<<4 with r appended bits)."""
     import numpy as np
@@ -6008,7 +5907,7 @@ def _jpeg_emit_ac_first(zz, ss, se, al, bw, ac_codes):
             bw.write(eobrun - (1 << nbits), nbits)
         eobrun = 0
 
-    for blk in zz:
+    for _ci, blk in units:
         # vectorized G.1.2.2 point transform (truncate toward zero)
         seg = np.asarray(blk[ss : se + 1], dtype=np.int64)
         t = np.where(seg < 0, -((-seg) >> al), seg >> al).tolist()
@@ -6044,7 +5943,7 @@ def _jpeg_emit_ac_first(zz, ss, se, al, bw, ac_codes):
     flush_eob()
 
 
-def _jpeg_emit_ac_refine(zz, ss, se, al, bw, ac_codes):
+def _jpeg_emit_ac_refine(units, ss, se, al, bw, ac_codes):
     """AC refinement (Ah=Al+1): newly-significant coefficients code as
     (run, 1) + sign bit over ZERO-HISTORY positions only; coefficients
     already nonzero contribute buffered CORRECTION bits emitted after
@@ -6070,7 +5969,7 @@ def _jpeg_emit_ac_refine(zz, ss, se, al, bw, ac_codes):
         pending.clear()
         eobrun = 0
 
-    for blk in zz:
+    for _ci, blk in units:
         # vectorized G.1.2.2 point transform (truncate toward zero)
         seg = np.asarray(blk[ss : se + 1], dtype=np.int64)
         t = np.where(seg < 0, -((-seg) >> al), seg >> al).tolist()
@@ -6127,6 +6026,36 @@ def _jpeg_emit_ac_refine(zz, ss, se, al, bw, ac_codes):
     flush_eob()
 
 
+def _jpeg_prog_scan(units, ss: int, se: int, ah: int, al: int) -> bytes:
+    """Entropy-coded data of one progressive scan over the (component,
+    zigzag block) ``units`` in scan order, with the fixed tables: the
+    scan kind follows from (Ss, Ah)."""
+    bw = _JpegBitWriter()
+    if ss == 0:
+        if ah == 0:
+            dc_codes = _jpeg_canonical_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
+            _jpeg_emit_dc_first(units, al, bw, dc_codes)
+        else:
+            _jpeg_emit_dc_refine(units, al, bw)
+    else:
+        ac_codes = _jpeg_canonical_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
+        emit = _jpeg_emit_ac_first if ah == 0 else _jpeg_emit_ac_refine
+        emit(units, ss, se, al, bw, ac_codes)
+    bw.flush()
+    return bytes(bw.out)
+
+
+def _jpeg_scan_end(data, pos: int) -> int:
+    """Offset of the marker that ends a progressive scan's entropy data
+    read up to ``pos``: the final byte's 1-padding is discarded and
+    stuffed zero bytes are skipped; ``len(data)`` when none follows."""
+    while pos + 1 < len(data):
+        if data[pos] == 0xFF and data[pos + 1] != 0x00:
+            return pos
+        pos += 1
+    return len(data)
+
+
 def _jpeg_decode_prog_scan(data, start, coef, ss, se, ah, al, dc, ac, restart):
     """Decode ONE progressive (SOF2) scan's entropy data for a
     single-component image, updating the zigzag coefficient store
@@ -6141,9 +6070,7 @@ def _jpeg_decode_prog_scan(data, start, coef, ss, se, ah, al, dc, ac, restart):
 
     def resync():
         nonlocal prev_dc, eobrun
-        m_ = r.align_to_marker()
-        if not (0xD0 <= m_ <= 0xD7):
-            raise ValueError(f"expected RSTn, got 0x{m_:02x}")
+        r.align_to_marker()
         prev_dc = 0
         eobrun = 0
 
@@ -6228,14 +6155,7 @@ def _jpeg_decode_prog_scan(data, start, coef, ss, se, ah, al, dc, ac, restart):
                     k += 1
                 eobrun -= 1
 
-    # advance to the next marker (discard the final byte's 1-padding,
-    # tolerate stuffed zero bytes)
-    pos = r.pos
-    while pos + 1 < len(data):
-        if data[pos] == 0xFF and data[pos + 1] != 0x00:
-            return pos
-        pos += 1
-    return len(data)
+    return _jpeg_scan_end(data, r.pos)
 
 
 def _jpeg_decode_prog_dc_interleaved(
@@ -6262,9 +6182,7 @@ def _jpeg_decode_prog_dc_interleaved(
         cis.append(cindex[cid_s])
     for midx in range(mcus_y * mcus_x):
         if restart and midx and midx % restart == 0:
-            m_ = r.align_to_marker()
-            if not (0xD0 <= m_ <= 0xD7):
-                raise ValueError(f"expected RSTn, got 0x{m_:02x}")
+            r.align_to_marker()
             prev = [0] * len(scomps)
         my, mx = divmod(midx, mcus_x)
         for si, (cid_s, td, _ta) in enumerate(scomps):
@@ -6283,12 +6201,7 @@ def _jpeg_decode_prog_dc_interleaved(
                     else:  # refinement: one raw bit per block
                         if r.bit() and in_range:
                             st[row, col, 0] |= 1 << al
-    pos = r.pos
-    while pos + 1 < len(data):
-        if data[pos] == 0xFF and data[pos + 1] != 0x00:
-            return pos
-        pos += 1
-    return len(data)
+    return _jpeg_scan_end(data, r.pos)
 
 
 def jpeg_encode_progressive(
@@ -6305,71 +6218,21 @@ def jpeg_encode_progressive(
     The decoder side lives in :func:`jpeg_decode` (SOF2 path); pixel
     output equals the BASELINE decode of the same image exactly, since
     both reconstruct the identical quantized coefficients."""
-    import struct
-
     import numpy as np
 
     px = np.asarray(pixels, dtype=np.uint8)
     if px.ndim != 2:
         raise ValueError("jpeg_encode_progressive expects a 2-D array")
     h, w = px.shape
-    q = np.asarray(
-        quality_qtable if quality_qtable is not None else [8] + [16] * 63,
-        dtype=np.int32,
-    ).reshape(8, 8)
-    ph, pw = (h + 7) // 8 * 8, (w + 7) // 8 * 8
-    padded = np.pad(px, ((0, ph - h), (0, pw - w)), mode="edge")
-    blocks = (
-        padded.reshape(ph // 8, 8, pw // 8, 8)
-        .transpose(0, 2, 1, 3)
-        .reshape(-1, 8, 8)
-        .astype(np.float64)
-        - 128.0
-    )
-    m = _jpeg_dct_matrix()
-    coefs = np.einsum("ux,nxy,vy->nuv", m, blocks, m)
-    quant = np.round(coefs / q[None, :, :]).astype(np.int64).reshape(-1, 64)
-    zz = quant[:, _JPEG_ZIGZAG]
-
-    # validate the scan script: every coefficient bit delivered once
-    seen_dc = []
-    seen_ac = []
+    q = _jpeg_qtable(quality_qtable)
+    units = [(0, blk) for blk in _jpeg_fdct_zigzag(px, q).reshape(-1, 64)]
+    if any(ss == 0 and se != 0 for ss, se, _ah, _al in scans):
+        raise ValueError("progressive scans cannot mix DC and AC")
+    out = bytearray(b"\xff\xd8" + _JFIF_APP0 + _jpeg_dqt([(0, q)]))
+    out += _jpeg_sof(0xC2, h, w) + _jpeg_dht(_JPEG_STD_TABLES)
     for ss, se, ah, al in scans:
-        if ss == 0 and se != 0:
-            raise ValueError("progressive scans cannot mix DC and AC")
-        (seen_dc if ss == 0 else seen_ac).append((ss, se, ah, al))
-
-    dc_codes = _jpeg_canonical_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
-    ac_codes = _jpeg_canonical_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
-
-    out = bytearray(b"\xff\xd8")
-    out += b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
-    zz_q = q.reshape(-1)[_JPEG_ZIGZAG]
-    out += b"\xff\xdb" + struct.pack(">H", 67) + b"\x00" + bytes(int(v) for v in zz_q)
-    out += b"\xff\xc2" + struct.pack(">HBHHB", 11, 8, h, w, 1) + b"\x01\x11\x00"
-    for cls, bits, vals in (
-        (0x00, _JPEG_DC_BITS, _JPEG_DC_VALS),
-        (0x10, _JPEG_AC_BITS, _JPEG_AC_VALS),
-    ):
-        out += b"\xff\xc4" + struct.pack(">H", 19 + len(vals))
-        out.append(cls)
-        out += bytes(bits) + bytes(vals)
-
-    for ss, se, ah, al in scans:
-        out += b"\xff\xda" + struct.pack(">HB", 8, 1)
-        out += bytes([1, 0x00, ss, se, (ah << 4) | al])
-        bw = _JpegBitWriter()
-        if ss == 0:
-            if ah == 0:
-                _jpeg_emit_dc_first(zz, al, bw, dc_codes)
-            else:
-                _jpeg_emit_dc_refine(zz, al, bw)
-        elif ah == 0:
-            _jpeg_emit_ac_first(zz, ss, se, al, bw, ac_codes)
-        else:
-            _jpeg_emit_ac_refine(zz, ss, se, al, bw, ac_codes)
-        bw.flush()
-        out += bw.out
+        out += _jpeg_sos([(1, 0x00)], ss, se, ah, al)
+        out += _jpeg_prog_scan(units, ss, se, ah, al)
     out += b"\xff\xd9"
     return bytes(out)
 
@@ -6464,57 +6327,15 @@ def jpeg_encode_progressive_color(
     component index 0/1/2. Decodes through :func:`jpeg_decode`'s SOF2
     path to pixels IDENTICAL to the baseline color encode of the same
     image (both reconstruct the same quantized coefficients)."""
-    import struct
-
     import numpy as np
 
     px = np.asarray(rgb, dtype=np.uint8)
     if px.ndim != 3 or px.shape[2] != 3:
         raise ValueError("jpeg_encode_progressive_color expects (h, w, 3)")
-    if subsample not in ("444", "422", "420"):
-        raise ValueError("subsample must be '444', '422', or '420'")
+    planes, hs, vs = _jpeg_ycbcr_planes(px, subsample)
     h, w = px.shape[:2]
-    hs = 2 if subsample in ("420", "422") else 1
-    vs = 2 if subsample == "420" else 1
-    mcus_x = (w + 8 * hs - 1) // (8 * hs)
-    mcus_y = (h + 8 * vs - 1) // (8 * vs)
-    ph, pw = mcus_y * 8 * vs, mcus_x * 8 * hs
-    padded = np.pad(
-        px.astype(np.float64), ((0, ph - h), (0, pw - w), (0, 0)), mode="edge"
-    )
-    r_, g_, b_ = padded[..., 0], padded[..., 1], padded[..., 2]
-    y = 0.299 * r_ + 0.587 * g_ + 0.114 * b_
-    cb = 128.0 - 0.168736 * r_ - 0.331264 * g_ + 0.5 * b_
-    cr = 128.0 + 0.5 * r_ - 0.418688 * g_ - 0.081312 * b_
-    if vs == 2:
-        cb = cb.reshape(ph // 2, 2, pw).mean(axis=1)
-        cr = cr.reshape(ph // 2, 2, pw).mean(axis=1)
-    if hs == 2:
-        cb = cb.reshape(cb.shape[0], pw // 2, 2).mean(axis=2)
-        cr = cr.reshape(cr.shape[0], pw // 2, 2).mean(axis=2)
-
-    ql = np.asarray(
-        qtable_luma if qtable_luma is not None else [8] + [16] * 63,
-        dtype=np.int32,
-    ).reshape(8, 8)
-    qc = np.asarray(
-        qtable_chroma if qtable_chroma is not None else [8] + [16] * 63,
-        dtype=np.int32,
-    ).reshape(8, 8)
-    m = _jpeg_dct_matrix()
-
-    def to_blocks(plane, q):
-        bh, bw_ = plane.shape[0] // 8, plane.shape[1] // 8
-        blocks = (
-            plane.reshape(bh, 8, bw_, 8).transpose(0, 2, 1, 3).reshape(-1, 8, 8)
-            - 128.0
-        )
-        coef = np.einsum("ux,nxy,vy->nuv", m, blocks, m)
-        quant = np.round(coef / q[None, :, :]).astype(np.int64).reshape(-1, 64)
-        return quant[:, _JPEG_ZIGZAG].reshape(bh, bw_, 64)
-
-    zz = [to_blocks(y, ql), to_blocks(cb, qc), to_blocks(cr, qc)]
-    samp = [(hs, vs), (1, 1), (1, 1)]
+    ql, qc = _jpeg_qtable(qtable_luma), _jpeg_qtable(qtable_chroma)
+    zz = [_jpeg_fdct_zigzag(plane, q) for plane, q in zip(planes, (ql, qc, qc))]
     # true data-unit grids (T.81 A.1.1) — AC scans cover exactly these
     true_dims = [
         (((h + 7) // 8), ((w + 7) // 8)),
@@ -6528,81 +6349,24 @@ def jpeg_encode_progressive_color(
             ("all", 0, 0, 1, 0),
             (0, 1, 63, 1, 0), (1, 1, 63, 1, 0), (2, 1, 63, 1, 0),
         )
-
-    dc_codes = _jpeg_canonical_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
-    ac_codes = _jpeg_canonical_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
-
-    out = bytearray(b"\xff\xd8")
-    out += b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
-    for tid, q in ((0, ql), (1, qc)):
-        zzq = q.reshape(-1)[_JPEG_ZIGZAG]
-        out += b"\xff\xdb" + struct.pack(">H", 67)
-        out.append(tid)
-        out += bytes(int(v) for v in zzq)
-    out += b"\xff\xc2" + struct.pack(">HBHHB", 17, 8, h, w, 3)
-    out += bytes([1, (hs << 4) | vs, 0])  # Y
-    out += bytes([2, 0x11, 1])  # Cb
-    out += bytes([3, 0x11, 1])  # Cr
-    for tid in (0, 1):  # same fixed tables under both ids
-        for cls, bits, vals in (
-            (0x00, _JPEG_DC_BITS, _JPEG_DC_VALS),
-            (0x10, _JPEG_AC_BITS, _JPEG_AC_VALS),
-        ):
-            out += b"\xff\xc4" + struct.pack(">H", 19 + len(vals))
-            out.append(cls | tid)
-            out += bytes(bits) + bytes(vals)
-
+    mcu_units = [unit for mcu in _jpeg_mcus(zz, hs, vs) for unit in mcu]
+    out = bytearray(b"\xff\xd8" + _JFIF_APP0 + _jpeg_dqt([(0, ql), (1, qc)]))
+    out += _jpeg_sof(0xC2, h, w, (hs, vs))
+    out += _jpeg_dht(_JPEG_STD_TABLES, (0, 1))  # same fixed tables under both ids
     for comp, ss, se, ah, al in scans:
-        bw = _JpegBitWriter()
         if comp == "all":
             if ss != 0 or se != 0:
                 raise ValueError("interleaved scans must be DC-only")
-            out += b"\xff\xda" + struct.pack(">HB", 12, 3)
-            out += bytes([1, 0x00, 2, 0x10, 3, 0x10, 0, 0, (ah << 4) | al])
-            prev = [0, 0, 0]
-            for midx in range(mcus_y * mcus_x):
-                my, mx = divmod(midx, mcus_x)
-                blks = []
-                for v in range(vs):
-                    for hh in range(hs):
-                        blks.append((0, zz[0][my * vs + v, mx * hs + hh]))
-                blks.append((1, zz[1][my, mx]))
-                blks.append((2, zz[2][my, mx]))
-                for ci, blk in blks:
-                    if ah == 0:
-                        v_ = int(blk[0]) >> al
-                        size, bits = _jpeg_category(v_ - prev[ci])
-                        prev[ci] = v_
-                        ln, code = dc_codes[size]
-                        bw.write(code, ln)
-                        if size:
-                            bw.write(bits, size)
-                    else:
-                        bw.write((int(blk[0]) >> al) & 1, 1)
-        else:
-            ci = int(comp)
-            out += b"\xff\xda" + struct.pack(">HB", 8, 1)
-            # Td/Ta selectors: table 0 for luma, 1 for chroma (the DC id
-            # matters only when Ss=0, the AC id only when Ss>0)
-            tt = 0x00 if ci == 0 else 0x11
-            out += bytes([ci + 1, tt, ss, se, (ah << 4) | al])
-            bh_t, bw_t = true_dims[ci]
-            blocks = [
-                zz[ci][r0, c0]
-                for r0 in range(bh_t)
-                for c0 in range(bw_t)
-            ]
-            if ss == 0:
-                if ah == 0:
-                    _jpeg_emit_dc_first(blocks, al, bw, dc_codes)
-                else:
-                    _jpeg_emit_dc_refine(blocks, al, bw)
-            elif ah == 0:
-                _jpeg_emit_ac_first(blocks, ss, se, al, bw, ac_codes)
-            else:
-                _jpeg_emit_ac_refine(blocks, ss, se, al, bw, ac_codes)
-        bw.flush()
-        out += bw.out
+            out += _jpeg_sos([(1, 0x00), (2, 0x10), (3, 0x10)], 0, 0, ah, al)
+            out += _jpeg_prog_scan(mcu_units, 0, 0, ah, al)
+            continue
+        ci = int(comp)
+        # Td/Ta selectors: table 0 for luma, 1 for chroma (the DC id
+        # matters only when Ss=0, the AC id only when Ss>0)
+        out += _jpeg_sos([(ci + 1, 0x00 if ci == 0 else 0x11)], ss, se, ah, al)
+        bh_t, bw_t = true_dims[ci]
+        units = [(ci, blk) for blk in zz[ci][:bh_t, :bw_t].reshape(-1, 64)]
+        out += _jpeg_prog_scan(units, ss, se, ah, al)
     out += b"\xff\xd9"
     return bytes(out)
 
@@ -7043,8 +6807,6 @@ def jpeg_encode_arith(
     arithmetic-vs-Huffman pixel equality isolates the entropy layer.
     Default quant tables keep the DC quantum at 8 — block-constant
     content round-trips bit-exactly, the hash-gate contract."""
-    import struct
-
     import numpy as np
 
     cond_l, cond_u = dc_conditioning
@@ -7061,92 +6823,31 @@ def jpeg_encode_arith(
     h, w = px.shape[:2]
     if not (0 < h <= 65535 and 0 < w <= 65535):
         raise ValueError("image dimensions out of JPEG range")
-    m = _jpeg_dct_matrix()
-    ql = np.asarray(
-        quality_qtable if quality_qtable is not None else [8] + [16] * 63,
-        dtype=np.int32,
-    ).reshape(8, 8)
-
-    def to_blocks(plane, q):
-        bh, bw_ = plane.shape[0] // 8, plane.shape[1] // 8
-        blocks = (
-            plane.reshape(bh, 8, bw_, 8).transpose(0, 2, 1, 3).reshape(-1, 8, 8)
-            - 128.0
-        )
-        coef = np.einsum("ux,nxy,vy->nuv", m, blocks, m)
-        quant = np.round(coef / q[None, :, :]).astype(np.int64).reshape(-1, 64)
-        return quant[:, _JPEG_ZIGZAG].reshape(bh, bw_, 64)
-
-    out = bytearray(b"\xff\xd8")
-    out += b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
+    ql = _jpeg_qtable(quality_qtable)
+    out = bytearray(b"\xff\xd8" + _JFIF_APP0)
     if color:
-        if subsample not in ("444", "422", "420"):
-            raise ValueError("subsample must be '444', '422', or '420'")
-        hs = 2 if subsample in ("420", "422") else 1
-        vs = 2 if subsample == "420" else 1
-        mcus_x = (w + 8 * hs - 1) // (8 * hs)
-        mcus_y = (h + 8 * vs - 1) // (8 * vs)
-        ph, pw = mcus_y * 8 * vs, mcus_x * 8 * hs
-        padded = np.pad(
-            px.astype(np.float64), ((0, ph - h), (0, pw - w), (0, 0)),
-            mode="edge",
-        )
-        r_, g_, b_ = padded[..., 0], padded[..., 1], padded[..., 2]
-        y = 0.299 * r_ + 0.587 * g_ + 0.114 * b_
-        cb = 128.0 - 0.168736 * r_ - 0.331264 * g_ + 0.5 * b_
-        cr = 128.0 + 0.5 * r_ - 0.418688 * g_ - 0.081312 * b_
-        if vs == 2:
-            cb = cb.reshape(ph // 2, 2, pw).mean(axis=1)
-            cr = cr.reshape(ph // 2, 2, pw).mean(axis=1)
-        if hs == 2:
-            cb = cb.reshape(cb.shape[0], pw // 2, 2).mean(axis=2)
-            cr = cr.reshape(cr.shape[0], pw // 2, 2).mean(axis=2)
-        qc = np.asarray(
-            qtable_chroma if qtable_chroma is not None else [8] + [16] * 63,
-            dtype=np.int32,
-        ).reshape(8, 8)
-        stores = [to_blocks(y, ql), to_blocks(cb, qc), to_blocks(cr, qc)]
-        for tid, q in ((0, ql), (1, qc)):
-            zzq = q.reshape(-1)[_JPEG_ZIGZAG]
-            out += b"\xff\xdb" + struct.pack(">H", 67)
-            out.append(tid)
-            out += bytes(int(v) for v in zzq)
-        out += b"\xff\xc9" + struct.pack(">HBHHB", 17, 8, h, w, 3)
-        out += bytes([1, (hs << 4) | vs, 0])
-        out += bytes([2, 0x11, 1])
-        out += bytes([3, 0x11, 1])
+        planes, hs, vs = _jpeg_ycbcr_planes(px, subsample)
+        qc = _jpeg_qtable(qtable_chroma)
+        stores = [
+            _jpeg_fdct_zigzag(plane, q) for plane, q in zip(planes, (ql, qc, qc))
+        ]
+        out += _jpeg_dqt([(0, ql), (1, qc)]) + _jpeg_sof(0xC9, h, w, (hs, vs))
         tids = [(0, 0), (1, 1), (1, 1)]  # (Td, Ta) per component
     else:
-        ph, pw = (h + 7) // 8 * 8, (w + 7) // 8 * 8
-        padded = np.pad(px, ((0, ph - h), (0, pw - w)), mode="edge").astype(
-            np.float64
-        )
         hs = vs = 1
-        mcus_x, mcus_y = pw // 8, ph // 8
-        stores = [to_blocks(padded, ql)]
-        zzq = ql.reshape(-1)[_JPEG_ZIGZAG]
-        out += b"\xff\xdb" + struct.pack(">H", 67) + b"\x00"
-        out += bytes(int(v) for v in zzq)
-        out += b"\xff\xc9" + struct.pack(">HBHHB", 11, 8, h, w, 1)
-        out += b"\x01\x11\x00"
+        stores = [_jpeg_fdct_zigzag(px, ql)]
+        out += _jpeg_dqt([(0, ql)]) + _jpeg_sof(0xC9, h, w)
         tids = [(0, 0)]
     # DAC: conditioning for every referenced table id (Tc=0 DC: L|U<<4;
     # Tc=1 AC: Kx)
-    dac_entries = []
+    dac = []
     for tid in sorted({t[0] for t in tids}):
-        dac_entries.append((tid, cond_l | (cond_u << 4)))
+        dac += [tid, cond_l | (cond_u << 4)]
     for tid in sorted({t[1] for t in tids}):
-        dac_entries.append((0x10 | tid, ac_kx))
-    out += b"\xff\xcc" + struct.pack(">H", 2 + 2 * len(dac_entries))
-    for tc_tb, cs in dac_entries:
-        out += bytes([tc_tb, cs])
-    if restart_interval:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
+        dac += [0x10 | tid, ac_kx]
+    out += _jpeg_segment(0xCC, bytes(dac)) + _jpeg_dri(restart_interval)
+    out += _jpeg_sos([(ci + 1, (td << 4) | ta) for ci, (td, ta) in enumerate(tids)])
     ncomp = len(stores)
-    out += b"\xff\xda" + struct.pack(">HB", 6 + 2 * ncomp, ncomp)
-    for ci, (td, ta) in enumerate(tids):
-        out += bytes([ci + 1, (td << 4) | ta])
-    out += bytes([0, 0x3F, 0])
 
     def fresh_stats():
         return (
@@ -7160,14 +6861,7 @@ def jpeg_encode_arith(
     dc_ctx = [0] * ncomp
     prev_dc = [0] * ncomp
     rst = 0
-    if color:
-        mcu_plan = (
-            [(0, v, hh) for v in range(vs) for hh in range(hs)]
-            + [(1, 0, 0), (2, 0, 0)]
-        )
-    else:
-        mcu_plan = [(0, 0, 0)]
-    for midx in range(mcus_y * mcus_x):
+    for midx, units in enumerate(_jpeg_mcus(stores, hs, vs)):
         if restart_interval and midx and midx % restart_interval == 0:
             out += enc.flush()
             out += bytes([0xFF, 0xD0 + (rst % 8)])
@@ -7176,12 +6870,7 @@ def jpeg_encode_arith(
             dc_stats, ac_stats, fixed = fresh_stats()
             dc_ctx = [0] * ncomp
             prev_dc = [0] * ncomp
-        my, mx = divmod(midx, mcus_x)
-        for ci, v, hh in mcu_plan:
-            if color and ci == 0:
-                blk = stores[0][my * vs + v, mx * hs + hh]
-            else:
-                blk = stores[ci][my, mx]
+        for ci, blk in units:
             td, ta = tids[ci]
             dc = int(blk[0])
             dc_ctx[ci] = _arith_encode_dc(
@@ -7689,8 +7378,9 @@ def flac_encode_pcm16(
     decorrelation per ``stereo_mode``: independent, left_side,
     right_side, or mid_side (side channels carry bps+1 bits per spec).
     """
-    import hashlib
     import struct
+
+    import hashlib
 
     import numpy as np
 
