@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import math
 import random
+from decimal import ROUND_HALF_UP, Decimal
 from typing import Optional, Sequence
 
 import pandas as pd
@@ -126,17 +127,12 @@ def _round6_half_up(x: float) -> float:
     decimal, which is what Python ``repr`` also emits) at scale 6
     HALF_UP and converts back to double. Pinned bit-equal to the JVM by
     pytest over the live cosine distribution."""
-    import math
-    from decimal import ROUND_HALF_UP, Decimal
-
     if not math.isfinite(x):
         return x  # Spark's RoundBase passes NaN/Inf through unchanged
     return float(Decimal(repr(x)).quantize(_SIX_DP, rounding=ROUND_HALF_UP))
 
 
-from decimal import Decimal as _Decimal  # noqa: E402
-
-_SIX_DP = _Decimal("0.000001")
+_SIX_DP = Decimal("0.000001")
 
 
 def _query_arrays(query_rows, dtype="float64"):
@@ -159,6 +155,145 @@ def _cast_double(col) -> Column:
     return F.transform(c, lambda x: x.cast("double"))
 
 
+def _driver_queries(queries: DataFrame, id_col: str, vec_col: str, query_rows=None):
+    """``(int64 ids, float64 matrix)`` of the query set on the driver:
+    ``query_rows`` when the caller already holds them, else one collect."""
+    if query_rows is None:
+        rows = queries.select(id_col, vec_col).collect()
+        query_rows = ([r[0] for r in rows], [r[1] for r in rows])
+    return _query_arrays(query_rows)
+
+
+# -- the exact stage every operator below shares ----------------------------
+# Vectors cast to double and normed ONCE per vector (O(n), not once per
+# pair), the 6-dp JVM-side cosine over them (the unrolled left fold, so
+# values are bit-identical to the SQL oracle), and one deterministic rank.
+
+
+def _vec_side(df: DataFrame, id_col: str, vec_col: str, dim, id_alias: str,
+              tag: str, *extra) -> DataFrame:
+    """``(id_alias, _{tag}vec, *extra, _{tag}n)``: the id, the vector cast
+    to double, any ``extra`` columns, and the vector's L2 norm."""
+    return df.select(
+        F.col(id_col).alias(id_alias), _cast_double(vec_col).alias(f"_{tag}vec"), *extra
+    ).withColumn(f"_{tag}n", l2_norm(f"_{tag}vec", dim))
+
+
+def _cosine6(dim, a: str = "q", b: str = "c") -> Column:
+    """Cosine of the ``_a``/``_b`` vector sides, rounded to 6 dp."""
+    return F.round(
+        dot(f"_{a}vec", f"_{b}vec", dim) / (F.col(f"_{a}n") * F.col(f"_{b}n")), 6
+    )
+
+
+def _top_k(scored: DataFrame, k: int, part_col: str, item_col: str,
+           rank_name: str) -> DataFrame:
+    """The ``k`` best items per ``part_col`` by (cosine desc, item asc),
+    ranked 1..k as bigint ``rank_name``."""
+    w = Window.partitionBy(part_col).orderBy(F.col("cosine").desc(), F.col(item_col))
+    return (
+        scored.withColumn(rank_name, F.row_number().over(w).cast("bigint"))
+        .filter(F.col(rank_name) <= k)
+        .select(part_col, item_col, "cosine", rank_name)
+    )
+
+
+def _exact_rerank(cand: DataFrame, queries: DataFrame, corpus: DataFrame, k: int,
+                  id_col: str, vec_col: str, query_id_col: str, dim) -> DataFrame:
+    """Exact top-k over a ``(query_id_col, neighbor_id)`` candidate set:
+    re-attach vectors (broadcast the small query side, shuffle-join the
+    corpus side on the id), score with the exact cosine, rank."""
+    qv = _vec_side(queries, id_col, vec_col, dim, query_id_col, "q")
+    cv = _vec_side(corpus, id_col, vec_col, dim, "neighbor_id", "c")
+    scored = (
+        cand.join(F.broadcast(qv), query_id_col)
+        .join(cv, "neighbor_id")
+        .withColumn("cosine", _cosine6(dim))
+    )
+    return _top_k(scored, k, query_id_col, "neighbor_id", "rank")
+
+
+# -- the approximate candidate stage of the quantized / PQ / IVFPQ scans ----
+
+
+def _batch_topk(ids, q_ids, S, kq: int, query_id_col: str):
+    """One Arrow batch's partial top-``kq`` per query from its ``(batch,
+    n_queries)`` approximate score matrix ``S`` (self-pairs masked to -2,
+    the below-any-cosine sentinel) as ``(query, neighbor_id, qscore)``."""
+    import numpy as np
+
+    S[ids[:, None] == q_ids[None, :]] = -2.0  # mask self-pairs
+    top = min(kq, len(ids))
+    sel = np.argpartition(-S, top - 1, axis=0)[:top]  # (top, n_q)
+    qi = np.broadcast_to(np.arange(S.shape[1]), sel.shape)
+    return pd.DataFrame(
+        {
+            query_id_col: q_ids[qi.ravel()],
+            "neighbor_id": ids[sel.ravel()],
+            "qscore": S[sel.ravel(), qi.ravel()],
+        }
+    )
+
+
+def _candidates(scan_df: DataFrame, q_ids, payload: tuple, score, kq: int,
+                id_col: str, query_id_col: str) -> DataFrame:
+    """``(query_id_col, neighbor_id)``: the global top-``kq`` per query by
+    approximate score. ``score(pdf, *payload)`` turns one Arrow batch of
+    ``scan_df`` into its ``(batch, n_queries)`` score matrix (-2 marks a
+    pair that must not survive); the query ids and ``payload`` ride one
+    broadcast. Per-batch partial top-k keeps the shuffle after the scan
+    at ~queries·kq rows per partition, never the corpus. Callers ship the
+    package first (:func:`_batch_topk` runs on the workers)."""
+    bc = scan_df.sparkSession.sparkContext.broadcast((q_ids, payload))
+
+    def scan(batches):
+        q_ids_b, payload_b = bc.value
+        for pdf in batches:
+            if len(pdf):
+                ids = pdf[id_col].to_numpy(dtype="int64")
+                yield _batch_topk(ids, q_ids_b, score(pdf, *payload_b), kq, query_id_col)
+
+    cand = scan_df.mapInPandas(
+        scan, schema=f"{query_id_col} bigint, neighbor_id bigint, qscore double"
+    ).filter(F.col("qscore") > -2.0)
+    wq = Window.partitionBy(query_id_col).orderBy(
+        F.col("qscore").desc(), F.col("neighbor_id")
+    )
+    return cand.withColumn("_qr", F.row_number().over(wq)).filter(
+        F.col("_qr") <= kq
+    ).select(query_id_col, "neighbor_id")
+
+
+# -- routing rules: one numpy body each, shared by UDF and driver paths ----
+
+
+def _lsh_bucket_ids(X, M):
+    """``(n, tables)`` int64 bucket ids of the rows of ``X`` under the
+    ``(tables, planes, dim)`` hyperplanes ``M``: all plane projections of
+    all tables as ONE matmul, sign bits packed per table."""
+    import numpy as np
+
+    t, p, d = M.shape
+    signs = (X @ M.reshape(t * p, d).T) >= 0.0  # (n, tables·planes)
+    weights = 1 << np.arange(p, dtype="int64")
+    return (signs.reshape(len(X), t, p) * weights).sum(axis=2).astype("int64")
+
+
+def _nearest_lists(X, C, n_out: int):
+    """``(n, n_out)`` ids of the ``n_out`` codebook rows of ``C`` nearest
+    (cosine) to each row of ``X``, nearest first; ties go to the lower id."""
+    import numpy as np
+
+    Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+    return np.argsort(-(Xn @ C.T), axis=1, kind="stable")[:, :n_out]
+
+
+def _probe_frame(spark, q_ids, lists, query_id_col: str) -> DataFrame:
+    """``(query_id_col, list_id)`` probe pairs as a small literal frame."""
+    rows = [(int(q), int(l)) for q, row in zip(q_ids, lists) for l in row]
+    return spark.createDataFrame(rows, f"{query_id_col} long, list_id int")
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -175,49 +310,20 @@ def cosine_topk(
     Results are deterministic: ties broken by neighbor id.
     """
     dim = dim or _probe_dim(corpus, vec_col)
-    # cast + norm once per vector (O(n)), not once per pair (O(n·q));
     # spread the corpus (stream side of the broadcast join) across cores
-    q = queries.select(
-        F.col(id_col).alias(query_id_col), _cast_double(vec_col).alias("_qvec")
-    ).withColumn("_qn", l2_norm("_qvec", dim))
-    c = ensure_min_partitions(corpus, rows=n_rows).select(
-        F.col(id_col).alias("neighbor_id"), _cast_double(vec_col).alias("_cvec")
-    ).withColumn("_cn", l2_norm("_cvec", dim))
-    scored = (
-        c.join(F.broadcast(q), F.col(query_id_col) != F.col("neighbor_id"))
-        .withColumn(
-            "cosine",
-            F.round(dot("_qvec", "_cvec", dim) / (F.col("_qn") * F.col("_cn")), 6),
-        )
+    q = _vec_side(queries, id_col, vec_col, dim, query_id_col, "q")
+    c = _vec_side(
+        ensure_min_partitions(corpus, rows=n_rows), id_col, vec_col, dim, "neighbor_id", "c"
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "cosine", "rank")
-    )
+    scored = c.join(
+        F.broadcast(q), F.col(query_id_col) != F.col("neighbor_id")
+    ).withColumn("cosine", _cosine6(dim))
+    return _top_k(scored, k, query_id_col, "neighbor_id", "rank")
 
 
 def _random_hyperplanes(num_planes: int, dim: int, seed: int = 42) -> list[list[float]]:
     rng = random.Random(seed)
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(num_planes)]
-
-
-def lsh_bucket(vec_col, planes: Sequence[Sequence[float]]) -> Column:
-    """Sign-pattern bucket id from deterministic random hyperplanes. The
-    plane projections are unrolled against the literal coefficients — flat
-    codegen arithmetic, no higher-order functions."""
-    v = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    bucket = F.lit(0).cast("bigint")
-    for i, plane in enumerate(planes):
-        proj = F.lit(0.0)
-        for j, x in enumerate(plane):
-            proj = proj + F.element_at(v, j + 1).cast("double") * F.lit(float(x))
-        bit = F.when(proj >= 0, F.shiftleft(F.lit(1).cast("bigint"), i)).otherwise(
-            F.lit(0).cast("bigint")
-        )
-        bucket = bucket + bit
-    return bucket
 
 
 def lsh_cosine_topk(
@@ -261,30 +367,26 @@ def lsh_cosine_topk(
     untouched, which at 100 TB is the difference between re-hashing the
     corpus and reading a few more postings.
     """
-    dim = dim or _probe_dim(corpus, vec_col) or 64
-    tables = [
-        _random_hyperplanes(num_planes, dim, seed + 1000 * t) for t in range(num_tables)
-    ]
+    import numpy as np
 
-    # All plane projections for all tables as ONE numpy matmul per Arrow
-    # batch: (batch × dim) @ (dim × tables·planes), then pack sign bits into
-    # per-table bucket ids. Bucket ids are routing keys only (the rerank
-    # cosine is computed JVM-side below), so vectorized float math is safe
-    # here and ~1000× faster than a tables·planes·dim unrolled expression,
-    # which exceeds the JIT method limit and falls back to interpreted eval.
-    P = [[list(map(float, plane)) for plane in t] for t in tables]
+    from .multimodal import _ship_package
+
+    _ship_package(corpus.sparkSession)
+    dim = dim or _probe_dim(corpus, vec_col) or 64
+    # (tables, planes, dim). Bucket ids are routing keys only (the rerank
+    # cosine is computed JVM-side), so one numpy matmul per Arrow batch is
+    # safe here and ~1000× faster than a tables·planes·dim unrolled
+    # expression, which exceeds the JIT method limit and runs interpreted.
+    M = np.array(
+        [_random_hyperplanes(num_planes, dim, seed + 1000 * t) for t in range(num_tables)],
+        dtype="float64",
+    )
 
     @F.pandas_udf("array<long>")
     def _buckets(v: pd.Series) -> pd.Series:
         import numpy as np
 
-        M = np.array(P, dtype="float64")  # (tables, planes, dim)
-        t, p, d = M.shape
-        X = np.vstack(v.to_numpy()).astype("float64")  # (n, dim)
-        signs = (X @ M.reshape(t * p, d).T) >= 0.0  # (n, tables·planes)
-        weights = 1 << np.arange(p, dtype="int64")
-        ids = (signs.reshape(len(X), t, p) * weights).sum(axis=2)  # (n, tables)
-        return pd.Series(list(ids.astype("int64")))
+        return pd.Series(list(_lsh_bucket_ids(np.vstack(v.to_numpy()).astype("float64"), M)))
 
     # pure routing math on broadcast planes; the flag (guide §4.4) stops
     # the optimizer duplicating the Python stage around pushed bucket
@@ -303,19 +405,12 @@ def lsh_cosine_topk(
 
     c = with_buckets(corpus, id_col, "neighbor_id", rows=n_rows)
     if query_rows is not None:
-        # query buckets driver-side: the exact numpy body of _buckets over
-        # the same float64 inputs → identical bucket ids; probe rows
-        # (incl. multiprobe single-bit flips) become a literal broadcast
-        import numpy as np
-
+        # query buckets driver-side: _buckets' numpy body over the same
+        # float64 inputs → identical bucket ids; probe rows (incl.
+        # multiprobe single-bit flips) become a literal broadcast
         q_ids, Xq = _query_arrays(query_rows)
-        M = np.array(P, dtype="float64")
-        t, p, d = M.shape
-        signs = (Xq @ M.reshape(t * p, d).T) >= 0.0
-        weights = 1 << np.arange(p, dtype="int64")
-        ids_tab = (signs.reshape(len(Xq), t, p) * weights).sum(axis=2)
         probe_rows = []
-        for qid, row in zip(q_ids, ids_tab):
+        for qid, row in zip(q_ids, _lsh_bucket_ids(Xq, M)):
             for table, bucket in enumerate(row):
                 probe_rows.append((int(qid), table, int(bucket)))
                 for b in range(min(multiprobe, num_planes)):
@@ -345,28 +440,7 @@ def lsh_cosine_topk(
         .select(query_id_col, "neighbor_id")
         .dropDuplicates([query_id_col, "neighbor_id"])
     )
-    # re-attach vectors to the (deduped) candidate set: broadcast the small
-    # query side, shuffle-join the corpus side on the id
-    qv = queries.select(
-        F.col(id_col).alias(query_id_col), _cast_double(vec_col).alias("_qvec")
-    ).withColumn("_qn", l2_norm("_qvec", dim))
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _cast_double(vec_col).alias("_cvec")
-    ).withColumn("_cn", l2_norm("_cvec", dim))
-    scored = (
-        cand.join(F.broadcast(qv), query_id_col)
-        .join(cv, "neighbor_id")
-        .withColumn(
-            "cosine",
-            F.round(dot("_qvec", "_cvec", dim) / (F.col("_qn") * F.col("_cn")), 6),
-        )
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "cosine", "rank")
-    )
+    return _exact_rerank(cand, queries, corpus, k, id_col, vec_col, query_id_col, dim)
 
 
 def cosine_neardup_pairs(
@@ -428,19 +502,30 @@ def cosine_neardup_pairs(
     # Stage 2 — exact VERIFY on the surviving pairs only: the JVM-side
     # unrolled left-fold cosine (bit-identical to the SQL oracle) decides
     # membership and produces the reported value.
-    a = df.select(F.col(id_col).alias("id_a"), _cast_double(vec_col).alias("_va")).withColumn(
-        "_na", l2_norm("_va", dim)
-    )
-    b = df.select(F.col(id_col).alias("id_b"), _cast_double(vec_col).alias("_vb")).withColumn(
-        "_nb", l2_norm("_vb", dim)
-    )
+    a = _vec_side(df, id_col, vec_col, dim, "id_a", "a")
+    b = _vec_side(df, id_col, vec_col, dim, "id_b", "b")
     return (
         cand.join(F.broadcast(a), "id_a")
         .join(F.broadcast(b), "id_b")
-        .withColumn("cosine", F.round(dot("_va", "_vb", dim) / (F.col("_na") * F.col("_nb")), 6))
+        .withColumn("cosine", _cosine6(dim, "a", "b"))
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
     )
+
+
+def _hash_sample(corpus: DataFrame, id_col: str, vec_col: str, seed: int, cap: int):
+    """Float64 matrix of the first ``cap`` corpus vectors in
+    ``xxhash64(id + seed)`` order: the deterministic training sample, one
+    TakeOrdered collect."""
+    import numpy as np
+
+    rows = (
+        corpus.select(id_col, vec_col)
+        .orderBy(F.xxhash64(F.col(id_col) + seed))
+        .limit(cap)
+        .collect()
+    )
+    return np.vstack([np.asarray(r[1], dtype="float64") for r in rows])
 
 
 def fit_ivf_centroids(
@@ -481,13 +566,7 @@ def fit_ivf_centroids(
         order = np.argsort(xxhash64_long(ids + np.int64(seed)), kind="stable")[:cap]
         X = Xa[order]
     else:
-        rows = (
-            corpus.select(id_col, vec_col)
-            .orderBy(F.xxhash64(F.col(id_col) + seed))
-            .limit(cap)
-            .collect()
-        )
-        X = np.vstack([np.asarray(r[1], dtype="float64") for r in rows])
+        X = _hash_sample(corpus, id_col, vec_col, seed, cap)
     X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-300)
     # a sample smaller than the requested codebook: every vector is its own
     # centroid (the Lloyd loop below indexes C[j] for j < num_centroids)
@@ -515,16 +594,19 @@ def assign_ivf_lists(
     """Corpus with a ``list_id`` column: index of the nearest (cosine)
     codebook centroid. One Arrow-batched matmul per batch — the map-side
     pass that builds the inverted lists at ingest."""
-    C_list = [list(map(float, row)) for row in centroids]
+    import numpy as np
+
+    from .multimodal import _ship_package
+
+    _ship_package(corpus.sparkSession)
+    M = np.array([list(map(float, row)) for row in centroids], dtype="float64")
 
     @F.pandas_udf("int")
     def nearest(v: pd.Series) -> pd.Series:
         import numpy as np
 
-        M = np.array(C_list, dtype="float64")
         X = np.vstack(v.to_numpy()).astype("float64")
-        Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-        return pd.Series((-(Xn @ M.T)).argmin(axis=1).astype("int32"))
+        return pd.Series(_nearest_lists(X, M, 1)[:, 0].astype("int32"))
 
     # pure; the flag stops filter-pushdown duplication of the Python
     # stage (guide §4.4; plan-swept r12 via dedup_semantic_pairs)
@@ -576,50 +658,23 @@ def ivf_cosine_topk_indexed(
         C = np.vstack([np.asarray(r["centroid"], dtype="float64") for r in cb_rows])
     dim = C.shape[1]
 
-    if query_rows is not None:
-        q_ids_arr, X = _query_arrays(query_rows)
-        q_ids = [int(i) for i in q_ids_arr]
-    else:
-        q_rows = queries.select(id_col, vec_col).collect()
-        q_ids = [r[0] for r in q_rows]
-        X = np.vstack([np.asarray(r[1], dtype="float64") for r in q_rows])
-    Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-    order = np.argsort(-(Xn @ C.T), axis=1)[:, :n_probe]
+    q_ids, X = _driver_queries(queries, id_col, vec_col, query_rows)
+    order = _nearest_lists(X, C, n_probe)
+    probes_df = _probe_frame(corpus.sparkSession, q_ids, order, query_id_col)
+    probed = sorted({int(list_id) for list_id in order.ravel()})
 
-    spark = corpus.sparkSession
-    probes = [
-        (int(qid), int(list_id)) for qid, row in zip(q_ids, order) for list_id in row
-    ]
-    probed = sorted({list_id for _, list_id in probes})
-    probes_df = spark.createDataFrame(probes, f"{query_id_col} long, list_id int")
-
-    qv = queries.select(
-        F.col(id_col).alias(query_id_col), _cast_double(vec_col).alias("_qvec")
-    ).withColumn("_qn", l2_norm("_qvec", dim))
-    c = (
-        corpus.filter(F.col("list_id").isin(probed))
-        .select(
-            F.col(id_col).alias("neighbor_id"),
-            _cast_double(vec_col).alias("_cvec"),
-            "list_id",
-        )
-        .withColumn("_cn", l2_norm("_cvec", dim))
+    qv = _vec_side(queries, id_col, vec_col, dim, query_id_col, "q")
+    c = _vec_side(
+        corpus.filter(F.col("list_id").isin(probed)),
+        id_col, vec_col, dim, "neighbor_id", "c", "list_id",
     )
     scored = (
         c.join(F.broadcast(probes_df), "list_id")
         .filter(F.col(query_id_col) != F.col("neighbor_id"))
         .join(F.broadcast(qv), query_id_col)
-        .withColumn(
-            "cosine",
-            F.round(dot("_qvec", "_cvec", dim) / (F.col("_qn") * F.col("_cn")), 6),
-        )
+        .withColumn("cosine", _cosine6(dim))
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "cosine", "rank")
-    )
+    return _top_k(scored, k, query_id_col, "neighbor_id", "rank")
 
 
 def ivf_cosine_topk(
@@ -659,24 +714,22 @@ def ivf_cosine_topk(
     query side; training is one sample-collect job regardless of corpus
     size.
     """
-    import numpy as np  # noqa: F401 — used by fit_ivf_centroids callers
+    from .multimodal import _ship_package
 
+    _ship_package(corpus.sparkSession)
     dim = dim or _probe_dim(corpus, vec_col)
     C = fit_ivf_centroids(
         corpus, num_centroids, seed, id_col, vec_col, method=centroids,
         corpus_rows=corpus_rows,
     )
-    C_list = [list(map(float, row)) for row in C]
 
     def _nearest_udf(n_out: int):
         @F.pandas_udf("array<int>")
         def nearest(v: pd.Series) -> pd.Series:
-            M = np.array(C_list, dtype="float64")
+            import numpy as np
+
             X = np.vstack(v.to_numpy()).astype("float64")
-            Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-            sims = Xn @ M.T  # (n, m)
-            order = np.argsort(-sims, axis=1)[:, :n_out].astype("int32")
-            return pd.Series(list(order))
+            return pd.Series(list(_nearest_lists(X, C, n_out).astype("int32")))
         # asNondeterministic (r12, guide §4.4): the list_id join implies
         # `isnotnull(element_at(nearest(...), 1))`, which Catalyst pushed
         # BELOW the corpus repartition while re-evaluating the UDF in the
@@ -688,52 +741,32 @@ def ivf_cosine_topk(
         # plan to one Python stage.
         return nearest.asNondeterministic()
 
-    c = ensure_min_partitions(corpus, rows=n_rows).select(
-        F.col(id_col).alias("neighbor_id"),
-        _cast_double(vec_col).alias("_cvec"),
+    c = _vec_side(
+        ensure_min_partitions(corpus, rows=n_rows), id_col, vec_col, dim, "neighbor_id", "c",
         F.element_at(_nearest_udf(1)(F.col(vec_col)), 1).alias("list_id"),
-    ).withColumn("_cn", l2_norm("_cvec", dim))
+    )
     if corpus_rows is not None and query_rows is not None:
-        # probe lists computed driver-side with exactly _nearest_udf's
-        # numpy body (same float64 matmul/argsort → identical lists,
-        # pytest-pinned): the query-side Python-worker stage and its
-        # 20-row repartition disappear; the probe pairs ride a literal
-        # broadcast DF, the ivf_cosine_topk_indexed shape (guide §2.4)
-        import numpy as np
-
+        # probe lists computed driver-side with _nearest_udf's numpy body
+        # (identical lists, pytest-pinned): the query-side Python-worker
+        # stage and its 20-row repartition disappear; the probe pairs ride
+        # a literal broadcast DF, the ivf_cosine_topk_indexed shape
         q_ids, Xq = _query_arrays(query_rows)
-        M = np.array(C_list, dtype="float64")
-        Xn = Xq / np.maximum(np.linalg.norm(Xq, axis=1, keepdims=True), 1e-12)
-        order = np.argsort(-(Xn @ M.T), axis=1)[:, :n_probe].astype("int32")
-        probes = [
-            (int(qid), int(l)) for qid, row in zip(q_ids, order) for l in row
-        ]
-        spark = corpus.sparkSession
-        probes_df = spark.createDataFrame(probes, f"{query_id_col} long, list_id int")
-        qv = queries.select(
-            F.col(id_col).alias(query_id_col), _cast_double(vec_col).alias("_qvec")
-        ).withColumn("_qn", l2_norm("_qvec", dim))
+        probes_df = _probe_frame(
+            corpus.sparkSession, q_ids, _nearest_lists(Xq, C, n_probe), query_id_col
+        )
+        qv = _vec_side(queries, id_col, vec_col, dim, query_id_col, "q")
         q = F.broadcast(probes_df.join(qv, query_id_col))
     else:
-        q = queries.select(
-            F.col(id_col).alias(query_id_col),
-            _cast_double(vec_col).alias("_qvec"),
+        q = _vec_side(
+            queries, id_col, vec_col, dim, query_id_col, "q",
             F.explode(_nearest_udf(n_probe)(F.col(vec_col))).alias("list_id"),
-        ).withColumn("_qn", l2_norm("_qvec", dim))
+        )
     scored = (
         c.join(q, "list_id")
         .filter(F.col(query_id_col) != F.col("neighbor_id"))
-        .withColumn(
-            "cosine",
-            F.round(dot("_qvec", "_cvec", dim) / (F.col("_qn") * F.col("_cn")), 6),
-        )
+        .withColumn("cosine", _cosine6(dim))
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "cosine", "rank")
-    )
+    return _top_k(scored, k, query_id_col, "neighbor_id", "rank")
 
 
 def cosine_neardup_pairs_tiled(
@@ -765,10 +798,6 @@ def cosine_neardup_pairs_tiled(
     verify needed (guide §2.4, §8: the payload is never moved twice —
     each unordered pair is produced by exactly one tile, diagonal tiles
     emit only ``id_a < id_b``)."""
-    import math
-
-    import numpy as np  # noqa: F401 — used inside the cogroup fn
-
     from .multimodal import _ship_package
 
     spark = df.sparkSession
@@ -894,6 +923,15 @@ def quantize_int8(
     return df.select(F.col(id_col), _quant(F.col(vec_col)).alias("qvec"))
 
 
+def _int8_codes(X):
+    """:func:`quantize_int8`'s arithmetic over a float64 matrix already on
+    the driver (pinned equal to the UDF by pytest)."""
+    import numpy as np
+
+    scale = np.maximum(np.abs(X).max(axis=1, keepdims=True), 1e-30) / 127.0
+    return np.clip(np.rint(X / scale), -127, 127).astype("int8")
+
+
 def quantized_cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -934,21 +972,11 @@ def quantized_cosine_topk(
 
     from .multimodal import _ship_package
 
-    spark = corpus.sparkSession
-    _ship_package(spark)
+    _ship_package(corpus.sparkSession)
     dim = dim or _probe_dim(corpus, vec_col)
-    kq = k * oversample
-
-    if query_rows is not None:
-        q_ids, Xq = _query_arrays(query_rows)
-        scale = np.maximum(np.abs(Xq).max(axis=1, keepdims=True), 1e-30) / 127.0
-        Q = np.clip(np.rint(Xq / scale), -127, 127).astype("int32")
-    else:
-        q_rows = quantize_int8(queries, id_col, vec_col).collect()
-        q_ids = np.array([r[0] for r in q_rows], dtype="int64")
-        Q = np.vstack([np.asarray(r[1], dtype="int32") for r in q_rows])
+    q_ids, Q = _driver_queries(queries, id_col, vec_col, query_rows)
+    Q = _int8_codes(Q).astype("int32")
     Qn = np.maximum(np.linalg.norm(Q.astype("float64"), axis=1), 1e-300)
-    bc = spark.sparkContext.broadcast((q_ids, Q, Qn))
 
     qc = (
         ensure_min_partitions(quantized_corpus, rows=n_rows)
@@ -956,63 +984,15 @@ def quantized_cosine_topk(
         else quantize_int8(ensure_min_partitions(corpus, rows=n_rows), id_col, vec_col)
     )
 
-    def scan(batches):
+    def score(pdf, Qm, Qn_):
         import numpy as np
-        import pandas as pd
 
-        q_ids_b, Qm, Qn_ = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy(dtype="int64")
-            X = np.vstack(pdf["qvec"].to_numpy()).astype("int32")
-            Xn = np.maximum(np.linalg.norm(X.astype("float64"), axis=1), 1e-300)
-            S = (X @ Qm.T) / np.outer(Xn, Qn_)  # (batch, n_queries)
-            S[ids[:, None] == q_ids_b[None, :]] = -2.0  # mask self-pairs
-            top = min(kq, len(ids))
-            sel = np.argpartition(-S, top - 1, axis=0)[:top]  # (top, n_q)
-            qi = np.broadcast_to(np.arange(S.shape[1]), sel.shape)
-            yield pd.DataFrame(
-                {
-                    query_id_col: q_ids_b[qi.ravel()],
-                    "neighbor_id": ids[sel.ravel()],
-                    "qscore": S[sel.ravel(), qi.ravel()],
-                }
-            )
+        X = np.vstack(pdf["qvec"].to_numpy()).astype("int32")
+        Xn = np.maximum(np.linalg.norm(X.astype("float64"), axis=1), 1e-300)
+        return (X @ Qm.T) / np.outer(Xn, Qn_)  # (batch, n_queries)
 
-    cand = qc.mapInPandas(
-        scan, schema=f"{query_id_col} bigint, neighbor_id bigint, qscore double"
-    ).filter(F.col("qscore") > -2.0)
-    # global quantized top-kq per query, then exact rerank of those
-    wq = Window.partitionBy(query_id_col).orderBy(
-        F.col("qscore").desc(), F.col("neighbor_id")
-    )
-    cand = cand.withColumn("_qr", F.row_number().over(wq)).filter(
-        F.col("_qr") <= kq
-    ).select(query_id_col, "neighbor_id")
-
-    qv = queries.select(
-        F.col(id_col).alias(query_id_col), _cast_double(vec_col).alias("_qvec")
-    ).withColumn("_qn", l2_norm("_qvec", dim))
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _cast_double(vec_col).alias("_cvec")
-    ).withColumn("_cn", l2_norm("_cvec", dim))
-    scored = (
-        cand.join(F.broadcast(qv), query_id_col)
-        .join(cv, "neighbor_id")
-        .withColumn(
-            "cosine",
-            F.round(dot("_qvec", "_cvec", dim) / (F.col("_qn") * F.col("_cn")), 6),
-        )
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "cosine", "rank")
-    )
+    cand = _candidates(qc, q_ids, (Q, Qn), score, k * oversample, id_col, query_id_col)
+    return _exact_rerank(cand, queries, corpus, k, id_col, vec_col, query_id_col, dim)
 
 
 # ---------------------------------------------------------------------------
@@ -1040,15 +1020,14 @@ def fit_pq_codebooks(
     ``fit_ivf_centroids``: numpy Lloyd on a deterministic hash-ordered
     sample of at most ``train_cap`` vectors — an ingest-time cost, bounded
     driver memory, ONE Spark job."""
+    return _pq_lloyd(_hash_sample(corpus, id_col, vec_col, seed, train_cap), m, num_codes, iters)
+
+
+def _pq_lloyd(X, m: int, num_codes: int, iters: int):
+    """``(m, num_codes, dim//m)`` L2 k-means codebooks, one per subspace
+    of the rows of ``X``, seeded with each subspace's first rows."""
     import numpy as np
 
-    rows = (
-        corpus.select(id_col, vec_col)
-        .orderBy(F.xxhash64(F.col(id_col) + seed))
-        .limit(train_cap)
-        .collect()
-    )
-    X = np.vstack([np.asarray(r[1], dtype="float64") for r in rows])
     dim = X.shape[1]
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
@@ -1152,20 +1131,15 @@ def pq_adc_topk(
 
     from .multimodal import _ship_package
 
-    spark = corpus.sparkSession
-    _ship_package(spark)
+    _ship_package(corpus.sparkSession)
     dim = dim or _probe_dim(corpus, vec_col)
     books = np.asarray(codebooks, dtype="float64")  # (m, kc, dsub)
     m, _, dsub = books.shape
-    kq = k * oversample
 
-    q_rows = queries.select(id_col, vec_col).collect()
-    q_ids = np.array([r[0] for r in q_rows], dtype="int64")
-    Q = np.vstack([np.asarray(r[1], dtype="float64") for r in q_rows])
+    q_ids, Q = _driver_queries(queries, id_col, vec_col)
     Qn = np.maximum(np.linalg.norm(Q, axis=1), 1e-300)
     # LUT: (n_queries, m, num_codes) — q_sub · centroid
     lut = np.einsum("qms,mcs->qmc", Q.reshape(len(Q), m, dsub), books)
-    bc = spark.sparkContext.broadcast((q_ids, lut, Qn))
 
     enc = (
         ensure_min_partitions(encoded_corpus)
@@ -1173,69 +1147,20 @@ def pq_adc_topk(
         else pq_encode(ensure_min_partitions(corpus), codebooks, id_col, vec_col)
     )
 
-    def scan(batches):
+    def score(pdf, lut_b, qn_b):
         import numpy as np
-        import pandas as pd
 
-        q_ids_b, lut_b, qn_b = bc.value
-        nq, m_, _ = lut_b.shape
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy(dtype="int64")
-            codes = np.vstack(pdf["pq_code"].to_numpy()).astype("int64")  # (b, m)
-            norms = pdf["pq_norm"].to_numpy(dtype="float64")
-            # ADC inner products: sum LUT slices over subspaces → (b, nq)
-            S = np.zeros((len(ids), nq))
-            for j in range(m_):
-                S += lut_b[:, j, codes[:, j]].T
-            S /= np.outer(np.maximum(norms, 1e-300), qn_b)
-            S[ids[:, None] == q_ids_b[None, :]] = -2.0  # mask self-pairs
-            top = min(kq, len(ids))
-            sel = np.argpartition(-S, top - 1, axis=0)[:top]
-            qi = np.broadcast_to(np.arange(nq), sel.shape)
-            yield pd.DataFrame(
-                {
-                    "query_id": q_ids_b[qi.ravel()],
-                    "neighbor_id": ids[sel.ravel()],
-                    "qscore": S[sel.ravel(), qi.ravel()],
-                }
-            )
+        codes = np.vstack(pdf["pq_code"].to_numpy()).astype("int64")  # (b, m)
+        norms = pdf["pq_norm"].to_numpy(dtype="float64")
+        # ADC inner products: sum LUT slices over subspaces → (b, nq)
+        S = np.zeros((len(pdf), lut_b.shape[0]))
+        for j in range(lut_b.shape[1]):
+            S += lut_b[:, j, codes[:, j]].T
+        S /= np.outer(np.maximum(norms, 1e-300), qn_b)
+        return S
 
-    cand = enc.mapInPandas(
-        scan, schema="query_id bigint, neighbor_id bigint, qscore double"
-    ).filter(F.col("qscore") > -2.0)
-    if query_id_col != "query_id":
-        cand = cand.withColumnRenamed("query_id", query_id_col)
-    wq = Window.partitionBy(query_id_col).orderBy(
-        F.col("qscore").desc(), F.col("neighbor_id")
-    )
-    cand = cand.withColumn("_qr", F.row_number().over(wq)).filter(
-        F.col("_qr") <= kq
-    ).select(query_id_col, "neighbor_id")
-
-    qv = queries.select(
-        F.col(id_col).alias(query_id_col), _cast_double(vec_col).alias("_qvec")
-    ).withColumn("_qn", l2_norm("_qvec", dim))
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _cast_double(vec_col).alias("_cvec")
-    ).withColumn("_cn", l2_norm("_cvec", dim))
-    scored = (
-        cand.join(F.broadcast(qv), query_id_col)
-        .join(cv, "neighbor_id")
-        .withColumn(
-            "cosine",
-            F.round(dot("_qvec", "_cvec", dim) / (F.col("_qn") * F.col("_cn")), 6),
-        )
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "cosine", "rank")
-    )
+    cand = _candidates(enc, q_ids, (lut, Qn), score, k * oversample, id_col, query_id_col)
+    return _exact_rerank(cand, queries, corpus, k, id_col, vec_col, query_id_col, dim)
 
 
 # ---------------------------------------------------------------------------
@@ -1267,40 +1192,10 @@ def fit_ivfpq(
         corpus, num_centroids=num_lists, seed=seed, id_col=id_col,
         vec_col=vec_col, train_cap=train_cap, iters=iters,
     )
-    rows = (
-        corpus.select(id_col, vec_col)
-        .orderBy(F.xxhash64(F.col(id_col) + seed))
-        .limit(train_cap)
-        .collect()
-    )
-    X = np.vstack([np.asarray(r[1], dtype="float64") for r in rows])
+    X = _hash_sample(corpus, id_col, vec_col, seed, train_cap)
     Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-300)
     assign = (Xn @ C.T).argmax(axis=1)
-    R = Xn - C[assign]
-    dim = R.shape[1]
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    dsub = dim // m
-    num_codes = min(num_codes, len(R))
-    books = np.empty((m, num_codes, dsub))
-    for j in range(m):
-        S = R[:, j * dsub : (j + 1) * dsub]
-        Cb = S[:num_codes].copy()
-        for _ in range(iters):
-            d2 = (
-                (S * S).sum(1)[:, None]
-                - 2.0 * (S @ Cb.T)
-                + (Cb * Cb).sum(1)[None, :]
-            )
-            a = d2.argmin(axis=1)
-            for c in range(num_codes):
-                members = S[a == c]
-                if len(members):
-                    Cb[c] = members.mean(axis=0)
-                else:
-                    Cb[c] = S[d2.min(axis=1).argmax()]
-        books[j] = Cb
-    return C, books
+    return C, _pq_lloyd(Xn - C[assign], m, num_codes, iters)
 
 
 def ivfpq_encode(
@@ -1389,20 +1284,13 @@ def ivfpq_topk(
 
     from .multimodal import _ship_package
 
-    spark = corpus.sparkSession
-    _ship_package(spark)
+    _ship_package(corpus.sparkSession)
     dim = dim or _probe_dim(corpus, vec_col)
     C = np.asarray(centroids, dtype="float64")
     B = np.asarray(books, dtype="float64")
     m, _, dsub = B.shape
-    kq = k * oversample
 
-    if query_rows is not None:
-        q_ids, Q = _query_arrays(query_rows)
-    else:
-        q_rows = queries.select(id_col, vec_col).collect()
-        q_ids = np.array([r[0] for r in q_rows], dtype="int64")
-        Q = np.vstack([np.asarray(r[1], dtype="float64") for r in q_rows])
+    q_ids, Q = _driver_queries(queries, id_col, vec_col, query_rows)
     Qn = np.maximum(np.linalg.norm(Q, axis=1), 1e-300)
     Qu = Q / Qn[:, None]
     probed = np.argsort(-(Qu @ C.T), axis=1)[:, :n_probe]  # (nq, n_probe)
@@ -1414,7 +1302,6 @@ def ivfpq_topk(
     member = np.zeros((C.shape[0], len(q_ids)), dtype=bool)
     member[probed, np.arange(len(q_ids))[:, None]] = True
     all_lists = [int(l) for l in np.nonzero(member.any(axis=1))[0]]
-    bc = spark.sparkContext.broadcast((q_ids, lut, qdotc, member))
 
     enc = (
         encoded_corpus
@@ -1424,72 +1311,24 @@ def ivfpq_topk(
     # static IN-filter: partition prune on a list-partitioned store
     enc = enc.filter(F.col("list_id").isin(*all_lists))
 
-    def scan(batches):
+    def score(pdf, lut_b, qdotc_b, member_b):
         import numpy as np
-        import pandas as pd
 
-        q_ids_b, lut_b, qdotc_b, member_b = bc.value
-        nq = len(q_ids_b)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy(dtype="int64")
-            lists = pdf["list_id"].to_numpy(dtype="int64")
-            codes = np.vstack(pdf["pq_code"].to_numpy()).astype("int64")
-            norms = pdf["recon_norm"].to_numpy(dtype="float64")
-            S = np.zeros((len(ids), nq))
-            for j in range(lut_b.shape[1]):
-                S += lut_b[:, j, codes[:, j]].T
-            S += qdotc_b[:, lists].T  # + q·c_list term
-            S /= norms[:, None]
-            # mask rows outside each query's probed lists, and self-pairs
-            S[~member_b[lists]] = -2.0
-            S[ids[:, None] == q_ids_b[None, :]] = -2.0
-            top = min(kq, len(ids))
-            sel = np.argpartition(-S, top - 1, axis=0)[:top]
-            qi = np.broadcast_to(np.arange(nq), sel.shape)
-            yield pd.DataFrame(
-                {
-                    "query_id": q_ids_b[qi.ravel()],
-                    "neighbor_id": ids[sel.ravel()],
-                    "qscore": S[sel.ravel(), qi.ravel()],
-                }
-            )
+        lists = pdf["list_id"].to_numpy(dtype="int64")
+        codes = np.vstack(pdf["pq_code"].to_numpy()).astype("int64")
+        norms = pdf["recon_norm"].to_numpy(dtype="float64")
+        S = np.zeros((len(pdf), lut_b.shape[0]))
+        for j in range(lut_b.shape[1]):
+            S += lut_b[:, j, codes[:, j]].T
+        S += qdotc_b[:, lists].T  # + q·c_list term
+        S /= norms[:, None]
+        S[~member_b[lists]] = -2.0  # rows outside the query's probed lists
+        return S
 
-    cand = enc.mapInPandas(
-        scan, schema="query_id bigint, neighbor_id bigint, qscore double"
-    ).filter(F.col("qscore") > -2.0)
-    if query_id_col != "query_id":
-        cand = cand.withColumnRenamed("query_id", query_id_col)
-    wq = Window.partitionBy(query_id_col).orderBy(
-        F.col("qscore").desc(), F.col("neighbor_id")
+    cand = _candidates(
+        enc, q_ids, (lut, qdotc, member), score, k * oversample, id_col, query_id_col
     )
-    cand = cand.withColumn("_qr", F.row_number().over(wq)).filter(
-        F.col("_qr") <= kq
-    ).select(query_id_col, "neighbor_id")
-
-    qv = queries.select(
-        F.col(id_col).alias(query_id_col), _cast_double(vec_col).alias("_qvec")
-    ).withColumn("_qn", l2_norm("_qvec", dim))
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _cast_double(vec_col).alias("_cvec")
-    ).withColumn("_cn", l2_norm("_cvec", dim))
-    scored = (
-        cand.join(F.broadcast(qv), query_id_col)
-        .join(cv, "neighbor_id")
-        .withColumn(
-            "cosine",
-            F.round(dot("_qvec", "_cvec", dim) / (F.col("_qn") * F.col("_cn")), 6),
-        )
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, "neighbor_id", "cosine", "rank")
-    )
+    return _exact_rerank(cand, queries, corpus, k, id_col, vec_col, query_id_col, dim)
 
 
 def random_projection(
@@ -1601,12 +1440,7 @@ def knn_graph(
     ).unionByName(
         pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"), "cosine")
     )
-    w = Window.partitionBy("src").orderBy(F.col("cosine").desc(), F.col("dst").asc())
-    return (
-        sym.withColumn("knn_rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("knn_rank") <= k)
-        .select("src", "dst", "cosine", "knn_rank")
-    )
+    return _top_k(sym, k, "src", "dst", "knn_rank")
 
 
 def retrieval_metrics(
@@ -1645,10 +1479,7 @@ def retrieval_metrics(
     )
     # ideal DCG for m = min(k, n_relevant) items, as a literal lookup
     # (k is tiny); log2 doubles are identical cross-engine
-    idcg = F.lit(0.0)
     acc = 0.0
-    import math
-
     idcg_vals = []
     for i in range(1, k + 1):
         acc += 1.0 / math.log2(i + 1)
@@ -1813,14 +1644,7 @@ def hard_negatives(
         .join(lb, "negative_id")
         .filter(F.col("_la") != F.col("_lb"))
     )
-    w = Window.partitionBy("anchor_id").orderBy(
-        F.col("cosine").desc(), F.col("negative_id").asc()
-    )
-    return (
-        mism.withColumn("neg_rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("neg_rank") <= k)
-        .select("anchor_id", "negative_id", "cosine", "neg_rank")
-    )
+    return _top_k(mism, k, "anchor_id", "negative_id", "neg_rank")
 
 
 def embedding_contamination(
@@ -1848,12 +1672,8 @@ def embedding_contamination(
     Rounding happens AFTER the max (round is monotone, so
     round(max) == max(round) — engine-independent)."""
     dim = dim or _probe_dim(corpus, vec_col)
-    b = benchmark.select(
-        F.col(id_col).alias("_bid"), _cast_double(vec_col).alias("_bvec")
-    ).withColumn("_bn", l2_norm("_bvec", dim))
-    c = ensure_min_partitions(corpus).select(
-        F.col(id_col).alias("id"), _cast_double(vec_col).alias("_cvec")
-    ).withColumn("_cn", l2_norm("_cvec", dim))
+    b = _vec_side(benchmark, id_col, vec_col, dim, "_bid", "b")
+    c = _vec_side(ensure_min_partitions(corpus), id_col, vec_col, dim, "id", "c")
     # LEFT join: a corpus vector with no benchmark counterpart (empty
     # benchmark, or its only candidate is itself) must still come back —
     # with NULL max_cos and contaminated=false — or downstream

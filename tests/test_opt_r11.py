@@ -245,8 +245,16 @@ def test_quantized_driver_query_rows_identical(spark, sf_dir):
     from pipes_spark.operators.similarity import quantized_cosine_topk
     from pipes_spark.warehouse import quantized_embeddings_table
 
+    from pipes_spark.operators.similarity import _int8_codes, quantize_int8
+
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 20)
+    # the driver-side numpy quantization of the query rows must equal the
+    # quantize_int8 UDF's output on the same rows: the UDF is the reference
+    ids, X = _emb_rows(sf_dir, lambda i: i < 20)
+    udf_codes = {r[0]: list(r[1]) for r in quantize_int8(q).collect()}
+    for i, codes in zip(ids, _int8_codes(X)):
+        assert [int(c) for c in codes] == udf_codes[int(i)]
     qtab = quantized_embeddings_table(spark, sf_dir)
     collected = quantized_cosine_topk(emb, q, k=5, quantized_corpus=qtab)
     driver = quantized_cosine_topk(
