@@ -119,17 +119,34 @@ def read_parquet(spark: SparkSession, path: str, columns: Optional[Sequence[str]
     return df
 
 
+def _parquet_files(path: str) -> list[str]:
+    """The parquet files a scan of ``path`` reads: the file itself, or every
+    ``*.parquet`` under the directory, hive partition subdirectories
+    included, sorted. Names starting with ``_`` or ``.`` (``_SUCCESS``,
+    ``_temporary``, ``.crc`` checksums) are skipped, as Spark's file index
+    skips them."""
+    import os
+
+    if not os.path.isdir(path):
+        return [path]
+    hidden = ("_", ".")
+    out = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(hidden)]
+        out += [
+            os.path.join(root, f)
+            for f in files
+            if f.endswith(".parquet") and not f.startswith(hidden)
+        ]
+    return sorted(out)
+
+
 def _path_bytes(path: str) -> int:
     """Total on-disk bytes of a parquet file or directory of part files
     (driver-side ``os.path.getsize``, no Spark call)."""
     import os
-    from glob import glob
 
-    if os.path.isdir(path):
-        return sum(
-            os.path.getsize(f) for f in glob(os.path.join(path, "*.parquet"))
-        )
-    return os.path.getsize(path)
+    return sum(os.path.getsize(f) for f in _parquet_files(path))
 
 
 def parquet_row_count(path: str) -> int:
@@ -141,17 +158,9 @@ def parquet_row_count(path: str) -> int:
     way for a caller to supply it without an eager ``df.count()`` at
     construction time (CLAUDE.md "no eager actions" rule). Accepts a file
     or a directory of part files."""
-    import os
-    from glob import glob
-
     import pyarrow.parquet as pq
 
-    files = (
-        sorted(glob(os.path.join(path, "*.parquet")))
-        if os.path.isdir(path)
-        else [path]
-    )
-    return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
+    return sum(pq.ParquetFile(f).metadata.num_rows for f in _parquet_files(path))
 
 
 def parquet_list_width(path: str, column: str) -> Optional[int]:
@@ -160,17 +169,9 @@ def parquet_list_width(path: str, column: str) -> Optional[int]:
     job. Embeddings tables are fixed-width by construction, so one value
     determines the dimension. Returns None if the file has no non-null
     value (caller falls back to its in-Spark probe)."""
-    import os
-    from glob import glob
-
     import pyarrow.parquet as pq
 
-    files = (
-        sorted(glob(os.path.join(path, "*.parquet")))
-        if os.path.isdir(path)
-        else [path]
-    )
-    for f in files:
+    for f in _parquet_files(path):
         for batch in pq.ParquetFile(f).iter_batches(batch_size=64, columns=[column]):
             col = batch.column(0)
             for v in col:
@@ -235,12 +236,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def load_tables(spark: SparkSession, sf_dir: str, names: Optional[Sequence[str]] = None) -> dict[str, DataFrame]:
     return {n: load_table(spark, sf_dir, n) for n in (names or TPCH_TABLES)}
-
-
-def register_views(spark: SparkSession, sf_dir: str, names: Optional[Sequence[str]] = None) -> None:
-    """Register the synthetic tables as temp views for the SQL API."""
-    for name, df in load_tables(spark, sf_dir, names).items():
-        df.createOrReplaceTempView(name)
 
 
 # user-defined generator sources (Spark 4 Python DataSource API — the

@@ -78,6 +78,34 @@ def test_partitioned_parquet_write(spark, sf_dir, tmp_path):
     ).count()
 
 
+def test_partitioned_parquet_dir_reports_its_size(spark, sf_dir, tmp_path):
+    """A hive-partitioned directory holds its part files one level down:
+    the footer helpers and read_parquet's byte tag must count them (a
+    top-level-only listing reads 0 bytes and 0 rows, and the partition
+    helpers then shuffle an input that already has many splits)."""
+    from pipes_spark.sources import (
+        _path_bytes,
+        parquet_list_width,
+        parquet_row_count,
+        read_parquet,
+    )
+
+    src = load_table(spark, sf_dir, "embeddings")
+    out = str(tmp_path / "emb_by_label")
+    src.write.partitionBy("label").parquet(out)
+    parts = [
+        os.path.join(root, f)
+        for root, _, files in os.walk(out)
+        for f in files
+        if f.endswith(".parquet")
+    ]
+    assert parts and all(os.path.dirname(f) != out for f in parts)
+    assert _path_bytes(out) == sum(os.path.getsize(f) for f in parts) > 0
+    assert read_parquet(spark, out)._pipes_src_bytes == _path_bytes(out)
+    assert parquet_row_count(out) == src.count()
+    assert parquet_list_width(out, "embedding") == len(src.first()["embedding"])
+
+
 def test_collect_and_count_sinks(spark):
     rows = run_pipeline(spark, lambda s: counter(s, 1, 5), collect_rows)
     assert sorted(r.n for r in rows) == [1, 2, 3, 4, 5]
