@@ -156,11 +156,6 @@ def _dsum(col) -> F.Column:
     return F.sum(col.cast("decimal(28,6)")).cast("double")
 
 
-# SQL-side twin of _dsum
-def _dsum_sql(expr: str) -> str:
-    return f"CAST(sum(CAST({expr} AS DECIMAL(28,6))) AS DOUBLE)"
-
-
 # ---------------------------------------------------------------------------
 # aggregation: TPC-H-style headline queries
 # ---------------------------------------------------------------------------

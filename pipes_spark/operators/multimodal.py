@@ -5883,12 +5883,6 @@ def _jpeg_emit_dc_refine(units, al, bw):
         bw.write((int(blk[0]) >> al) & 1, 1)
 
 
-def _pt_ac(v, al):
-    """AC point transform: divide by 2^Al truncating toward ZERO
-    (T.81 G.1.2.2 — explicitly NOT an arithmetic shift)."""
-    return -((-v) >> al) if v < 0 else v >> al
-
-
 def _jpeg_emit_ac_first(units, ss, se, al, bw, ac_codes):
     """AC-first scan (Ah=0): sequential run/size coding within the band
     plus cross-block EOB runs (EOBn symbols r<<4 with r appended bits)."""
@@ -7181,14 +7175,6 @@ _FLAC_RATES = {
     88200: 1, 176400: 2, 192000: 3, 8000: 4, 16000: 5, 22050: 6,
     24000: 7, 32000: 8, 44100: 9, 48000: 10, 96000: 11,
 }
-
-
-def _flac_rice_cost(res, param: int) -> int:
-    total = 0
-    for r in res:
-        u = (r << 1) if r >= 0 else ((-r << 1) - 1)
-        total += (u >> param) + 1 + param
-    return total
 
 
 def _flac_best_rice(res):

@@ -174,13 +174,6 @@ def dedup_keep_min(df: DataFrame, keys: Sequence[str], keep_col: str) -> DataFra
     return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
 
 
-def union_all(*dfs: DataFrame) -> DataFrame:
-    """Fan-in: UNION ALL by name (ref: connectors.go:8-41 keeps duplicates)."""
-    from functools import reduce
-
-    return reduce(lambda a, b: a.unionByName(b), dfs)
-
-
 def ordered_within_partitions(
     df: DataFrame, partition_cols: Sequence[str], order_cols: Sequence[str]
 ) -> DataFrame:

@@ -9,7 +9,7 @@ difference between 200 and 200k output files is an operational incident.
 
 from __future__ import annotations
 
-from typing import Any, Optional, Sequence
+from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame
 
@@ -83,20 +83,6 @@ def show(n: int = 20):
 
     def sink(df: DataFrame):
         df.show(n, truncate=False)
-
-    return sink
-
-
-def foreach_batch_stream(handler, output_mode: str = "append", **trigger: Any):
-    """Streaming sink via foreachBatch (exactly-once per epoch handler)."""
-
-    def sink(df: DataFrame):
-        return (
-            df.writeStream.foreachBatch(handler)
-            .outputMode(output_mode)
-            .trigger(**(trigger or {"availableNow": True}))
-            .start()
-        )
 
     return sink
 
