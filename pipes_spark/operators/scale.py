@@ -19,6 +19,11 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+#: Rows per task for the volume-sized partition targets: the measured knee
+#: between per-task Python-worker/Arrow hop overhead and kernel
+#: parallelism (see :func:`presorted_min_partitions`).
+ROWS_PER_TASK = 320
+
 
 def _parse_byte_conf(s: str) -> int:
     """Spark byte-string conf value → bytes (``134217728``, ``128m``,
@@ -61,6 +66,14 @@ def _est_scan_partitions(spark, src_bytes: int) -> int:
     return max(1, -(-int(src_bytes) // mpb))
 
 
+def _rows_target(spark, rows: int) -> int:
+    """Partition target sized from data volume: ``ceil(rows /
+    ROWS_PER_TASK)``, capped at the cluster's default parallelism."""
+    import math
+
+    return min(spark.sparkContext.defaultParallelism, max(1, math.ceil(rows / ROWS_PER_TASK)))
+
+
 def ensure_min_partitions(
     df: DataFrame,
     n: Optional[int] = None,
@@ -84,17 +97,13 @@ def ensure_min_partitions(
     for SCAN-ROOTED ``df`` only) replaces the ``df.rdd`` partition-count
     probe with :func:`_est_scan_partitions` — construction stays free of
     the throwaway physical-planning pass the probe runs."""
-    import math
-    import os
-
     spark = df.sparkSession
     if n is None:
-        cores = spark.sparkContext.defaultParallelism
-        if rows is not None:
-            rpt = int(os.environ.get("PIPES_SPARK_ROWS_PER_TASK", "320"))
-            n = min(cores, max(1, math.ceil(rows / rpt)))
-        else:
-            n = cores
+        n = (
+            _rows_target(spark, rows)
+            if rows is not None
+            else spark.sparkContext.defaultParallelism
+        )
     if src_bytes is None:
         src_bytes = src_bytes_hint(df)
     cur = (
@@ -140,8 +149,7 @@ def presorted_min_partitions(
     the target is ``ceil(rows / rows_per_task)`` capped at the cluster's
     default parallelism and floored at the plan's existing partition
     count — derived from data volume, never a host constant. The
-    ``rows_per_task`` default (env ``PIPES_SPARK_ROWS_PER_TASK``, 320)
-    sits at the measured knee between per-task Python-worker/Arrow hop
+    ``ROWS_PER_TASK`` constant (320) sits at the measured knee between per-task Python-worker/Arrow hop
     overhead (which dominates sub-200-row tasks: png ladder 32→16
     partitions = 1.10→0.70 s at sf0.1) and CPU-bound kernel parallelism
     (flac degrades below ~300 rows/task of headroom: 16 partitions
@@ -151,14 +159,9 @@ def presorted_min_partitions(
     estimate (see :func:`ensure_min_partitions`); the floor's purpose —
     never shrink a big scan's parallelism — is preserved because the
     estimate IS the scan's split count."""
-    import math
-    import os
-
     spark = df.sparkSession
     if n is None:
-        cores = spark.sparkContext.defaultParallelism
         if rows is not None:
-            rpt = int(os.environ.get("PIPES_SPARK_ROWS_PER_TASK", "320"))
             if src_bytes is None:
                 src_bytes = src_bytes_hint(df)
             floor_parts = (
@@ -166,12 +169,9 @@ def presorted_min_partitions(
                 if src_bytes is not None
                 else df.rdd.getNumPartitions()
             )
-            n = max(
-                floor_parts,
-                min(cores, max(1, math.ceil(rows / rpt))),
-            )
+            n = max(floor_parts, _rows_target(spark, rows))
         else:
-            n = cores
+            n = spark.sparkContext.defaultParallelism
     return df.repartitionByRange(n, *[F.col(k) for k in keys]).sortWithinPartitions(
         *keys
     )

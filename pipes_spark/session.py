@@ -229,13 +229,10 @@ def get_spark(
         # RocksDB state store: streaming state lives off-heap with
         # incremental checkpoints — the backend that survives 100 TB-scale
         # key cardinality (the default HDFS-backed store holds all state in
-        # executor heap). Override with PIPES_SPARK_STATE_STORE.
+        # executor heap).
         .config(
             "spark.sql.streaming.stateStore.providerClass",
-            os.environ.get(
-                "PIPES_SPARK_STATE_STORE",
-                "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-            ),
+            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
         )
         # RocksDB changelog checkpointing (r12, guide §1/§5): each commit
         # uploads the batch's changelog instead of a full state snapshot
@@ -243,24 +240,20 @@ def get_spark(
         # documented low-commit-latency mode for RocksDB state stores at
         # any scale. Measured on the benched pair at sf0.1: summed
         # per-partition commitTimeMs 13-15.6 s → 3.5-7.5 s, wall ~-0.3 s
-        # per query. Override with PIPES_SPARK_ROCKSDB_CHANGELOG=false.
+        # per query.
         .config(
-            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-            os.environ.get("PIPES_SPARK_ROCKSDB_CHANGELOG", "true"),
+            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true"
         )
-        .config("spark.driver.memory", os.environ.get("PIPES_SPARK_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", "8g")
         # DataFrame call-site capture (Python-side error-context
         # enrichment, default on) costs TWO extra py4j round trips plus a
         # driver-side traceback walk on EVERY DataFrame API call — a
         # measured 0.03-0.13 s of query-construction latency per declared
         # query, pure driver overhead at any deployment size. Exceptions
         # still carry the full JVM context; only the Python call-site
-        # line in error messages is lost. Re-enable for debugging via
-        # PIPES_SPARK_DF_DEBUGGING=true.
-        .config(
-            "spark.python.sql.dataFrameDebugging.enabled",
-            os.environ.get("PIPES_SPARK_DF_DEBUGGING", "false"),
-        )
+        # line in error messages is lost. Re-enable for debugging with
+        # ``extra_conf``.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -42,3 +42,19 @@ def test_session_jvm_and_workers_carry_arena_cap(spark):
     )
     assert again is spark
     assert dict(os.environ) == before
+
+
+def test_session_fixed_confs(spark):
+    """The state store, its changelog checkpointing, the driver memory and
+    the DataFrame call-site capture are fixed values of the factory (a
+    caller changes them through ``extra_conf``)."""
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.sql.streaming.stateStore.providerClass") == (
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    )
+    assert (
+        conf.get("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
+        == "true"
+    )
+    assert conf.get("spark.driver.memory") == "8g"
+    assert conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
