@@ -1454,7 +1454,11 @@ def _jpeg_dht(tables, ids=(0,)) -> bytes:
 def _jpeg_sof(marker: int, h: int, w: int, sampling=None) -> bytes:
     """Frame header (SOFn, or DHP, which shares its syntax) for 8-bit
     samples: one component on table 0, or, given the luma's (H, V)
-    ``sampling``, YCbCr with both chroma components 1×1 on table 1."""
+    ``sampling``, YCbCr with both chroma components 1×1 on table 1. Every
+    encoder's frame passes here, so this is where the image size is
+    checked against the 16-bit, nonzero dimension fields."""
+    if not (0 < h <= 65535 and 0 < w <= 65535):
+        raise ValueError("image dimensions out of JPEG range")
     if sampling is None:
         comps = [1, 0x11, 0]
     else:
@@ -1598,8 +1602,6 @@ def jpeg_encode_gray(
     if px.ndim != 2:
         raise ValueError("jpeg_encode_gray expects a 2-D array")
     h, w = px.shape
-    if not (0 < h <= 65535 and 0 < w <= 65535):
-        raise ValueError("image dimensions out of JPEG range")
     q = _jpeg_qtable(quality_qtable)
     # plain ints: per-coefficient numpy scalar indexing was a measured
     # encoder hot spot
@@ -2165,13 +2167,13 @@ def _jpeg_diff_frame(marker: int, diff, ss: int, al: int) -> bytes:
     and the hierarchical mode's SOF7 differential frame (``ss`` = 0)."""
     import numpy as np
 
-    h, w = diff.shape
+    sof = _jpeg_sof(marker, *diff.shape)
     diff = diff & 0xFFFF
     diff = np.where(diff >= 32768, diff - 65536, diff)  # signed mod 2^16
     bits_spec, huffval, entropy = _jpeg_code_diff_stream(diff.reshape(-1))
     return (
         _jpeg_dht([(0x00, bits_spec, huffval)])
-        + _jpeg_sof(marker, h, w)
+        + sof
         + _jpeg_sos([(1, 0x00)], ss, 0, 0, al)
         + entropy
     )
@@ -5288,7 +5290,13 @@ def _exif_walk_ifd(b: bytes, e: str, ifd_at: int, label: str):
     pointers itself (the caller chases ExifIFDPointer)."""
     import struct
 
+    def need(at, size):
+        if at + size > len(b):
+            raise ValueError(f"{label}: truncated EXIF IFD at offset {ifd_at}")
+
+    need(ifd_at, 2)
     (n,) = struct.unpack(e + "H", b[ifd_at : ifd_at + 2])
+    need(ifd_at, 2 + n * 12)
     rows = []
     for i in range(n):
         at = ifd_at + 2 + i * 12
@@ -5347,6 +5355,8 @@ def exif_extract(content: bytes, label: str = "asset"):
             i = seg_end
     if b[:2] not in (b"II", b"MM"):
         raise ValueError(f"{label}: no TIFF header in EXIF payload")
+    if len(b) < 8:
+        raise ValueError(f"{label}: truncated TIFF header in EXIF payload")
     e = "<" if b[:2] == b"II" else ">"
     magic, ifd0_at = struct.unpack(e + "HI", b[2:8])
     if magic != 42:
@@ -5355,6 +5365,8 @@ def exif_extract(content: bytes, label: str = "asset"):
     exif_at = None
     for tag, typ, val in _exif_walk_ifd(b, e, ifd0_at, label):
         if tag == 34665:
+            if typ not in (3, 4) or not val.isdigit():
+                raise ValueError(f"{label}: bad ExifIFDPointer {val!r}")
             exif_at = int(val)
             continue
         rows.append(
@@ -6815,8 +6827,6 @@ def jpeg_encode_arith(
     if not color and px.ndim != 2:
         raise ValueError("expects 2-D grayscale or (h, w, 3) RGB")
     h, w = px.shape[:2]
-    if not (0 < h <= 65535 and 0 < w <= 65535):
-        raise ValueError("image dimensions out of JPEG range")
     ql = _jpeg_qtable(quality_qtable)
     out = bytearray(b"\xff\xd8" + _JFIF_APP0)
     if color:

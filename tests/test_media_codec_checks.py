@@ -1,9 +1,11 @@
 """Input checks the JPEG, EXIF and GIF readers and writers share.
 
-Every DCT encoder validates its quantization tables the same way, the
+Every DCT encoder validates its quantization tables the same way, every
+JPEG encoder refuses an empty image in the one frame-header writer, the
 EXIF extractor walks markers like the decoder does (fill bytes
-included), and animated-GIF frames go through the same image checks as
-the first-image decoder. No Spark session is started.
+included) and labels every malformed payload, and animated-GIF frames
+go through the same image checks as the first-image decoder. No Spark
+session is started.
 """
 
 from __future__ import annotations
@@ -33,6 +35,45 @@ def test_dct_encoders_refuse_a_zero_quantizer(encode):
     px = np.full((16, 16, 3), 90, np.uint8)
     with pytest.raises(ValueError, match="must be 1..255"):
         encode(px)
+
+
+@pytest.mark.parametrize(
+    "encode",
+    [
+        lambda px: mm.jpeg_encode_gray(px[..., 0]),
+        lambda px: mm.jpeg_encode_color(px),
+        lambda px: mm.jpeg_encode_progressive(px[..., 0]),
+        lambda px: mm.jpeg_encode_progressive_color(px),
+        lambda px: mm.jpeg_encode_arith(px),
+        lambda px: mm.jpeg_encode_lossless(px[..., 0]),
+        lambda px: mm.jpeg_encode_hierarchical(px[..., 0]),
+    ],
+    ids=[
+        "gray", "color", "progressive", "progressive_color", "arith",
+        "lossless", "hierarchical",
+    ],
+)
+@pytest.mark.parametrize("shape", [(0, 5, 3), (5, 0, 3)])
+def test_jpeg_encoders_refuse_a_zero_dimension(encode, shape):
+    """A frame header's dimensions are 16-bit and nonzero: every encoder
+    refuses an empty image the same way instead of writing a stream."""
+    with pytest.raises(ValueError, match="image dimensions out of JPEG range"):
+        encode(np.zeros(shape, np.uint8))
+
+
+def test_exif_extract_labels_every_single_byte_corruption():
+    """Flipping bits of any one byte of an EXIF JPEG either still parses
+    or raises the extractor's labelled ValueError — never a bare
+    struct.error from reading past the payload."""
+    asset = mm._exif_jpeg_asset(5)
+    for i in range(len(asset)):
+        for mask in (0x01, 0x80, 0xFF):
+            bad = bytearray(asset)
+            bad[i] ^= mask
+            try:
+                mm.exif_extract(bytes(bad), label="asset 5")
+            except ValueError as err:
+                assert str(err).startswith("asset 5: "), (i, mask, err)
 
 
 def test_exif_extract_skips_fill_bytes_before_app1():
