@@ -276,7 +276,7 @@ def _lsh_bucket_ids(X, M):
     t, p, d = M.shape
     signs = (X @ M.reshape(t * p, d).T) >= 0.0  # (n, tables·planes)
     weights = 1 << np.arange(p, dtype="int64")
-    return (signs.reshape(len(X), t, p) * weights).sum(axis=2).astype("int64")
+    return (signs.reshape(len(X), t, p) * weights).sum(axis=2)
 
 
 def _nearest_lists(X, C, n_out: int):

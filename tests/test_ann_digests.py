@@ -13,6 +13,7 @@ temporary directory, never into the shared warehouse.
 from __future__ import annotations
 
 import hashlib
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
 from pyspark.sql import functions as F
@@ -47,13 +48,27 @@ def ann(spark, sf_dir, tmp_path_factory):
         df.write.partitionBy(*part).parquet(path)
         return spark.read.parquet(path)
 
-    C = sim.fit_ivf_centroids(emb, 16, 42)
+    C = sim.fit_ivf_centroids(emb, 16, 42, corpus_rows=(ids, X))
     codebook = spark.createDataFrame(
         [(i, [float(x) for x in row]) for i, row in enumerate(C)],
         "list_id int, centroid array<double>",
     )
-    books = sim.fit_pq_codebooks(emb, m=8, num_codes=64, iters=5)
-    Cq, bq = sim.fit_ivfpq(emb, num_lists=8, m=8, num_codes=64, iters=5)
+    # the trainings and index writes are independent small jobs: overlap
+    # their per-job latency
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        books = pool.submit(sim.fit_pq_codebooks, emb, m=8, num_codes=64, iters=5)
+        ivfpq = pool.submit(
+            sim.fit_ivfpq, emb, num_lists=8, m=8, num_codes=64, iters=5
+        )
+        ivf_corpus = pool.submit(
+            saved, sim.assign_ivf_lists(emb, C), "ivf_corpus", "list_id"
+        )
+        q8 = pool.submit(saved, sim.quantize_int8(emb), "q8")
+        Cq, bq = ivfpq.result()
+        ivfpq_codes = pool.submit(
+            saved, sim.ivfpq_encode(emb, Cq, bq), "ivfpq_codes", "list_id"
+        )
+        books = books.result()
     return {
         "sim": sim,
         "dim": {"dim": dim},
@@ -66,14 +81,12 @@ def ann(spark, sf_dir, tmp_path_factory):
         "rows_q100": (ids[ids % 100 == 0], X[ids % 100 == 0]),
         "C": C,
         "codebook": codebook,
-        "ivf_corpus": saved(sim.assign_ivf_lists(emb, C), "ivf_corpus", "list_id"),
-        "q8": saved(sim.quantize_int8(emb), "q8"),
+        "ivf_corpus": ivf_corpus.result(),
+        "q8": q8.result(),
         "books": books,
         "pq_codes": sim.pq_encode(emb, books),
         "ivfpq": (Cq, bq),
-        "ivfpq_codes": saved(
-            sim.ivfpq_encode(emb, Cq, bq), "ivfpq_codes", "list_id"
-        ),
+        "ivfpq_codes": ivfpq_codes.result(),
     }
 
 
@@ -196,8 +209,6 @@ def digests(spark, ann):
     """Every case's digest. The cases run four at a time: each is a few
     small Spark jobs whose wall time is mostly per-job latency, which
     concurrent jobs overlap."""
-    from concurrent.futures import ThreadPoolExecutor
-
     from pipes_spark.operators.multimodal import _ship_package
 
     _ship_package(spark)  # once, before threads race to write the zip
