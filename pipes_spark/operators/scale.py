@@ -71,7 +71,8 @@ def _rows_target(spark, rows: int) -> int:
     ROWS_PER_TASK)``, capped at the cluster's default parallelism."""
     import math
 
-    return min(spark.sparkContext.defaultParallelism, max(1, math.ceil(rows / ROWS_PER_TASK)))
+    cores = spark.sparkContext.defaultParallelism
+    return min(cores, max(1, math.ceil(rows / ROWS_PER_TASK)))
 
 
 def ensure_min_partitions(
@@ -146,14 +147,14 @@ def presorted_min_partitions(
 
     Partition count (guide §2.2 — fewer, larger partitions): when the
     caller supplies ``rows`` (driver-side parquet-footer count, no job),
-    the target is ``ceil(rows / rows_per_task)`` capped at the cluster's
+    the target is ``ceil(rows / ROWS_PER_TASK)`` capped at the cluster's
     default parallelism and floored at the plan's existing partition
-    count — derived from data volume, never a host constant. The
-    ``ROWS_PER_TASK`` constant (320) sits at the measured knee between per-task Python-worker/Arrow hop
-    overhead (which dominates sub-200-row tasks: png ladder 32→16
-    partitions = 1.10→0.70 s at sf0.1) and CPU-bound kernel parallelism
-    (flac degrades below ~300 rows/task of headroom: 16 partitions
-    1.69 s, 8 partitions 2.62 s). Without ``rows`` the old
+    count — derived from data volume, never a host constant.
+    ``ROWS_PER_TASK`` (320) sits at the measured knee between per-task
+    Python-worker/Arrow hop overhead (which dominates sub-200-row tasks:
+    png ladder 32→16 partitions = 1.10→0.70 s at sf0.1) and CPU-bound
+    kernel parallelism (flac degrades below ~300 rows/task of headroom:
+    16 partitions 1.69 s, 8 partitions 2.62 s). Without ``rows`` the old
     cores-covering default applies. ``src_bytes`` replaces the
     partition-count floor's ``df.rdd`` probe with the driver-side
     estimate (see :func:`ensure_min_partitions`); the floor's purpose —
